@@ -46,15 +46,23 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
+    from pyspark.sql import SparkSession
+
     from .pipeline import assemble, calendar, extract, sinks
-    from .session import get_spark
 
-    spark = get_spark("etl-upc-syllabus")
-    if not args.verbose:
-        spark.sparkContext.setLogLevel("ERROR")
+    # a session the process already has is used as it is: rebuilding it
+    # through get_spark would rewrite its app name and shuffle partitions
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        from .session import get_spark
 
-    raw = extract.extract_documents(extract.read_syllabus_pdfs(spark, args.input_dir))
-    good, bad = assemble.split_quarantine(assemble.parse_documents(raw, nfkc=args.nfkc))
+        spark = get_spark("etl-upc-syllabus")
+        if not args.verbose:
+            spark.sparkContext.setLogLevel("ERROR")
+
+    parsed = assemble.parse_pdfs(
+        extract.read_syllabus_pdfs(spark, args.input_dir), nfkc=args.nfkc
+    )
 
     config_path = args.config
     if config_path is None:
@@ -64,14 +72,16 @@ def main(argv: list[str] | None = None) -> int:
                 break
     if config_path:
         with open(config_path, encoding="utf-8") as fh:
-            good = assemble.enrich_dates(good, assemble.load_periods(spark, json.load(fh)))
+            parsed = assemble.enrich_dates(parsed, assemble.load_periods(spark, json.load(fh)))
 
-    # one action feeds every sink from the same parsed corpus
-    good = good.persist()
+    # the input is decoded once: the enriched frame, rejects included,
+    # is persisted and both sides of the quarantine split are filters
+    # over it, so every artifact below reads the cache, not the disk
+    parsed = parsed.persist()
     try:
+        good, bad = assemble.split_quarantine(parsed)
         os.makedirs(args.output_dir, exist_ok=True)
-        written = sinks.write_per_record_json(good, args.output_dir)
-        sinks.write_all_courses_json(good, args.output_dir)
+        written, _ = sinks.write_course_json(good, args.output_dir)
         # gate off: periods here come from parse_filename ('YYYY-T',
         # inference-proof and sentinel-free by construction), so the
         # validation pass would only re-scan the persisted frame
@@ -92,7 +102,7 @@ def main(argv: list[str] | None = None) -> int:
             json.dump(rejects, fh, ensure_ascii=False, indent=1)
         n_bad = len(rejects)
     finally:
-        good.unpersist()
+        parsed.unpersist()
 
     print(f"Processed {len(written)} courses successfully")
     if n_bad:

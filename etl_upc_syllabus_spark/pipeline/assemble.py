@@ -2,12 +2,20 @@
 courses -> quarantine split -> period-date enrichment -> calendar
 aggregate (SURVEY.md 3.1's lifecycle, Spark-first).
 
-Execution shape at scale: the parse stage is a *narrow* Arrow
-``mapInPandas`` over one-row-per-document partitions -- documents
-parallelize, pages don't (the reference's 4-thread pool becomes
-partition parallelism, X1). The only shuffles are the final calendar
-groupBy(week) and any repartition the caller requests; the periods
-join is an explicit broadcast (J1).
+Execution shape at scale: decode and parse are ONE *narrow* Arrow
+``mapInPandas`` over one-row-per-document partitions (``parse_pdfs``:
+the extract and parse batch functions composed in the same Python
+worker) -- documents parallelize, pages don't (the reference's
+4-thread pool becomes partition parallelism, X1). The split stages
+(``extract.extract_documents``, ``parse_documents``) run the same
+batch functions as two passes, for callers that start from raw
+documents. The periods join is an explicit broadcast (J1) and is
+applied to the whole parsed frame, error column kept, so a caller
+can persist that one frame and take both sides of
+``split_quarantine`` as filters over it: every artifact, rejects
+included, then comes from one decode of the input. The only shuffles
+are the final calendar groupBy(week) and any repartition the caller
+requests.
 """
 
 from __future__ import annotations
@@ -18,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import extract
 from .parse import parse_document
 from .schema import PARSED_COURSE_SCHEMA, PERIODS_SCHEMA
 
@@ -25,7 +34,7 @@ from .schema import PARSED_COURSE_SCHEMA, PERIODS_SCHEMA
 def _normalize_batch(pdf: pd.DataFrame, form: str) -> pd.DataFrame:
     """Unicode-normalize every text surface of one raw-doc pandas batch
     (pages + both tables), shared by ``normalize_raw_docs`` (the
-    composable pre-pass) and ``parse_documents(nfkc=True)`` (the fused
+    composable pre-pass) and ``parse_batches(nfkc=True)`` (the fused
     one-Arrow-pass path) so knob == pre-pass by construction."""
     import unicodedata
 
@@ -49,6 +58,27 @@ def _normalize_batch(pdf: pd.DataFrame, form: str) -> pd.DataFrame:
     return pdf
 
 
+def parse_batches(batches: Iterator[pd.DataFrame], nfkc: bool = False) -> Iterator[pd.DataFrame]:
+    """The parse stage's Arrow batch function: RAW_DOC_SCHEMA batches ->
+    PARSED_COURSE_SCHEMA batches. Shared by :func:`parse_documents` and
+    the fused :func:`parse_pdfs`."""
+    for pdf in batches:
+        if nfkc:
+            pdf = _normalize_batch(pdf, "NFKC")
+        records = [
+            parse_document(
+                row.filename,
+                list(row.pages) if row.pages is not None else [],
+                [list(r) for r in row.units_table] if row.units_table is not None else [],
+                [list(r) for r in row.assessments_table]
+                if row.assessments_table is not None
+                else [],
+            )
+            for row in pdf.itertuples()
+        ]
+        yield pd.DataFrame.from_records(records)
+
+
 def parse_documents(raw_docs: DataFrame, *, nfkc: bool = False) -> DataFrame:
     """Arrow parse stage: (filename, pages, units_table, assessments_table)
     -> PARSED_COURSE_SCHEMA rows (error column set on failures).
@@ -64,25 +94,22 @@ def parse_documents(raw_docs: DataFrame, *, nfkc: bool = False) -> DataFrame:
     the frozen ``syllabus_calendar`` registry plan flows through the
     default and is untouched.
     """
+    return raw_docs.mapInPandas(lambda b: parse_batches(b, nfkc), schema=PARSED_COURSE_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if nfkc:
-                pdf = _normalize_batch(pdf, "NFKC")
-            records = [
-                parse_document(
-                    row.filename,
-                    list(row.pages) if row.pages is not None else [],
-                    [list(r) for r in row.units_table] if row.units_table is not None else [],
-                    [list(r) for r in row.assessments_table]
-                    if row.assessments_table is not None
-                    else [],
-                )
-                for row in pdf.itertuples()
-            ]
-            yield pd.DataFrame.from_records(records)
 
-    return raw_docs.mapInPandas(run, schema=PARSED_COURSE_SCHEMA)
+def parse_pdfs(binary_docs: DataFrame, *, nfkc: bool = False) -> DataFrame:
+    """Decode and parse in ONE Arrow pass: binaryFile (path, content)
+    rows -> PARSED_COURSE_SCHEMA rows. Output equals
+    ``parse_documents(extract.extract_documents(binary_docs), nfkc=nfkc)``
+    (pinned by tests/test_syllabus_hostile.py and
+    tests/test_optional_backends.py), minus one trip through the Python
+    worker per task: the raw-document batches stay pandas frames
+    between the two batch functions instead of crossing Arrow. The
+    decode backend is still chosen per executor
+    (``extract.extract_batches``)."""
+    return binary_docs.select("path", "content").mapInPandas(
+        lambda b: parse_batches(extract.extract_batches(b), nfkc), schema=PARSED_COURSE_SCHEMA
+    )
 
 
 def normalize_raw_docs(raw: DataFrame, form: str = "NFKC") -> DataFrame:
@@ -132,12 +159,19 @@ def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def load_periods(spark: SparkSession, config: dict[str, dict[str, str]]) -> DataFrame:
-    """config.json's period map as a broadcastable dimension table."""
+    """config.json's period map as a broadcastable dimension table.
+
+    Built from a pandas frame so that, with Arrow on (``get_spark``),
+    it is a driver-local relation: a list of tuples would be an RDD
+    unpickled by one Python worker per partition on every broadcast."""
     rows = [
         (period, dates.get("start_date"), dates.get("end_date"))
         for period, dates in config.items()
     ]
-    df = spark.createDataFrame(rows, "period string, start_date string, end_date string")
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["period", "start_date", "end_date"]),
+        "period string, start_date string, end_date string",
+    )
     return df.select(
         "period",
         F.to_date("start_date").alias("start_date"),

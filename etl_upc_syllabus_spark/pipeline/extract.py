@@ -15,8 +15,11 @@ batches executor-side, never the driver.
 
 from __future__ import annotations
 
+import io
+import os
 from collections.abc import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .schema import RAW_DOC_SCHEMA
@@ -89,6 +92,55 @@ def read_syllabus_pdfs(spark: SparkSession, directory: str) -> DataFrame:
     )
 
 
+def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The extraction stage's Arrow batch function: (path, content)
+    batches -> RAW_DOC_SCHEMA batches. Shared by
+    :func:`extract_documents` and the fused decode+parse pass
+    (``assemble.parse_pdfs``)."""
+    # Backend chosen HERE, i.e. per executor process: on a
+    # heterogeneous cluster an executor without pdfplumber falls
+    # back to minipdf instead of failing with ImportError.
+    use_plumber = pdfplumber_available()
+    if use_plumber:
+        import pdfplumber
+    else:
+        from . import minipdf
+
+    for pdf_batch in batches:
+        records = []
+        for row in pdf_batch.itertuples():
+            pages_text: list[str] = []
+            pages_tables: list[list[list[str]] | None] = []
+            try:
+                if use_plumber:
+                    with pdfplumber.open(io.BytesIO(row.content)) as doc:
+                        for page in doc.pages:
+                            pages_text.append(page.extract_text() or "")
+                            pages_tables.append(page.extract_table())
+                else:
+                    for page_text, page_table in minipdf.extract_pages(bytes(row.content)):
+                        pages_text.append(page_text)
+                        pages_tables.append(page_table)
+            except Exception:
+                # One malformed PDF must not fail the whole Arrow
+                # batch/task: emit an empty-pages row so the parse
+                # stage routes it to quarantine like any other
+                # unparseable input.
+                pages_text, pages_tables = [], []
+            routed = route_tables(pages_text, pages_tables)
+            records.append(
+                {
+                    "filename": os.path.basename(row.path),
+                    "pages": pages_text,
+                    "units_table": routed["units"],
+                    "assessments_table": routed["assessments"],
+                }
+            )
+        # named columns even for an empty batch, which the fused pass
+        # hands straight to the parse batch function
+        yield pd.DataFrame.from_records(records, columns=RAW_DOC_SCHEMA.names)
+
+
 def extract_documents(binary_docs: DataFrame) -> DataFrame:
     """Arrow extraction stage: PDF bytes -> (filename, pages, tables).
 
@@ -111,54 +163,8 @@ def extract_documents(binary_docs: DataFrame) -> DataFrame:
       documents quarantine in the parse stage exactly like any
       unparseable input. Tests cover both strategies end-to-end on
       minipdf-written fixtures (tests/test_minipdf.py).
+
+    When the next stage is the parse, ``assemble.parse_pdfs`` runs both
+    batch functions in one Arrow pass instead of two.
     """
-    import io
-    import os
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Backend chosen HERE, i.e. per executor process: on a
-        # heterogeneous cluster an executor without pdfplumber falls
-        # back to minipdf instead of failing with ImportError.
-        use_plumber = pdfplumber_available()
-        if use_plumber:
-            import pdfplumber
-        else:
-            from . import minipdf
-
-        for pdf_batch in batches:
-            records = []
-            for row in pdf_batch.itertuples():
-                pages_text: list[str] = []
-                pages_tables: list[list[list[str]] | None] = []
-                try:
-                    if use_plumber:
-                        with pdfplumber.open(io.BytesIO(row.content)) as doc:
-                            for page in doc.pages:
-                                pages_text.append(page.extract_text() or "")
-                                pages_tables.append(page.extract_table())
-                    else:
-                        for page_text, page_table in minipdf.extract_pages(
-                            bytes(row.content)
-                        ):
-                            pages_text.append(page_text)
-                            pages_tables.append(page_table)
-                except Exception:
-                    # One malformed PDF must not fail the whole Arrow
-                    # batch/task: emit an empty-pages row so the parse
-                    # stage routes it to quarantine like any other
-                    # unparseable input.
-                    pages_text, pages_tables = [], []
-                routed = route_tables(pages_text, pages_tables)
-                records.append(
-                    {
-                        "filename": os.path.basename(row.path),
-                        "pages": pages_text,
-                        "units_table": routed["units"],
-                        "assessments_table": routed["assessments"],
-                    }
-                )
-            yield pd.DataFrame.from_records(records)
-
-    return binary_docs.select("path", "content").mapInPandas(run, schema=RAW_DOC_SCHEMA)
+    return binary_docs.select("path", "content").mapInPandas(extract_batches, schema=RAW_DOC_SCHEMA)

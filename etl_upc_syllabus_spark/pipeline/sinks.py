@@ -11,6 +11,9 @@ the JSON writers exist for reference-contract parity:
   contract of reference prompt_format.txt:9) -- rendered executor-side
   as per-partition fragments, stream-merged by the driver.
 
+Both are rendered by one partition function; ``write_course_json``
+writes S4 and S5 in the same executor pass.
+
 Reference bugs fixed rather than reproduced (SURVEY 7 'faithful-vs-
 fixed'): find_by_id globbed '{id}_*.json' which can never match S4's
 '{name}-{nrc}.json' filenames (etl_infrastructure.py:160-166), and
@@ -252,6 +255,16 @@ def _gate_period_keys(
     return clean
 
 
+def write_course_json(courses: DataFrame, base_path: str) -> tuple[list[str], str]:
+    """S4 + S5 in one executor pass: (per-record paths, all_courses.json
+    path). Each row is decoded once and rendered into both artifacts
+    by the same partition task, so a caller writing both pays one job
+    and one trip through the Python worker instead of two. Bytes equal
+    :func:`write_per_record_json` then :func:`write_all_courses_json`
+    (pinned by tests/test_pipeline_golden.py)."""
+    return _write_json(courses, base_path, per_record=True, consolidated=True)
+
+
 def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     """S4 compat: one pretty-printed JSON file per course, named
     '{name}-{nrc}.json' (etl_infrastructure.py:153-158).
@@ -262,18 +275,7 @@ def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     be a shared filesystem mount -- the scale-correct persistent form
     remains :func:`write_courses_parquet`.
     """
-    os.makedirs(base_path, exist_ok=True)
-
-    def _write_partition(rows):
-        for row in rows:
-            rec = json.loads(row)
-            fname = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}.json"
-            path = os.path.join(base_path, fname)
-            with open(path, "w", encoding="utf-8") as fh:
-                json.dump(rec, fh, ensure_ascii=False, indent=2)
-            yield path
-
-    return courses.toJSON().mapPartitions(_write_partition).collect()
+    return _write_json(courses, base_path, per_record=True, consolidated=False)[0]
 
 
 def write_all_courses_json(courses: DataFrame, base_path: str) -> str:
@@ -286,41 +288,62 @@ def write_all_courses_json(courses: DataFrame, base_path: str) -> str:
     driver-side Python objects. Output bytes are identical to
     ``json.dump(records, fh, ensure_ascii=False, indent=4)``.
     """
+    return _write_json(courses, base_path, per_record=False, consolidated=True)[1]
+
+
+def _write_json(
+    courses: DataFrame, base_path: str, *, per_record: bool, consolidated: bool
+) -> tuple[list[str], str]:
+    """The one partition renderer behind the JSON sinks: per-record
+    files (indent=2) and/or the all_courses.json fragment of the
+    partition (indent=4), from one ``json.loads`` per row."""
     os.makedirs(base_path, exist_ok=True)
     path = os.path.join(base_path, "all_courses.json")
     frag_dir = os.path.join(base_path, _FRAGMENTS_DIRNAME)
-    shutil.rmtree(frag_dir, ignore_errors=True)
-    os.makedirs(frag_dir)
+    if consolidated:
+        shutil.rmtree(frag_dir, ignore_errors=True)
+        os.makedirs(frag_dir)
 
-    def _write_fragment(idx, rows):
-        # One level of json.dump(list, indent=4) indentation = 4 spaces
-        # before every line of each element; elements joined by ",\n".
-        chunks = [
-            "\n".join("    " + line for line in
-                      json.dumps(json.loads(r), ensure_ascii=False, indent=4).splitlines())
-            for r in rows
-        ]
-        if not chunks:
-            return iter(())
-        frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
-        with open(frag, "w", encoding="utf-8") as fh:
-            fh.write(",\n".join(chunks))
-        yield idx, frag
+    def _render(idx, rows):
+        chunks = []
+        for row in rows:
+            rec = json.loads(row)
+            if per_record:
+                fname = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}.json"
+                rec_path = os.path.join(base_path, fname)
+                with open(rec_path, "w", encoding="utf-8") as fh:
+                    json.dump(rec, fh, ensure_ascii=False, indent=2)
+                yield idx, False, rec_path
+            if consolidated:
+                # One level of json.dump(list, indent=4) indentation = 4
+                # spaces before every line of each element; elements
+                # joined by ",\n".
+                chunks.append("\n".join(
+                    "    " + line
+                    for line in json.dumps(rec, ensure_ascii=False, indent=4).splitlines()
+                ))
+        if chunks:
+            frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
+            with open(frag, "w", encoding="utf-8") as fh:
+                fh.write(",\n".join(chunks))
+            yield idx, True, frag
 
-    fragments = sorted(courses.toJSON().mapPartitionsWithIndex(_write_fragment).collect())
-    with open(path, "w", encoding="utf-8") as fh:
-        if not fragments:
-            fh.write("[]")
-        else:
-            fh.write("[\n")
-            for i, (_, frag) in enumerate(fragments):
-                if i:
-                    fh.write(",\n")
-                with open(frag, encoding="utf-8") as src:
-                    shutil.copyfileobj(src, fh)
-            fh.write("\n]")
-    shutil.rmtree(frag_dir, ignore_errors=True)
-    return path
+    written = courses.toJSON().mapPartitionsWithIndex(_render).collect()
+    if consolidated:
+        fragments = sorted((idx, p) for idx, is_frag, p in written if is_frag)
+        with open(path, "w", encoding="utf-8") as fh:
+            if not fragments:
+                fh.write("[]")
+            else:
+                fh.write("[\n")
+                for i, (_, frag) in enumerate(fragments):
+                    if i:
+                        fh.write(",\n")
+                    with open(frag, encoding="utf-8") as src:
+                        shutil.copyfileobj(src, fh)
+                fh.write("\n]")
+        shutil.rmtree(frag_dir, ignore_errors=True)
+    return [p for _, is_frag, p in written if not is_frag], path
 
 
 def read_courses(

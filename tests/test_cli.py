@@ -8,14 +8,13 @@ import json
 import os
 
 from etl_upc_syllabus_spark.__main__ import main
-from etl_upc_syllabus_spark.pipeline import minipdf
+from etl_upc_syllabus_spark.pipeline import extract, minipdf
 
 from .test_minipdf import ASSESSMENTS_TABLE, PAGE1, UNITS_TABLE
 
 
-def test_cli_end_to_end(spark, tmp_path):
-    raw = tmp_path / "raw"
-    out = tmp_path / "data"
+def _small_corpus(raw):
+    """Two parseable syllabi, one corrupt PDF and the period config."""
     raw.mkdir()
 
     def pages(course):
@@ -32,6 +31,16 @@ def test_cli_end_to_end(spark, tmp_path):
         json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
     )
 
+
+def _persistent_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_cli_end_to_end(spark, tmp_path):
+    raw = tmp_path / "raw"
+    out = tmp_path / "data"
+    _small_corpus(raw)
+
     assert main([str(raw), str(out)]) == 0
 
     # reference artifact set: per-course '{name}-{nrc}.json', consolidated
@@ -47,6 +56,64 @@ def test_cli_end_to_end(spark, tmp_path):
     # 2025-08-25 period start is Monday 2025-09-15 .. Saturday 2025-09-20
     a0 = next(c for c in courses if c["id"] == "1AEL0244")["assessments"][0]
     assert (a0["initial_date"], a0["last_date"]) == ("2025-09-15", "2025-09-20")
+    # the corrupt PDF is reported, from the same read as the courses
+    qreport = json.loads((out / "quarantine.json").read_text(encoding="utf-8"))
+    assert len(qreport) == 1
+    assert "UG-202520_1AEL9999-0000.pdf" in qreport[0]["error"]
+
+
+def test_cli_decodes_each_pdf_once(spark, tmp_path, monkeypatch):
+    """Every PDF crosses the decode stage exactly once per run: the
+    rejects and the course set come from one persisted frame, not from
+    a second scan of the input directory. The scan is wrapped in a
+    pass-through Arrow stage that counts the rows it hands on."""
+    raw = tmp_path / "raw"
+    _small_corpus(raw)
+    scanned = spark.sparkContext.accumulator(0)
+    real_scan = extract.read_syllabus_pdfs
+
+    def counted_scan(session, directory):
+        df = real_scan(session, directory)
+
+        def tally(batches):
+            for batch in batches:
+                scanned.add(len(batch))
+                yield batch
+
+        return df.mapInPandas(tally, schema=df.schema)
+
+    monkeypatch.setattr(extract, "read_syllabus_pdfs", counted_scan)
+    rdds_before = _persistent_rdds(spark)
+
+    assert main([str(raw), str(tmp_path / "data")]) == 0
+    assert scanned.value == 3
+    # the persisted frame is released when the run ends
+    assert _persistent_rdds(spark) == rdds_before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cli_leaves_session_as_found(spark, tmp_path):
+    """Run inside an application that already has a session, the CLI
+    uses that session as it is: its conf (app name and shuffle
+    partitions included), persisted RDDs and temp views are unchanged
+    after the run. A distinctive shuffle-partition count makes any
+    rebuild of the session visible whatever ran before this test."""
+    raw = tmp_path / "raw"
+    _small_corpus(raw)
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        conf_before = dict(spark.conf.getAll)
+        rdds_before = _persistent_rdds(spark)
+        views_before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+        assert main([str(raw), str(tmp_path / "data")]) == 0
+
+        assert dict(spark.conf.getAll) == conf_before
+        assert _persistent_rdds(spark) == rdds_before
+        assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views_before
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
 def test_cli_200_course_corpus(spark, tmp_path):

@@ -38,9 +38,9 @@ ASSESSMENTS_TABLE = [
 
 
 def test_pdfplumber_primary_extract_branch(spark, tmp_path):
-    """pdfplumber path of extract_documents on a minipdf-written ruled
-    PDF: text + geometric table detection, reference parity
-    (etl_infrastructure.py:9-55)."""
+    """pdfplumber path of extract_documents and of the fused parse_pdfs
+    on a minipdf-written ruled PDF: text + geometric table detection,
+    reference parity (etl_infrastructure.py:9-55)."""
     pytest.importorskip("pdfplumber")
     d = tmp_path / "pdfs"
     d.mkdir()
@@ -52,8 +52,12 @@ def test_pdfplumber_primary_extract_branch(spark, tmp_path):
             ["VIII. EVALUACIÓN", ("table", ASSESSMENTS_TABLE)],
         ],
     )
-    extracted = extract.extract_documents(extract.read_syllabus_pdfs(spark, str(d)))
-    good, bad = assemble.split_quarantine(assemble.parse_documents(extracted))
+    binary = extract.read_syllabus_pdfs(spark, str(d))
+    staged = assemble.parse_documents(extract.extract_documents(binary))
+    # the fused decode+parse pass takes the same pdfplumber branch
+    fused = assemble.parse_pdfs(binary)
+    assert sorted(map(str, fused.collect())) == sorted(map(str, staged.collect()))
+    good, bad = assemble.split_quarantine(staged)
     assert bad.count() == 0
     recs = {r["id"]: r for r in good.collect()}
     assert recs["1AEL0244"]["name"] == "Matemática Básica"

@@ -6,6 +6,7 @@ This is the test the reference never had (SURVEY.md section 5)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -207,12 +208,32 @@ def test_sinks_executor_side_byte_identity(parsed, tmp_path):
     # formatting is byte-for-byte json.dump(indent=4) of the same order
     assert got == json.dumps(json.loads(got), ensure_ascii=False, indent=4)
     # no fragment litter left behind
-    import os
     assert sinks._FRAGMENTS_DIRNAME not in os.listdir(base)
 
     empty_path = sinks.write_all_courses_json(good.limit(0), str(tmp_path / "empty"))
     with open(empty_path, encoding="utf-8") as fh:
         assert fh.read() == "[]"
+
+    # the one-pass writer renders both artifacts with the same bytes as
+    # the two public writers, on many partitions and on none
+    def tree(d):
+        return {n: (d / n).read_bytes() for n in sorted(os.listdir(d))}
+
+    frame = good.repartition(7).persist()
+    try:
+        for name, df in (("many", frame), ("empty", good.limit(0))):
+            one, two = tmp_path / f"one_{name}", tmp_path / f"two_{name}"
+            paths, all_one = sinks.write_course_json(df, str(one))
+            two_paths = sinks.write_per_record_json(df, str(two))
+            sinks.write_all_courses_json(df, str(two))
+            assert tree(one) == tree(two), name
+            assert [os.path.basename(p) for p in paths] == [os.path.basename(p) for p in two_paths]
+            assert all_one == str(one / "all_courses.json")
+            assert sinks._FRAGMENTS_DIRNAME not in os.listdir(one)
+        assert tree(tmp_path / "one_empty") == {"all_courses.json": b"[]"}
+        assert len(tree(tmp_path / "one_many")) == len(recs) + 1
+    finally:
+        frame.unpersist()
 
 
 def test_section_routing_state_machine():

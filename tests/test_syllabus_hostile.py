@@ -33,9 +33,11 @@ sys.path.insert(
 
 from syllabus_probe import clean_doc, gate_unicode, mutations  # noqa: E402
 
+from etl_upc_syllabus_spark.pipeline import extract, minipdf
 from etl_upc_syllabus_spark.pipeline.assemble import (
     normalize_raw_docs,
     parse_documents,
+    parse_pdfs,
     split_quarantine,
 )
 from etl_upc_syllabus_spark.pipeline.schema import RAW_DOC_SCHEMA
@@ -149,3 +151,37 @@ def test_parse_nfkc_knob_equals_prepass_then_parse(spark):
     # silently to defaults without the knob (the frozen registry path)
     good, bad = _run(spark, [mutations()["nbsp_in_header"](clean_doc())])
     assert bad.count() == 0 and good.collect()[0]["name"] == ""
+
+
+def test_parse_pdfs_equals_extract_then_parse(spark, tmp_path):
+    """``parse_pdfs`` (decode + parse in one Arrow pass, the CLI's path)
+    yields exactly the rows of extract_documents -> parse_documents,
+    with and without NFKC, on real PDF bytes: the clean template, the
+    two NBSP classes NFKC rescues (cp1252 PDF text carries NBSP but
+    not the NFD/fullwidth/ZWSP classes) and a corrupt file."""
+    docs = [
+        clean_doc(),
+        mutations()["nbsp_in_header"](clean_doc(filename="UG-202520_1AEL0321-9001.pdf")),
+        mutations()["nbsp_after_bullet"](clean_doc(filename="UG-202520_1AEL0500-1111.pdf")),
+    ]
+    for filename, pages, units_table, assessments_table in docs:
+        minipdf.write_pdf(
+            str(tmp_path / filename),
+            [
+                pages[0],
+                ["VI. UNIDADES DE APRENDIZAJE", ("table", units_table)],
+                ["VIII. EVALUACIÓN", ("table", assessments_table)],
+            ],
+        )
+    (tmp_path / "UG-202520_1AEL9999-0000.pdf").write_bytes(b"%PDF-1.4 garbage")
+    binary = extract.read_syllabus_pdfs(spark, str(tmp_path))
+
+    by_posture = {}
+    for nfkc in (False, True):
+        fused = sorted(map(str, parse_pdfs(binary, nfkc=nfkc).collect()))
+        staged = parse_documents(extract.extract_documents(binary), nfkc=nfkc)
+        assert fused == sorted(map(str, staged.collect())), f"nfkc={nfkc}"
+        assert len(fused) == 4
+        by_posture[nfkc] = fused
+    # the knob reaches the fused pass: NFKC changes the NBSP-header record
+    assert by_posture[False] != by_posture[True]
