@@ -15,6 +15,7 @@ batches executor-side, never the driver.
 
 from __future__ import annotations
 
+import functools
 import io
 import os
 from collections.abc import Iterator
@@ -73,7 +74,10 @@ def route_tables(
     return {"units": units, "assessments": assessments}
 
 
+@functools.cache
 def pdfplumber_available() -> bool:
+    # probed once per process: Python does not remember a failed
+    # import, so each task would search sys.path (and its zips) again
     try:
         import pdfplumber  # noqa: F401
 

@@ -23,6 +23,7 @@ Both are real queries here.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -304,31 +305,8 @@ def _write_json(
         shutil.rmtree(frag_dir, ignore_errors=True)
         os.makedirs(frag_dir)
 
-    def _render(idx, rows):
-        chunks = []
-        for row in rows:
-            rec = json.loads(row)
-            if per_record:
-                fname = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}.json"
-                rec_path = os.path.join(base_path, fname)
-                with open(rec_path, "w", encoding="utf-8") as fh:
-                    json.dump(rec, fh, ensure_ascii=False, indent=2)
-                yield idx, False, rec_path
-            if consolidated:
-                # One level of json.dump(list, indent=4) indentation = 4
-                # spaces before every line of each element; elements
-                # joined by ",\n".
-                chunks.append("\n".join(
-                    "    " + line
-                    for line in json.dumps(rec, ensure_ascii=False, indent=4).splitlines()
-                ))
-        if chunks:
-            frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
-            with open(frag, "w", encoding="utf-8") as fh:
-                fh.write(",\n".join(chunks))
-            yield idx, True, frag
-
-    written = courses.toJSON().mapPartitionsWithIndex(_render).collect()
+    render = _json_renderer(base_path, per_record=per_record, consolidated=consolidated)
+    written = courses.toJSON().mapPartitionsWithIndex(render).collect()
     if consolidated:
         fragments = sorted((idx, p) for idx, is_frag, p in written if is_frag)
         with open(path, "w", encoding="utf-8") as fh:
@@ -344,6 +322,43 @@ def _write_json(
                 fh.write("\n]")
         shutil.rmtree(frag_dir, ignore_errors=True)
     return [p for _, is_frag, p in written if not is_frag], path
+
+
+def _json_renderer(base_path: str, *, per_record: bool, consolidated: bool):
+    """The ``mapPartitionsWithIndex`` function of :func:`_write_json`."""
+    # not a closure: by reference, the worker imports the package and its zipimport fix
+    return functools.partial(
+        _render_json_partition,
+        base_path,
+        os.path.join(base_path, _FRAGMENTS_DIRNAME),
+        per_record,
+        consolidated,
+    )
+
+
+def _render_json_partition(base_path, frag_dir, per_record, consolidated, idx, rows):
+    chunks = []
+    for row in rows:
+        rec = json.loads(row)
+        if per_record:
+            fname = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}.json"
+            rec_path = os.path.join(base_path, fname)
+            with open(rec_path, "w", encoding="utf-8") as fh:
+                json.dump(rec, fh, ensure_ascii=False, indent=2)
+            yield idx, False, rec_path
+        if consolidated:
+            # One level of json.dump(list, indent=4) indentation = 4
+            # spaces before every line of each element; elements
+            # joined by ",\n".
+            chunks.append("\n".join(
+                "    " + line
+                for line in json.dumps(rec, ensure_ascii=False, indent=4).splitlines()
+            ))
+    if chunks:
+        frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
+        with open(frag, "w", encoding="utf-8") as fh:
+            fh.write(",\n".join(chunks))
+        yield idx, True, frag
 
 
 def read_courses(

@@ -11,6 +11,8 @@ so timestamp semantics match the DuckDB oracle (naive-UTC).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -87,3 +89,22 @@ def tune(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     return spark
+
+
+@contextmanager
+def conf_overrides(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set session conf keys for the block, then leave each key as found:
+    back to its old value if it was set, unset if it was not (a key
+    absent from ``spark.conf.getAll`` reads its default, which a plain
+    ``conf.set(conf.get(key))`` would pin as an explicit setting)."""
+    before = dict(spark.conf.getAll)
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key in settings:
+            if key in before:
+                spark.conf.set(key, before[key])
+            else:
+                spark.conf.unset(key)

@@ -39,33 +39,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Fixtures have shipped ts under two physical types: TIMESTAMP(NANOS)
         # (which Spark's parquet reader rejects unless read as int64 under the
         # legacy conf) and plain TIMESTAMP_MICROS. Ingestion is type-adaptive:
-        # read natively, inspect the resolved dtype, and convert only the
-        # nanos-as-long case -- truncating to micros, the same truncation
-        # DuckDB applies, so oracle comparisons agree. Both branches are kept
-        # forever; TIMESTAMP_MICROS is the common physical type any real
-        # stream table would use.
+        # the footer probe picks the physical type, and only the nanos case
+        # sets the legacy conf and converts -- truncating to micros, the same
+        # truncation DuckDB applies, so oracle comparisons agree. Both
+        # branches are kept forever; TIMESTAMP_MICROS is the common physical
+        # type any real stream table would use, and loading it leaves the
+        # session conf untouched. events_ts_kind raises on the ambiguous
+        # bare-int64 case itself (ADVICE r4/r5): dividing a non-nanos int64
+        # by 1000 would load values 1000x off.
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # bigint here is EITHER TIMESTAMP(NANOS) under the legacy
-            # conf OR a genuinely bare int64 ts; only the former may be
-            # divided by 1000. events_ts_kind probes the footer's
-            # logical type and raises on the ambiguous bare-int64 case
-            # itself (ADVICE r4/r5), so a plain call + assert suffices.
-            from ..streaming.events import events_ts_kind
+        from ..streaming.events import events_ts_kind
 
-            kind = events_ts_kind(path)
-            if kind != "nanos":
-                # a real raise (assert strips under python -O): dividing
-                # a non-nanos int64 by 1000 would load values 1000x off
-                raise ValueError(
-                    f"events ts read as bigint but footer says {kind!r} at {path}"
-                )
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
+        if events_ts_kind(path) == "nanos":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(path)
+            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = spark.read.parquet(path)
+        if dict(df.dtypes).get("ts") == "timestamp_ntz":
             # session tz is UTC (session.py), so the cast is value-preserving;
             # normalizing to TimestampType keeps one dtype across fixtures.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import conf_overrides
+
 _MEMSINK_IDS = itertools.count()
 
 #: Event type of the watermark-flush sentinel rows (see _staged_flush_dir).
@@ -462,13 +464,10 @@ def run_stream_to_table(
     (the sentinel-flush design, _staged_flush_dir), so the extra
     empty batches the scheduler would interleave are pure drain
     latency here -- a production query that wants eager watermark-only
-    emission should leave them on.
+    emission should leave them on. Both keys are restored as found: a
+    key that was unset before the drain is unset again after it.
     """
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     name = f"strm_out_{next(_MEMSINK_IDS)}"
     # Ephemeral checkpoint on the fastest local storage (r16, guide
     # section 5/6: the driver should not wait on I/O it does not need):
@@ -486,21 +485,24 @@ def run_stream_to_table(
     # exists AND has headroom (ephemeral_dir's free-space guard, r17),
     # else the system temp dir (the previous behavior).
     ckpt = ephemeral_dir("etl_upc_ckpt_")
+    overrides = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with conf_overrides(spark, overrides):
+            q = (
+                stream_df.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 

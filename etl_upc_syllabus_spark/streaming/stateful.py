@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import conf_overrides
 from .events import read_events_stream, run_stream_to_table
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_cents bigint"
@@ -251,9 +252,7 @@ def run_stateful_increment(
     pins the property; returns this run's input-row count (0 when
     nothing new arrived).
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
+    with conf_overrides(spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}):
         events = spark.readStream.schema(schema).parquet(source_dir)
 
         def _append(batch_df: DataFrame, _bid: int) -> None:
@@ -269,5 +268,3 @@ def run_stateful_increment(
         )
         q.awaitTermination()
         return sum(int(p["numInputRows"]) for p in (q.recentProgress or []))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

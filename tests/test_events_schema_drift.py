@@ -89,6 +89,19 @@ def test_both_physical_types_batch_load_identically(spark, tmp_path, kind):
     assert got == sorted(_ROWS["ts_us"])
 
 
+def test_micros_load_leaves_conf_unchanged(spark, tmp_path):
+    """Only a TIMESTAMP(NANOS) table needs the legacy nanos-as-long
+    conf; loading a micros table (every on-disk fixture so far) must
+    leave the session conf as it found it."""
+    d = str(tmp_path / "micros")
+    _write_fixture(d, "micros")
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    before = dict(spark.conf.getAll)
+    df = load_table(spark, d, "events")
+    assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+    assert dict(spark.conf.getAll) == before
+
+
 @pytest.mark.parametrize("kind", ["nanos", "micros"])
 def test_both_physical_types_stream_identically(spark, tmp_path, kind):
     """The stream reader must probe the footer and produce the same
@@ -214,10 +227,11 @@ def test_directory_layout_streams_identically(spark, tmp_path, n_parts):
     assert got == want and len(got) > 0
 
 
-def test_bare_int64_ts_is_refused(tmp_path):
+def test_bare_int64_ts_is_refused(spark, tmp_path):
     """ADVICE r4: a ts column shipped as PLAIN int64 (no timestamp
     logical type) has an unknowable unit; guessing nanos would load
-    micros values 1000x off silently. Both probes must refuse."""
+    micros values 1000x off silently. Both probes must refuse, and so
+    must the batch loader."""
     from etl_upc_syllabus_spark.streaming.events import events_ts_kind
 
     d = tmp_path / "bare"
@@ -236,6 +250,8 @@ def test_bare_int64_ts_is_refused(tmp_path):
     pq.write_table(table, path)
     with pytest.raises(ValueError, match="logical type"):
         events_ts_kind(path)
+    with pytest.raises(ValueError, match="logical type"):
+        load_table(spark, str(d), "events")
 
 
 def test_registry_sorts_broken_latest_first(tmp_path):

@@ -80,7 +80,11 @@ def test_streaming_cdc_upsert_cross_batch_retraction(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
     )
+    # the drain overrides this key; unset before, it must be unset after
+    spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    conf_before = dict(spark.conf.getAll)
     emissions = run_stream_to_table(streaming_cdc_upserts(stream), "update")
+    assert dict(spark.conf.getAll) == conf_before
     # the raw emission log must contain key 2's live version AND its
     # tombstone (two batches), proving the state crossed batches
     em = [(r["k"], r["seq"], r["op"]) for r in emissions.collect()]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import pickle
 
 import pytest
 
@@ -234,6 +235,10 @@ def test_sinks_executor_side_byte_identity(parsed, tmp_path):
         assert len(tree(tmp_path / "one_many")) == len(recs) + 1
     finally:
         frame.unpersist()
+
+    # the renderer ships to workers by reference, so they import the
+    # package; stdlib pickle refuses a closure, so a regression fails here
+    pickle.dumps(sinks._json_renderer(base, per_record=True, consolidated=True))
 
 
 def test_section_routing_state_machine():
