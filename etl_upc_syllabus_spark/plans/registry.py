@@ -41,31 +41,10 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-#: Specs STAGED for a sanctioned future registry swap -- full
-#: QuerySpecs (Spark fn + oracle) that are NOT part of the driver
-#: contract: queries()/oracle_sql() never include them (the registry
-#: is frozen at 199 per VERDICT r6 item 1). They exist so a
-#: pre-announced swap can land with its oracle mirror, replica
-#: evidence, and tests already in place -- the flip is then a
-#: one-line move from here into the registry (executed once so far:
-#: dedup_embedding_cosine -> its banded scale-path twin, sanctioned
-#: r10, staged r11, flipped r12; see _PLAN_SWAPPED). Checked by
-#: ``tools/verify_local.py --staged`` and by pytest, never by the
-#: driver.
-_STAGED: dict[str, QuerySpec] = {}
-
 
 def register(spec: QuerySpec) -> QuerySpec:
     if spec.name in _REGISTRY:
         raise ValueError(f"duplicate query name {spec.name!r}")
-    if spec.name in _STAGED:
-        # a sanctioned swap must MOVE the spec out of _STAGED, not
-        # leave two diverging copies of one name live in both
-        # registries (review r11) -- the flip is delete-and-register
-        raise ValueError(
-            f"query name {spec.name!r} is still staged; move it out of "
-            "the staged registry when promoting it"
-        )
     _REGISTRY[spec.name] = spec
     return spec
 
@@ -78,28 +57,6 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
         return fn
 
     return deco
-
-
-def staged_query(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """Decorator registering into the STAGED side registry (see
-    ``_STAGED``): evidence surface for a sanctioned future swap, never
-    part of the driver contract."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        if name in _STAGED or name in _REGISTRY:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        _STAGED[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc, tags=tags)
-        return fn
-
-    return deco
-
-
-def staged_specs() -> dict[str, QuerySpec]:
-    """The staged (non-driver) specs; same shape as :func:`all_specs`."""
-    _load_all()
-    return dict(_STAGED)
 
 
 def _load_all() -> None:
@@ -126,109 +83,14 @@ def _load_all() -> None:
     from . import multimodal_queries  # noqa: F401
 
 
-# Queries that already have a green rows+schema+hash verdict in
-# CORRECTNESS_r01.json. The driver's correctness pass walks the
-# queries() dict in order and has a bounded budget (round 1 stopped
-# after the first 50 entries), so queries WITHOUT a verdict yet are
-# ordered first -- across rounds every name then has a green row.
-# _verified_names() extends this baseline from any CORRECTNESS_r*.json
-# found in the repo root, so later rounds re-prioritize automatically.
-_R1_VERIFIED = frozenset(
-    {
-        "dedup_exact",
-        "dedup_minhash_bands",
-        "dedup_minhash_lsh",
-        "dedup_cluster_components",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "join_asof",
-        "window_range_frame",
-        "json_struct_extract",
-        "text_chunking",
-        "dedup_embedding_cosine",
-        "grouped_map_rank",
-        "pandas_udf_scalar",
-        "hypertable_rollup",
-        "skew_salted_join",
-        "map_functions",
-        "unpivot_melt",
-        "join_interval_bucketed",
-        "sql_passthrough",
-        "source_format_roundtrip",
-        "multimodal_media_meta",
-        "multimodal_frame_sample",
-        "multimodal_resize",
-        "syllabus_calendar",
-        "syllabus_quarantine_counts",
-        "q1_pricing_summary",
-        "agg_distinct",
-        "agg_rollup",
-        "agg_cube",
-        "agg_grouping_sets",
-        "agg_percentiles",
-        "q3_shipping_priority",
-        "q5_region_revenue",
-        "join_semi",
-        "join_anti",
-        "join_range_nonequi",
-        "join_broadcast_dims",
-        "join_left_groupby",
-        "window_running_sum",
-        "window_topk_per_group",
-        "window_lag_delta",
-        "sort_topk",
-        "scan_filter_project",
-        "case_when_bands",
-        "agg_stats",
-        "window_ntile_dist",
-        "q4_priority_exists",
-        "q6_forecast_revenue",
-        "q13_order_distribution",
-    }
-)
-
-
-# Names the round-3 VERDICT identified as broken against the regenerated
-# events fixture whose NEWEST CORRECTNESS entry is nonetheless a stale
-# green (they fell outside the r3 bounded check window, or failed
-# silently -- 1970-era windows -- rather than erroring). Forced to round
-# 0 so the r4 re-check window is guaranteed to refresh them; the driver
-# writing fresh green entries for them makes this set a no-op afterward.
-_STALE_GREEN_BROKEN = frozenset(
-    {
-        "try_cast_quarantine",
-        "stream_sessionization",
-        "stream_window_counts",
-        "stream_sliding_window",
-        "stream_stream_join",
-    }
-)
-
-
-# Sanctioned plan+oracle swaps: name -> round the swap shipped in.
-# A swapped query's green history belongs to the PRE-swap plan shape,
-# so until the driver records a verdict from the swap round or later,
-# the name is forced to tier 0 (ahead of every cohort) -- the swap
-# round's bounded ~50-entry window then verifies the new fn against
-# the new oracle together. Only a GREEN verdict at/after the swap
-# round lifts the demotion (review r12: a broken or rows-only record
-# does not -- the new plan is unverified until it hash-matches its
-# new oracle); after that the normal ordering takes back over.
-_PLAN_SWAPPED: dict[str, int] = {
-    # r12: banded corpus-scaled LSH replaced the fixed 8-plane
-    # single-band shape (VERDICT r10 item 3 sanction; staged +
-    # rehearsed r11; executed r12 -- see extended_queries.py docstring)
-    "dedup_embedding_cosine": 12,
-}
-
-
 def _verification_rounds(root: str | None = None) -> dict[str, int]:
     """name -> effective verification round for re-check ordering.
 
     Reads the driver-written CORRECTNESS_r*.json files from ``root``
     (default: the repo root) when present: a green rows+schema+hash
-    verdict advances the name to that round (folding in the static r1
-    baseline at round 1). A name whose NEWEST entry is broken (``err``
+    verdict advances the name to that round. These files are the only
+    source of verdicts; a name none of them mentions stays unverified.
+    A name whose NEWEST entry is broken (``err``
     recorded or ``hash_match`` explicitly false) maps to round 0
     regardless of any older green verdict -- a stale green must never
     outrank a fresh failure, or a regression (like the r3 fixture-type
@@ -244,7 +106,7 @@ def _verification_rounds(root: str | None = None) -> dict[str, int]:
 
     if root is None:
         root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    rounds: dict[str, int] = {name: 1 for name in _R1_VERIFIED}
+    rounds: dict[str, int] = {}
     latest: dict[str, tuple[int, bool]] = {}  # name -> (round, broken)
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -266,19 +128,6 @@ def _verification_rounds(root: str | None = None) -> dict[str, int]:
     for k, (_, broken) in latest.items():
         if broken:
             rounds[k] = 0
-    for k in _STALE_GREEN_BROKEN:
-        # trust any round-4+ driver record over the static r3 verdict
-        if k not in latest or latest[k][0] <= 3:
-            rounds[k] = 0
-    for k, swap_round in _PLAN_SWAPPED.items():
-        # pre-swap green verdicts vouch for the OLD plan shape only:
-        # demote unless a GREEN verdict exists at/after the swap round
-        # (review r12: keying on latest-record EXISTENCE left a
-        # neither-green-nor-broken >=swap-round record -- e.g. a
-        # rows-only check -- cancelling the demotion with the new plan
-        # still unverified)
-        if rounds.get(k, 0) < swap_round:
-            rounds[k] = 0
     return rounds
 
 
@@ -286,9 +135,8 @@ def _verified_names() -> frozenset[str]:
     """Names whose CURRENT plan shape has a standing green verdict.
 
     Tier-0 names are excluded (review r12): a name demoted to round 0
-    -- broken-latest, stale-green-broken, or a _PLAN_SWAPPED entry
-    whose green history belongs to the pre-swap plan -- is exactly
-    what ``verify_local --unverified`` exists to re-run, so counting
+    because its newest recorded verdict is broken is exactly what
+    ``verify_local --unverified`` exists to re-run, so counting
     its key as 'verified' would hide it from the one tool meant to
     catch it.
     """

@@ -79,7 +79,11 @@ def compact(spark: SparkSession, path: str, out_path: str, target_files: int) ->
 #   race is structurally gone until an explicit vacuum;
 # - a publish killed mid-write leaves an orphan snapshot dir that
 #   _CURRENT never pointed to: invisible to readers, reclaimed by
-#   vacuum, and auditable with audit_write_artifacts before the flip.
+#   vacuum, and auditable with audit_write_artifacts before the flip;
+# - every flip records its target in the _VERSIONS journal, the only
+#   record of which versions committed (see _journal). A table whose
+#   _CURRENT is not journaled was not written by this build and is
+#   refused by the flip, the inventory and vacuum.
 
 _MANIFEST = "_CURRENT"
 # how long a .claiming- staging dir must sit untouched before vacuum may
@@ -420,30 +424,7 @@ def _flip_manifest(
         # history once later commits pass its version. The reverse
         # order (replace first) would be worse: a crash would leave
         # the LIVE current version missing from history forever.
-        prior = _read_journal(table_dir)
-        if not prior and cur is not None:
-            # journal backfill (ADVICE r15, medium): the FIRST flip of a
-            # pre-journal table must not start the journal with only its
-            # own commit -- once a journal exists it is the sole commit
-            # authority, so every genuinely committed legacy version
-            # would classify as a refused-publish orphan and be
-            # reclaimed OUTRIGHT by the next vacuum, inside the
-            # documented keep window. Seed the journal from the same
-            # on-disk heuristic the inventory's journal-less fallback
-            # uses, capped at the committed version, plus _CURRENT's own
-            # target (which the heuristic can miss when the table was
-            # written without _SUCCESS markers). Pre-journal committed
-            # history stays committed; the heuristic's documented
-            # cannot-tell-orphans-apart caveat is inherited once, at
-            # upgrade time, instead of silently converting history to
-            # orphans.
-            legacy = {
-                t
-                for t in _legacy_version_targets(table_dir)
-                if 0 <= _version_of(t) <= committed
-            }
-            legacy.add(cur)
-            prior = sorted(legacy, key=_version_of)
+        prior = _journal(table_dir, cur)
         entries = [t for t in prior if 0 <= _version_of(t) <= committed]
         entries.append(snap)
         _rewrite_journal(table_dir, entries)
@@ -463,6 +444,37 @@ def _read_journal(table_dir: str) -> list[str]:
             return [ln.strip() for ln in fh if ln.strip()]
     except FileNotFoundError:
         return []
+
+
+def _journal(table_dir: str, current: str | None) -> list[str]:
+    """The table's committed targets, oldest first: the ``_VERSIONS``
+    journal, the single commit authority the flip, the inventory and
+    vacuum all decide by. Every flip journals its target BEFORE it
+    replaces _CURRENT, and vacuum only drops targets it deleted, so
+    _CURRENT is always journaled on a table this build wrote. When it
+    is not (a table from another writer, or its journal was removed),
+    its history cannot be told from refused-publish orphans, so this
+    raises instead of guessing -- a vacuum would otherwise reclaim
+    committed versions as orphans.
+
+    ``current`` is the caller's earlier _CURRENT read. The flip and
+    vacuum hold locks that keep it journaled; the lock-free inventory
+    can race newer commits plus a vacuum that dropped that target, so
+    the check re-reads _CURRENT and raises only if it has not moved."""
+    journal = _read_journal(table_dir)
+    if (
+        current is not None
+        and current not in journal
+        and _read_manifest_target(table_dir) == current
+    ):
+        raise ValueError(
+            f"snapshot table {table_dir!r}: _CURRENT -> {current!r} is not "
+            f"in its {_VERSIONS_JOURNAL} journal, so its committed versions "
+            "are unknown; refusing to publish, inventory or vacuum it "
+            "(read_current_snapshot still reads it -- copy it into a fresh "
+            "table dir)"
+        )
+    return journal
 
 
 def _rewrite_journal(table_dir: str, entries: list[str]) -> None:
@@ -662,16 +674,17 @@ def _publish_incremental_claimed(
     base.update({d: snap for d in written})
     # record each referenced snapshot's DATA schema (the batch's
     # columns minus the partition col) in the manifest: the reader
-    # then needs no footer-discovery pass at all -- at manifest widths
-    # of thousands of partitions the discovery listing measurably
-    # doubles the read (tools/snapshot_probe.py width receipt). Carried
-    # forward and pruned to still-referenced snapshots, so the manifest
-    # stays bounded by the live snapshot count.
+    # takes it from here and never runs a footer-discovery pass -- at
+    # manifest widths of thousands of partitions that listing
+    # measurably doubles the read (tools/snapshot_probe.py width
+    # receipt). Carried forward and pruned to still-referenced
+    # snapshots, so the manifest stays bounded by the live snapshot
+    # count.
     from pyspark.sql import types as _T
 
     schemas = {
         s: sch
-        for s, sch in (meta.get("schemas", {}) if current else {}).items()
+        for s, sch in meta.get("schemas", {}).items()
         if s in set(base.values())
     }
     if written:
@@ -886,7 +899,9 @@ def _read_pointer_manifest(
     silently re-type '01' -> 1 (r12 probe). unionByName with
     allowMissingColumns bridges schema evolution across snapshots (a
     column added in a later batch reads as NULL on older partitions,
-    matching mergeSchema semantics)."""
+    matching mergeSchema semantics). Each snapshot's data schema comes
+    from the manifest's ``schemas``, which every publish writes for
+    each snapshot it references; a manifest missing one raises."""
     import os as _os
     from functools import reduce
 
@@ -907,14 +922,14 @@ def _read_pointer_manifest(
     for snap, pdirs in sorted(groups.items()):
         base = _os.path.join(table_dir, snap)
         paths = [_os.path.join(base, d) for d in sorted(pdirs)]
-        if snap in schemas:
-            # the publish recorded this snapshot's data schema: no
-            # footer-discovery listing needed (halves the read at
-            # thousands-of-partitions manifest widths)
-            fields = list(_T.StructType.fromJson(schemas[snap]))
-        else:
-            discovered = spark.read.option("basePath", base).parquet(*paths).schema
-            fields = [f for f in discovered if f.name != pcol]
+        if snap not in schemas:
+            raise ValueError(
+                f"pointer manifest {manifest_name!r} in {table_dir!r} "
+                f"records no schema for {snap!r}; every publish records "
+                "one per referenced snapshot, so this manifest was not "
+                "written by this build"
+            )
+        fields = list(_T.StructType.fromJson(schemas[snap]))
         explicit = _T.StructType(
             fields + [_T.StructField(pcol, _T.StringType(), True)]
         )
@@ -942,32 +957,15 @@ def list_snapshot_versions(table_dir: str) -> list[dict]:
     that crashed between its journal append and its _CURRENT replace
     -- never readable). Works regardless of _SUCCESS-marker
     conventions (the journal, not the marker, proves the commit).
-    A journal-less table (written by a pre-journal build) falls back
-    to the on-disk heuristic -- every manifest, or every _SUCCESS-
-    bearing dir -- which CANNOT distinguish a refused publish's orphan
-    from a real version; re-publish once to start the journal.
-    Metadata-only."""
+    Raises ValueError when _CURRENT is not journaled (see
+    :func:`_journal`). Metadata-only."""
     import os as _os
 
     current = _read_manifest_target(table_dir)
     cur_version = _version_of(current) if current else -1
-    journal = _read_journal(table_dir)
-    if journal:
-        # half-journaled defense (ADVICE r15): a table whose journal was
-        # started WITHOUT the flip-time backfill (older build) covers
-        # only versions >= its minimum entry; committed pre-journal
-        # history below that range stays visible via the legacy
-        # heuristic instead of vanishing from the inventory (and from
-        # time travel) the moment the journal exists.
-        committed = (
-            sorted(_legacy_below_journal(table_dir, journal), key=_version_of)
-            + journal
-        )
-    else:
-        committed = _legacy_version_targets(table_dir)
     out = []
     seen: set[str] = set()
-    for target in committed:
+    for target in _journal(table_dir, current):
         v = _version_of(target)
         if target in seen or v < 0 or v > cur_version:
             continue
@@ -986,66 +984,6 @@ def list_snapshot_versions(table_dir: str) -> list[dict]:
         )
     out.sort(key=lambda e: e["version"])
     return out
-
-
-def _legacy_version_targets(table_dir: str) -> list[str]:
-    """Inventory fallback for tables written before the _VERSIONS
-    journal existed: every pointer manifest, or (whole-table layout)
-    every _SUCCESS-bearing snapshot dir. Cannot tell a refused
-    publish's orphan from a committed version -- documented caveat."""
-    import os as _os
-
-    entries = _os.listdir(table_dir)
-    manifests = [
-        f
-        for f in entries
-        if f.startswith(_MANIFEST_PREFIX)
-        and f.endswith(".json")
-        and _version_of(f) >= 0
-    ]
-    if manifests:
-        return manifests
-    return [
-        d
-        for d in entries
-        if d.startswith(_SNAP_PREFIX)
-        and _version_of(d) >= 0
-        and _os.path.exists(_os.path.join(table_dir, d, "_SUCCESS"))
-    ]
-
-
-def _legacy_below_journal(table_dir: str, journal: list[str]) -> set[str]:
-    """Committed pre-journal targets a half-started journal does not
-    cover (ADVICE r15, medium): a journal begun by an older build (no
-    flip-time backfill) contains only post-upgrade commits, so its
-    minimum version bounds what it can testify about. Targets BELOW
-    that range that the legacy heuristic deems committed are
-    pre-journal history, not refused-publish orphans -- orphans can
-    only interleave WITHIN the committed range (claims are issued above
-    the then-current version, so a refusal's version always sits
-    between two commits the journal records, never below its minimum;
-    below-minimum non-journaled survivors of compaction would have been
-    reclaimed or claim-live-skipped by a prior vacuum). Within this
-    below-minimum range the legacy heuristic's documented caveat is
-    inherited: it cannot tell a very-stale publisher's never-flipped
-    manifest from real pre-journal history (the same ambiguity a fully
-    journal-less table lives with), and it resolves it the same
-    conservative way -- treat as committed, age out through the keep
-    window. Returns empty for an empty journal (the caller's full
-    legacy fallback applies) and when the journal already covers
-    version 0."""
-    if not journal:
-        return set()
-    jmin = min(
-        (v for v in (_version_of(t) for t in journal) if v >= 0), default=-1
-    )
-    if jmin <= 0:
-        return set()
-    return {
-        t
-        for t in _legacy_version_targets(table_dir)
-        if 0 <= _version_of(t) < jmin
-    }
 
 
 def read_snapshot_version(
@@ -1102,8 +1040,8 @@ def vacuum_snapshots(table_dir: str, keep: int = 2) -> list[str]:
     and the snapshots it pins survive until a later successful publish
     passes its version, after which it is reclaimed.
 
-    Committed-ness is decided by the ``_VERSIONS`` journal when one
-    exists (ADVICE r14, the single-commit-authority rule shared with
+    Committed-ness is decided by the ``_VERSIONS`` journal (ADVICE r14,
+    the single-commit-authority rule shared with
     :func:`list_snapshot_versions`): only journaled targets count as
     committed history, so an orphan manifest/dir whose version the
     current one has passed can never occupy a ``keep`` slot -- before
@@ -1113,15 +1051,9 @@ def vacuum_snapshots(table_dir: str, keep: int = 2) -> list[str]:
     retention window. Orphans at or below the current version (never
     journaled, claim lock not held) are provably dead -- their flip
     already refused or will refuse on the moved base -- and are
-    reclaimed outright instead of aging through the window. Journal-
-    less tables (pre-journal builds) fall back to the on-disk
-    heuristic, exactly as the inventory does, and a HALF-journaled
-    table (journal started by an older build without the flip-time
-    backfill) keeps its pre-journal committed history: non-journaled
-    targets below the journal's minimum version classify as committed
-    via the legacy heuristic, never as orphans (ADVICE r15; see
-    :func:`_legacy_below_journal` for why orphans cannot live there).
-    The two commit oracles can never disagree.
+    reclaimed outright instead of aging through the window. A table
+    whose _CURRENT is not journaled is refused with ValueError before
+    anything is deleted (see :func:`_journal`).
 
     Safe against concurrent PUBLISHERS (above-current state is never
     touched, and a racing publish only references dirs the current
@@ -1205,14 +1137,12 @@ def _vacuum_snapshots_locked(table_dir: str, keep: int) -> list[str]:
     # above-current artifacts become reclaimable once a later
     # successful publish moves current past them.
     #
-    # Committed-ness (ADVICE r14): the _VERSIONS journal, when present,
-    # is the single commit authority -- the same rule the inventory
+    # Committed-ness (ADVICE r14): the _VERSIONS journal is the single
+    # commit authority -- the same rule the inventory
     # applies -- so a refused publish's orphan at or below current can
     # neither occupy a keep slot nor pin its snapshots (safety: such an
     # orphan's flip provably refuses -- the same version cannot be
     # claimed twice, so current passing it means the base moved).
-    # Augmented (ADVICE r15) with pre-journal committed targets below a
-    # half-started journal's minimum version (_legacy_below_journal).
     # This journal read is deliberately OUTSIDE the flip flock taken
     # later for compaction, and that is safe: journal rewrites are
     # atomic tmp+replace under the flock, so this read sees a complete
@@ -1220,13 +1150,11 @@ def _vacuum_snapshots_locked(table_dir: str, keep: int) -> list[str]:
     # commit above the current version this vacuum already snapshotted,
     # and every above-current target is unconditionally kept, so a
     # stale read can never doom a newly committed version.
-    journal = _read_journal(table_dir)
-    committed_set = set(journal) | _legacy_below_journal(table_dir, journal)
+    committed_set = set(_journal(table_dir, current))
     committed_manifests = [
         m
         for m in manifests
-        if _version_of(m) <= cur_version
-        and (m in committed_set or not journal or m == current)
+        if _version_of(m) <= cur_version and m in committed_set
     ]
     orphan_manifests = [
         m
@@ -1262,13 +1190,11 @@ def _vacuum_snapshots_locked(table_dir: str, keep: int) -> list[str]:
         # dirs are committed history subject to the keep window; non-
         # journaled dirs at/below current are refused-publish orphans,
         # reclaimable outright so they never displace a committed
-        # version from the window. Journal-less legacy tables fall back
-        # to version arithmetic, as everywhere.
+        # version from the window.
         committed_snaps = [
             s
             for s in snaps
-            if int(s[len(_SNAP_PREFIX):]) <= cur_version
-            and (s in committed_set or not journal or s == current)
+            if int(s[len(_SNAP_PREFIX):]) <= cur_version and s in committed_set
         ]
         orphan_snaps = [
             s

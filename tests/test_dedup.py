@@ -548,17 +548,14 @@ def test_swapped_cosine_registry_plan_oracle_and_band0_superset(spark, sf_dir):
     test SF, a SUPERSET of the pre-swap fixed single-band 8-plane pair
     set (derived planes_per_band floors at 8 at gate SFs, so band 0 IS
     the former frozen plane set; bands=1/planes_per_band=8 reproduces
-    it), the registry stays frozen at 199, and nothing is left
-    staged."""
+    it), and the registry stays frozen at 199."""
     from etl_upc_syllabus_spark.operators.dedup import embedding_cosine_pairs_scaled
     from etl_upc_syllabus_spark.plans import all_specs
-    from etl_upc_syllabus_spark.plans.registry import staged_specs
     from etl_upc_syllabus_spark.sources.tables import load_table
 
     from .oracle_harness import compare, duckdb_run
 
     specs = all_specs()
-    assert staged_specs() == {}, "the r12 flip must leave nothing staged"
     assert "dedup_embedding_cosine_scaled" not in specs
     assert len(specs) == 199
     spec = specs["dedup_embedding_cosine"]
@@ -594,29 +591,3 @@ def test_swapped_cosine_registry_plan_oracle_and_band0_superset(spark, sf_dir):
         assert digest == (
             "5c34a6194416422362733951f5c1c1b9f5697d56931dfbf0d9f782decf76cba4"
         )
-
-
-def test_promoting_a_staged_name_requires_moving_it():
-    """register() refuses a name still in the staged registry (review
-    r11): a sanctioned flip must MOVE the spec, never leave two
-    diverging copies of one name live in both registries. The r12 swap
-    emptied _STAGED, so the guard is pinned with a synthetic staged
-    entry (inserted and removed here -- never via staged_query, which
-    would leak it into other tests' staged_specs views)."""
-    import pytest
-
-    from etl_upc_syllabus_spark.plans.registry import (
-        _STAGED,
-        QuerySpec,
-        register,
-        staged_specs,
-    )
-
-    assert staged_specs() == {}
-    name = "_test_staged_promotion_guard"
-    _STAGED[name] = QuerySpec(name=name, fn=lambda spark, sf: None, oracle=None)
-    try:
-        with pytest.raises(ValueError, match="still staged"):
-            register(QuerySpec(name=name, fn=lambda spark, sf: None, oracle=None))
-    finally:
-        del _STAGED[name]

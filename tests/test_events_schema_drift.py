@@ -291,11 +291,10 @@ def test_registry_sorts_broken_latest_first(tmp_path):
     assert rounds["fixed"] == 2
     assert rounds["stable"] == 2
     assert rounds["errored"] == 0
+    # the files are the only source of verdicts
+    assert set(rounds) == {"regressed", "stable", "fixed", "errored"}
     # round-0 names sort ahead of all verified names in the re-check
-    # schedule (the ordering all_specs applies). Tier membership, not
-    # position: the map also seeds the _R1_VERIFIED baseline and the
-    # _STALE_GREEN_BROKEN/_PLAN_SWAPPED demotions (e.g. the r12
-    # dedup_embedding_cosine swap), which legitimately share tier 0.
+    # schedule (the ordering all_specs applies).
     order = sorted(rounds, key=lambda k: rounds[k])
     tier0 = {k for k in rounds if rounds[k] == 0}
     assert {"regressed", "errored"} <= tier0
@@ -342,38 +341,3 @@ def test_stage_reuse_refreshes_gc_marker(tmp_path):
     assert time.time() - os.path.getmtime(marker) < 3600, (
         "reuse did not refresh the GC marker"
     )
-
-
-def test_plan_swapped_demotion_requires_post_swap_green(tmp_path, monkeypatch):
-    """Review r12: a _PLAN_SWAPPED name stays tier 0 until a GREEN
-    verdict exists at/after the swap round -- a neither-green-nor-
-    broken record (e.g. a rows-only check) from the swap round must
-    NOT cancel the demotion, and a post-swap green must."""
-    import json
-
-    from etl_upc_syllabus_spark.plans import registry as reg
-
-    monkeypatch.setattr(reg, "_PLAN_SWAPPED", {"swapped_q": 12})
-    (tmp_path / "CORRECTNESS_r11.json").write_text(
-        json.dumps({"swapped_q": {"rows_match": True, "schema_match": True,
-                                  "hash_match": True, "err": None}})
-    )
-    # pre-swap green only: demoted
-    assert reg._verification_rounds(root=str(tmp_path))["swapped_q"] == 0
-    # swap-round record that is neither green nor broken: still demoted
-    (tmp_path / "CORRECTNESS_r12.json").write_text(
-        json.dumps({"swapped_q": {"rows_match": True, "err": None}})
-    )
-    assert reg._verification_rounds(root=str(tmp_path))["swapped_q"] == 0
-    # post-swap green: promotion sticks
-    (tmp_path / "CORRECTNESS_r12.json").write_text(
-        json.dumps({"swapped_q": {"rows_match": True, "schema_match": True,
-                                  "hash_match": True, "err": None}})
-    )
-    assert reg._verification_rounds(root=str(tmp_path))["swapped_q"] == 12
-    # and a broken post-swap record demotes again via the broken rule
-    (tmp_path / "CORRECTNESS_r13.json").write_text(
-        json.dumps({"swapped_q": {"rows_match": False, "schema_match": False,
-                                  "hash_match": False, "err": "boom"}})
-    )
-    assert reg._verification_rounds(root=str(tmp_path))["swapped_q"] == 0

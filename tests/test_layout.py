@@ -195,6 +195,9 @@ def test_vacuum_orders_versions_numerically_and_reclaims_tmp(spark, tmp_path):
     os.makedirs(t)
     for v in (99999999, 100000000, 100000001):
         os.makedirs(os.path.join(t, f"snapshot-{v:08d}"))
+    # the commit journal each flip would have written
+    with open(os.path.join(t, "_VERSIONS"), "w") as fh:
+        fh.write("snapshot-99999999\nsnapshot-100000000\nsnapshot-100000001\n")
     with open(os.path.join(t, "_CURRENT"), "w") as fh:
         fh.write("snapshot-100000001\n")
     open(os.path.join(t, "._CURRENT.tmp.00000042"), "w").close()

@@ -158,19 +158,51 @@ def test_partition_values_stay_strings_never_inferred(spark, tmp_path):
 def test_schema_evolution_bridges_across_snapshots(spark, tmp_path):
     """A column added by a later batch reads as NULL on partitions still
     carried by older snapshots (mergeSchema semantics via unionByName
-    allowMissingColumns)."""
+    allowMissingColumns). The reader takes each snapshot's schema from
+    the manifest only: every manifest a publish, an empty batch, a
+    re-base or a vacuum leaves behind records one for exactly the
+    snapshots it references, and a manifest missing one is refused."""
+    from etl_upc_syllabus_spark.sources.layout import rebase_pointer_table
+
     t = str(tmp_path / "tbl")
+
+    def assert_manifests_record_schemas():
+        for name in os.listdir(t):
+            if name.startswith("manifest-"):
+                meta = json.load(open(os.path.join(t, name)))
+                assert set(meta["schemas"]) == set(meta["partitions"].values())
+
+    def assert_evolved_read():
+        out = read_current_snapshot(spark, t)
+        assert "credits" in out.columns
+        assert out.filter(F.col("period") == "A").filter(
+            F.col("credits").isNull()
+        ).count() == 2
+        assert out.filter(F.col("period") == "B").filter(
+            F.col("credits") == 3
+        ).count() == 2
+
     publish_snapshot_incremental(_batch(spark, "A", 2), t, "period")
+    assert_manifests_record_schemas()
     evolved = _batch(spark, "B", 2).withColumn("credits", F.lit(3))
     publish_snapshot_incremental(evolved, t)
-    out = read_current_snapshot(spark, t)
-    assert "credits" in out.columns
-    assert out.filter(F.col("period") == "A").filter(
-        F.col("credits").isNull()
-    ).count() == 2
-    assert out.filter(F.col("period") == "B").filter(
-        F.col("credits") == 3
-    ).count() == 2
+    assert_manifests_record_schemas()
+    assert_evolved_read()
+    publish_snapshot_incremental(_batch(spark, "C", 1).filter(F.lit(False)), t)
+    assert_manifests_record_schemas()
+    rebase_pointer_table(spark, t)
+    assert_manifests_record_schemas()
+    vacuum_snapshots(t, keep=1)
+    assert_manifests_record_schemas()
+    assert_evolved_read()
+
+    current = open(os.path.join(t, "_CURRENT")).read().strip()
+    meta = json.load(open(os.path.join(t, current)))
+    meta["schemas"].popitem()
+    with open(os.path.join(t, current), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="records no schema"):
+        read_current_snapshot(spark, t)
 
 
 def test_verified_incremental_publish_passes_clean(spark, tmp_path):
@@ -582,15 +614,14 @@ def test_pointer_read_prunes_on_the_partition_column(spark, tmp_path):
     assert df.count() == 5
 
 
-def test_journal_tail_heals_and_legacy_tables_fall_back(spark, tmp_path):
+def test_journal_tail_heals_and_vacuum_compacts_it(spark, tmp_path):
     """Review r14 pass 4: (a) a flip that crashed between its journal
     write and its _CURRENT replace leaves a journal tail above current
     -- filtered from the inventory immediately and REWRITTEN AWAY by
     the next successful flip, so it can never resurface as phantom
-    history once later commits pass its version; (b) a journal-less
-    table from a pre-journal build inventories via the on-disk
-    fallback instead of reporting zero versions; (c) vacuum compacts
-    the journal to live targets."""
+    history once later commits pass its version; (b) vacuum compacts
+    the journal to live targets. A table with no journal is refused
+    (test_journal_less_table_is_refused)."""
     from etl_upc_syllabus_spark.sources.layout import list_snapshot_versions
 
     t = str(tmp_path / "tbl")
@@ -620,18 +651,72 @@ def test_journal_tail_heals_and_legacy_tables_fall_back(spark, tmp_path):
     journal = open(os.path.join(t, "_VERSIONS")).read()
     assert "manifest-00000001.json" not in journal  # rewritten away
 
-    # (c) vacuum compaction: journal drops vacuumed targets
+    # (b) vacuum compaction: journal drops vacuumed targets
     publish_snapshot_incremental(_batch(spark, "A", 7), t)  # v3
     vacuum_snapshots(t, keep=1)
     journal = open(os.path.join(t, "_VERSIONS")).read().split()
     assert all(os.path.exists(os.path.join(t, x)) for x in journal)
 
-    # (b) legacy table: no journal
-    t2 = str(tmp_path / "legacy")
-    publish_snapshot_incremental(_batch(spark, "B", 2), t2, "period")
-    os.remove(os.path.join(t2, "_VERSIONS"))
-    inv = list_snapshot_versions(t2)
-    assert [(e["version"], e["current"]) for e in inv] == [(0, True)]
+
+def test_journal_less_table_is_refused(spark, tmp_path, monkeypatch):
+    """The _VERSIONS journal is the only record of which versions
+    committed, so a table whose _CURRENT is not journaled (not written
+    by this build, or its journal removed) is refused loudly by the
+    inventory, vacuum and the next publish -- for both layouts --
+    instead of having its committed history reclaimed as orphans.
+    Nothing is deleted, _CURRENT stays put, and the current snapshot
+    still reads. An inventory whose _CURRENT read merely went stale is
+    not refused."""
+    from functools import partial
+
+    import etl_upc_syllabus_spark.sources.layout as layout
+    from etl_upc_syllabus_spark.sources.layout import list_snapshot_versions
+
+    def files(root):
+        return {
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, names in os.walk(root)
+            for f in names
+        }
+
+    ptr, whole = str(tmp_path / "ptr"), str(tmp_path / "whole")
+    for i in range(3):
+        publish_snapshot_incremental(_batch(spark, "A", 2 + i), ptr, "period")
+        publish_snapshot(_batch(spark, "A", 2 + i), whole)
+    cases = {
+        ptr: partial(publish_snapshot_incremental, _batch(spark, "B", 9), ptr),
+        whole: partial(publish_snapshot, _batch(spark, "B", 9), whole),
+    }
+    for t, publish in cases.items():
+        os.remove(os.path.join(t, "_VERSIONS"))
+        before = files(t)
+        current = open(os.path.join(t, "_CURRENT")).read()
+        for call in (
+            partial(list_snapshot_versions, t),
+            partial(vacuum_snapshots, t, keep=1),
+            publish,
+        ):
+            with pytest.raises(ValueError, match="not in its _VERSIONS journal"):
+                call()
+        assert before <= files(t), "a refusal deleted files"
+        assert open(os.path.join(t, "_CURRENT")).read() == current
+        assert read_current_snapshot(spark, t).count() == 4
+
+    # the lock-free inventory reads _CURRENT (v0), then a newer commit
+    # and a vacuum drop v0 from the journal before the journal read
+    t = str(tmp_path / "racing")
+    publish_snapshot_incremental(_batch(spark, "A", 2), t, "period")
+    real_read = layout._read_journal
+
+    def read_after_race(table_dir):
+        monkeypatch.setattr(layout, "_read_journal", real_read)
+        publish_snapshot_incremental(_batch(spark, "A", 3), t)
+        vacuum_snapshots(t, keep=1)
+        return real_read(table_dir)
+
+    monkeypatch.setattr(layout, "_read_journal", read_after_race)
+    assert list_snapshot_versions(t) == []  # v1 is newer than its _CURRENT
+    assert [e["version"] for e in list_snapshot_versions(t)] == [1]
 
 
 def test_orphan_manifest_never_displaces_committed_versions(spark, tmp_path):
@@ -1121,76 +1206,6 @@ def test_rebase_roundtrips_hostile_partition_values(spark, tmp_path):
         r["v"]: r["period"] for r in read_current_snapshot(spark, t).collect()
     }
     assert back == {1: None, 2: "a/b", 3: "a b", 4: "k=v", 5: "ok"}
-
-
-def test_first_flip_of_pre_journal_table_backfills_journal(spark, tmp_path):
-    """ADVICE r15 (medium): the first flip of a journal-less table must
-    seed the journal with the table's committed legacy history -- not
-    just its own commit. Without the backfill, every pre-journal
-    committed version classifies as a refused-publish orphan the
-    moment the journal exists, and the next vacuum reclaims it
-    OUTRIGHT, inside the documented keep window: the exact
-    retention-contract violation the single-commit-authority rule was
-    meant to prevent. Pinned for BOTH layouts."""
-    from etl_upc_syllabus_spark.sources.layout import (
-        list_snapshot_versions,
-        read_snapshot_version,
-    )
-
-    # pointer layout: three committed versions from a "pre-journal
-    # build" (journal removed), then one post-upgrade publish
-    t = str(tmp_path / "ptr")
-    for i in range(3):
-        publish_snapshot_incremental(_batch(spark, "A", 2 + i), t, "period")
-    os.remove(os.path.join(t, "_VERSIONS"))
-    publish_snapshot_incremental(_batch(spark, "B", 9), t)  # v3 starts journal
-    journal = open(os.path.join(t, "_VERSIONS")).read().split()
-    assert journal == [f"manifest-{v:08d}.json" for v in range(4)]
-    # the keep window now protects legacy history exactly as if the
-    # journal had existed all along
-    deleted = vacuum_snapshots(t, keep=4)
-    assert deleted == []
-    assert [e["version"] for e in list_snapshot_versions(t)] == [0, 1, 2, 3]
-    assert read_snapshot_version(spark, t, 0).count() == 2  # time travel intact
-
-    # whole-table layout: same upgrade path
-    t2 = str(tmp_path / "whole")
-    for i in range(3):
-        publish_snapshot(_batch(spark, "A", 4 + i), t2)
-    os.remove(os.path.join(t2, "_VERSIONS"))
-    publish_snapshot(_batch(spark, "B", 8), t2)  # v3 starts the journal
-    journal2 = open(os.path.join(t2, "_VERSIONS")).read().split()
-    assert journal2 == [f"snapshot-{v:08d}" for v in range(4)]
-    deleted2 = vacuum_snapshots(t2, keep=4)
-    assert deleted2 == []
-    assert read_snapshot_version(spark, t2, 1).count() == 5
-
-
-def test_half_journaled_table_keeps_pre_journal_history(spark, tmp_path):
-    """ADVICE r15 defense-in-depth: a table whose journal was started
-    by an OLDER build (only the latest commit journaled -- the half
-    state the backfill now prevents) must still keep its pre-journal
-    committed history: vacuum classifies non-journaled targets below
-    the journal's minimum version as committed (legacy heuristic),
-    never as orphans, and the inventory / time travel see them."""
-    from etl_upc_syllabus_spark.sources.layout import (
-        list_snapshot_versions,
-        read_snapshot_version,
-    )
-
-    t = str(tmp_path / "half")
-    for i in range(3):
-        publish_snapshot_incremental(_batch(spark, "A", 3 + i), t, "period")
-    # simulate the older build's half state: journal covers ONLY v2
-    with open(os.path.join(t, "_VERSIONS"), "w") as fh:
-        fh.write("manifest-00000002.json\n")
-    assert [e["version"] for e in list_snapshot_versions(t)] == [0, 1, 2]
-    assert vacuum_snapshots(t, keep=3) == []
-    assert [e["version"] for e in list_snapshot_versions(t)] == [0, 1, 2]
-    assert read_snapshot_version(spark, t, 0).count() == 3
-    # the window still ages legacy history out normally (oldest first)
-    vacuum_snapshots(t, keep=2)
-    assert [e["version"] for e in list_snapshot_versions(t)] == [1, 2]
 
 
 def test_vacuum_refuses_while_another_vacuum_holds_the_lock(spark, tmp_path):

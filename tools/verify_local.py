@@ -2,15 +2,17 @@
 
 Usage: python tools/verify_local.py [name ...]
        python tools/verify_local.py --unverified   # every query with no STANDING
-                                                   # green verdict for its current
-                                                   # plan shape (never-verified,
-                                                   # broken-latest, post-swap)
+                                                   # green verdict in the
+                                                   # CORRECTNESS_r*.json files
+                                                   # (never-verified or
+                                                   # broken-latest)
        python tools/verify_local.py --all
-       python tools/verify_local.py --staged       # staged (non-driver) swap twins
 
 Runs each registered query at sf0.01 and compares it against its
 DuckDB oracle with tests.oracle_harness.compare (harsher than the
-driver's value hash). Prints one line per query plus a summary.
+driver's value hash). Prints one line per query plus a summary. No
+arguments, an unknown flag or a name not in the registry prints the
+usage line and exits 2 before any Spark session starts.
 
 The session conf is snapshotted around each query and restored after
 it; a query that leaves keys added or changed gets them listed on its
@@ -31,12 +33,12 @@ sys.path.insert(0, ROOT)
 from etl_upc_syllabus_spark.plans.registry import (  # noqa: E402
     _verified_names,
     all_specs,
-    staged_specs,
 )
 from etl_upc_syllabus_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare, duckdb_run  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+USAGE = "usage: python tools/verify_local.py [--all | --unverified | name ...]"
 
 
 def _restore_conf(spark, before: dict[str, str]) -> list[str]:
@@ -59,13 +61,14 @@ def main() -> int:
         names = [n for n in specs if n not in verified]
     elif args == ["--all"]:
         names = list(specs)
-    elif args == ["--staged"]:
-        # the evidence surface for sanctioned future registry swaps
-        # (registry.py _STAGED) -- never part of the driver contract
-        specs = staged_specs()
-        names = list(specs)
     else:
         names = args
+    unknown = [a for a in names if a not in specs]
+    if not args or unknown:
+        print(USAGE, file=sys.stderr)
+        if unknown:
+            print(f"unknown flag or query: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark("verify_local")
     failures: list[str] = []
     conf_leaks: dict[str, list[str]] = {}
