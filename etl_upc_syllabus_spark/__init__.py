@@ -18,11 +18,14 @@ Layout (SURVEY.md section 7):
 - ``streaming``  -- Structured Streaming surface over the events table.
 
 Importing the package also installs ``_lazy_zipimport``, a backport of
-CPython 3.12's lazy zipimport cache invalidation for 3.10 and 3.11. A
-Python worker imports the package when it unpickles any function of the
-engine, and from then on its tasks stop re-reading pyspark.zip's
-directory once per zipimporter (16-18 reads per task). The backport is
-a no-op on 3.12+ and is deleted once the interpreter floor reaches 3.12.
+CPython 3.12's lazy zipimport cache invalidation for 3.10 and 3.11, so
+Python worker tasks stop re-reading pyspark.zip's directory once per
+zipimporter (16-18 reads per task). In sessions built by
+``session.get_spark`` the worker daemon (``_pydaemon``) imports the
+package before it forks any worker, so every task has the fix; under a
+session the driver built, a worker installs it when it first unpickles
+a function of the engine. The backport is a no-op on 3.12+ and is
+deleted once the interpreter floor reaches 3.12.
 """
 
 from . import _lazy_zipimport  # noqa: F401

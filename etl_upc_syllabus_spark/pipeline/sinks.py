@@ -24,6 +24,7 @@ Both are real queries here.
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import os
 import shutil
@@ -306,7 +307,11 @@ def _write_json(
         os.makedirs(frag_dir)
 
     render = _json_renderer(base_path, per_record=per_record, consolidated=consolidated)
-    written = courses.toJSON().mapPartitionsWithIndex(render).collect()
+    written = (
+        courses.select(F.spark_partition_id().alias("idx"), F.to_json(F.struct("*")).alias("doc"))
+        .mapInArrow(render, "idx int, is_frag boolean, path string")
+        .collect()
+    )
     if consolidated:
         fragments = sorted((idx, p) for idx, is_frag, p in written if is_frag)
         with open(path, "w", encoding="utf-8") as fh:
@@ -325,14 +330,36 @@ def _write_json(
 
 
 def _json_renderer(base_path: str, *, per_record: bool, consolidated: bool):
-    """The ``mapPartitionsWithIndex`` function of :func:`_write_json`."""
-    # not a closure: by reference, the worker imports the package and its zipimport fix
+    """The ``mapInArrow`` function of :func:`_write_json`: it takes one
+    partition's ``(idx, doc)`` batches, ``doc`` being the row as
+    ``to_json(struct(*))`` renders it, and yields the ``(idx, is_frag,
+    path)`` manifest of what it wrote."""
+    # not a closure: it ships by reference, so a worker started from the
+    # stock daemon imports the package and its zipimport fix
     return functools.partial(
-        _render_json_partition,
+        _render_json_batches,
         base_path,
         os.path.join(base_path, _FRAGMENTS_DIRNAME),
         per_record,
         consolidated,
+    )
+
+
+def _render_json_batches(base_path, frag_dir, per_record, consolidated, batches):
+    import pyarrow as pa
+
+    batches = (b for b in batches if b.num_rows)
+    first = next(batches, None)
+    if first is None:
+        return
+    docs = (doc for b in itertools.chain([first], batches) for doc in b.column(1).to_pylist())
+    idx = first.column(0)[0].as_py()
+    idxs, is_frags, paths = zip(
+        *_render_json_partition(base_path, frag_dir, per_record, consolidated, idx, docs)
+    )
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(idxs, pa.int32()), pa.array(is_frags), pa.array(paths)],
+        names=["idx", "is_frag", "path"],
     )
 
 

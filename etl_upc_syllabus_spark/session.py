@@ -6,6 +6,12 @@ at scale: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), shuffle partitions sized to cores rather than the 200
 default, Arrow enabled for the pandas-UDF paths, UTC session timezone
 so timestamp semantics match the DuckDB oracle (naive-UTC).
+
+Python workers fork from the engine's own daemon
+(``etl_upc_syllabus_spark._pydaemon``), which imports what every task
+needs once, before the first fork. The daemon module is a launch-time
+setting: it applies to sessions ``get_spark`` builds, not to a session
+the driver built and passed in (see :func:`tune`).
 """
 
 from __future__ import annotations
@@ -17,6 +23,9 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding the package: the daemon is started by module
+# name, from whatever directory the driver runs in
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _verify_checksums_enabled(env_value: str | None) -> bool:
@@ -52,6 +61,8 @@ def get_spark(app_name: str = "etl_upc_syllabus_spark", cpus: int | None = None)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "etl_upc_syllabus_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # bitrot defense, DEFAULT ON (opt out with
         # SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS=0): verify parquet page
         # CRCs at read. The r11 bitrot probe (tools/bitrot_probe.py)
@@ -82,7 +93,9 @@ def tune(spark: SparkSession) -> SparkSession:
 
     The driver passes its own SparkSession into ``entry``/``queries()``
     callables; timezone and AQE are runtime-settable so we pin them for
-    oracle-comparable semantics.
+    oracle-comparable semantics. The Python daemon module is not: it is
+    read when the context starts, so such a session keeps the stock
+    ``pyspark.daemon`` and its workers import the package on first use.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 from etl_upc_syllabus_spark.__main__ import main
 from etl_upc_syllabus_spark.pipeline import extract, minipdf
@@ -30,6 +32,49 @@ def _small_corpus(raw):
     (raw / "config.json").write_text(
         json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
     )
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# a fresh process that builds its own session; the script prints one
+# JSON line. python_daemons() lists the JVM's child processes that run
+# a Python module: the worker daemons (workers are their children).
+_FRESH_SESSION = """
+import json, os, sys
+from etl_upc_syllabus_spark.session import get_spark
+spark = get_spark("fresh", cpus=2)
+
+def python_daemons():
+    from pyspark import SparkContext
+    jvm = SparkContext._gateway.proc.pid
+    found = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat", "rb") as fh:
+                stat = fh.read()
+            with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                argv = fh.read().decode().split("\\0")[:-1]
+        except OSError:
+            continue
+        if int(stat[stat.rindex(b")") + 2:].split()[1]) == jvm and "-m" in argv:
+            found.append(argv[argv.index("-m") + 1])
+    return found
+"""
+
+
+def _run_fresh_session(script: str, cwd, *args: str):
+    """Run ``script`` after _FRESH_SESSION in a new interpreter started in
+    ``cwd``, with the repo on sys.path the way conftest puts it there
+    (not on PYTHONPATH)."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    prelude = f"import sys; sys.path.insert(0, {_REPO!r})\n"
+    proc = subprocess.run(
+        [sys.executable, "-c", prelude + _FRESH_SESSION + script, *args],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
 def _persistent_rdds(spark) -> set[int]:
@@ -90,6 +135,41 @@ def test_cli_decodes_each_pdf_once(spark, tmp_path, monkeypatch):
     # the persisted frame is released when the run ends
     assert _persistent_rdds(spark) == rdds_before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cli_runs_one_python_daemon(tmp_path):
+    """The CLI's Python stages (decode/parse and the JSON sinks) all run
+    on one worker pool, forked from the engine's daemon: a fresh session
+    built by get_spark ends the run with exactly one daemon process."""
+    raw = tmp_path / "raw"
+    _small_corpus(raw)
+    daemons = _run_fresh_session(
+        "from etl_upc_syllabus_spark.__main__ import main\n"
+        "assert main(sys.argv[1:]) == 0\n"
+        "print(json.dumps(python_daemons()))\n",
+        _REPO, str(raw), str(tmp_path / "data"),
+    )
+    assert daemons == ["etl_upc_syllabus_spark._pydaemon"]
+
+
+def test_daemon_starts_outside_the_repo(tmp_path):
+    """The daemon is started by module name from the driver's working
+    directory; run from elsewhere, with the repo only on the driver's
+    sys.path, plain-lambda and package Python stages still run."""
+    out = tmp_path / "data"
+    got = _run_fresh_session(
+        "from etl_upc_syllabus_spark.pipeline import sinks\n"
+        "df = spark.range(1, 6).mapInPandas(\n"
+        "    lambda it: (b.assign(sq=b.id * b.id) for b in it), 'id long, sq long')\n"
+        "paths, _ = sinks.write_course_json(\n"
+        "    df.selectExpr('cast(id as string) as name', 'sq as nrc'), sys.argv[1])\n"
+        "print(json.dumps([sorted(map(os.path.basename, paths)), python_daemons()]))\n",
+        tmp_path, str(out),
+    )
+    assert got == [[f"{i}-{i * i}.json" for i in range(1, 6)], ["etl_upc_syllabus_spark._pydaemon"]]
+    assert [r["nrc"] for r in json.loads((out / "all_courses.json").read_text())] == [
+        i * i for i in range(1, 6)
+    ]
 
 
 def test_cli_leaves_session_as_found(spark, tmp_path):

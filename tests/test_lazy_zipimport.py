@@ -1,6 +1,7 @@
 """The package's zipimport backport (``_lazy_zipimport``): invalidating
 import caches reads no zip directory, and a rewritten archive is still
-seen by the next import. In-process, no Spark."""
+seen by the next import; and a Python worker has it before its first
+task."""
 
 from __future__ import annotations
 
@@ -9,7 +10,10 @@ import sys
 import zipfile
 import zipimport
 
+import pytest
+
 import etl_upc_syllabus_spark  # noqa: F401  (installs the backport)
+from etl_upc_syllabus_spark.session import conf_overrides
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
@@ -64,3 +68,27 @@ def test_invalidate_caches_reads_no_zip_directory(tmp_path, monkeypatch):
         for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
             del sys.path_importer_cache[key]
         zipimport._zip_directory_cache.pop(archive, None)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="the backport is for 3.10 and 3.11")
+def test_worker_has_the_backport_before_its_first_task(spark):
+    """A worker that has only run a plain lambda -- no function of the
+    package unpickled -- already has the backport: the daemon installed
+    it before the fork. Hidden tracebacks add a variable to the workers'
+    environment, and Spark keeps one worker pool per environment, so the
+    query runs on a pool of its own, fresh whatever ran before."""
+
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        files = zipimport.zipimporter.__dict__.get("_files")
+        yield pd.DataFrame({"owner": [getattr(getattr(files, "fget", None), "__module__", None)]})
+
+    conf = {"spark.sql.execution.pyspark.udf.hideTraceback.enabled": "true"}
+    with conf_overrides(spark, conf):
+        owners = {r.owner for r in spark.range(4).mapInPandas(probe, "owner string").collect()}
+    assert owners == {"etl_upc_syllabus_spark._lazy_zipimport"}

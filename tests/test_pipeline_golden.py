@@ -188,41 +188,30 @@ def test_sinks_roundtrip(spark, parsed, tmp_path):
         assert len(json.load(fh)) == 3
 
 
-def test_sinks_executor_side_byte_identity(parsed, tmp_path):
-    """The executor-side fragment merge must reproduce exactly the bytes
-    the old driver-side json.dump produced (S4 indent=2, S5 indent=4),
-    including across an empty DataFrame (S5 -> '[]')."""
+def test_sinks_executor_side_byte_identity(spark, parsed, tmp_path):
+    """The JSON sinks write exactly the bytes of a driver-side json.dump
+    of the frame's ``toJSON`` records (S4 indent=2, S5 indent=4, in
+    partition order) on the date-enriched frame -- dates, null fields,
+    non-ASCII names -- over 7 partitions and over none (S5 -> '[]'); the
+    one-pass writer writes what the two public writers write."""
     good, _ = assemble.split_quarantine(parsed)
-    base = str(tmp_path)
-    files = sinks.write_per_record_json(good, base)
-    recs = [json.loads(r) for r in good.toJSON().collect()]
-    for rec in recs:
-        fname = f"{rec['name']}-{rec['nrc']}.json"
-        with open(f"{base}/{fname}", encoding="utf-8") as fh:
-            assert fh.read() == json.dumps(rec, ensure_ascii=False, indent=2)
-    assert len(files) == len(recs)
+    # no config row for 2026-1: that course's dates are null
+    periods = assemble.load_periods(
+        spark, {"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}}
+    )
+    dated = assemble.enrich_dates(good, periods)
 
-    all_path = sinks.write_all_courses_json(good.repartition(7), base)
-    with open(all_path, encoding="utf-8") as fh:
-        got = fh.read()
-    assert sorted(json.loads(got), key=lambda r: r["nrc"]) == sorted(recs, key=lambda r: r["nrc"])
-    # formatting is byte-for-byte json.dump(indent=4) of the same order
-    assert got == json.dumps(json.loads(got), ensure_ascii=False, indent=4)
-    # no fragment litter left behind
-    assert sinks._FRAGMENTS_DIRNAME not in os.listdir(base)
-
-    empty_path = sinks.write_all_courses_json(good.limit(0), str(tmp_path / "empty"))
-    with open(empty_path, encoding="utf-8") as fh:
-        assert fh.read() == "[]"
-
-    # the one-pass writer renders both artifacts with the same bytes as
-    # the two public writers, on many partitions and on none
     def tree(d):
         return {n: (d / n).read_bytes() for n in sorted(os.listdir(d))}
 
-    frame = good.repartition(7).persist()
+    frame = dated.repartition(7).persist()
     try:
-        for name, df in (("many", frame), ("empty", good.limit(0))):
+        recs = {r["id"]: r for r in map(json.loads, frame.toJSON().collect())}
+        assert recs["1AEL0244"]["units"][0]["initial_date"] == "2025-08-25"
+        assert "initial_date" not in recs["1AEL0500"]["units"][0]
+        assert recs["1AEL0321"]["name"] == "Física I"
+        for name, df in (("many", frame), ("empty", dated.limit(0))):
+            expected = [json.loads(r) for r in df.toJSON().collect()]
             one, two = tmp_path / f"one_{name}", tmp_path / f"two_{name}"
             paths, all_one = sinks.write_course_json(df, str(one))
             two_paths = sinks.write_per_record_json(df, str(two))
@@ -231,14 +220,19 @@ def test_sinks_executor_side_byte_identity(parsed, tmp_path):
             assert [os.path.basename(p) for p in paths] == [os.path.basename(p) for p in two_paths]
             assert all_one == str(one / "all_courses.json")
             assert sinks._FRAGMENTS_DIRNAME not in os.listdir(one)
+            assert len(tree(one)) == len(expected) + 1
+            for rec in expected:
+                got = (one / f"{rec['name']}-{rec['nrc']}.json").read_text(encoding="utf-8")
+                assert got == json.dumps(rec, ensure_ascii=False, indent=2)
+            got = (one / "all_courses.json").read_text(encoding="utf-8")
+            assert got == json.dumps(expected, ensure_ascii=False, indent=4), name
         assert tree(tmp_path / "one_empty") == {"all_courses.json": b"[]"}
-        assert len(tree(tmp_path / "one_many")) == len(recs) + 1
     finally:
         frame.unpersist()
 
     # the renderer ships to workers by reference, so they import the
     # package; stdlib pickle refuses a closure, so a regression fails here
-    pickle.dumps(sinks._json_renderer(base, per_record=True, consolidated=True))
+    pickle.dumps(sinks._json_renderer(str(tmp_path), per_record=True, consolidated=True))
 
 
 def test_section_routing_state_machine():
