@@ -1,18 +1,21 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-TWO JSON lines: an extended-evidence line (samples/warmup/cold_queries/
-wobble_floors) followed by a compact FINAL summary line
+TWO JSON lines: an extended-evidence line (samples/warmup/counters/
+cold_queries) followed by a compact FINAL summary line
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 The split exists because the artifact consumer captures only the tail
 of stdout (~2000 chars) and parses the LAST line: r9's single fat line
-(samples + 15 cold entries + wobble blocks) overflowed that window and
-truncated the front carrying "metric"/"value", losing the round's
-graded headline (VERDICT r9 finding #1). The final line is now a
-bounded summary — tests/test_cold_floors.py pins its worst-case length
-(15 queries + fired wobble) under 1800 chars — and everything bulky
-rides the preceding line, still machine-readable, never load-bearing
-for tail capture.
+(samples + 15 cold entries) overflowed that window and truncated the
+front carrying "metric"/"value", losing the round's graded headline
+(VERDICT r9 finding #1). The final line is a bounded summary --
+tests/test_cold_floors.py pins its worst-case length under 1800 chars
+-- and everything bulky rides the preceding line, still
+machine-readable, never load-bearing for tail capture.
+
+The scale factor is read from the fixture directory's name: the number
+after a leading ``sf`` (``sf0.1``, ``sf0.1_rg``). A directory whose
+name carries no such number exits 2 before any waiting or Spark work.
 
 Two modes: the default WARM harness below, and ``--cold`` (or
 SPARK_GRAFT_BENCH_COLD=1) -- fresh SparkSession per query, no warmup,
@@ -28,38 +31,50 @@ once, outside the measurement (r3 evidence: dedup_minhash_lsh's first
 timed sample was 2.6x its min purely from cold IO).
 
 The container shares a host whose background load can inflate a single
-run 3-10x (BASELINE.md), so the harness defends the artifact's
-trustworthiness two ways:
+run 3-10x (BASELINE.md), so the harness guards and explains its numbers:
 
 - **pre-flight gate**: before any Spark work (when loadavg still
-  reflects only OTHER tenants -- our own 32-thread run inflates it
-  afterwards), wait up to $SPARK_GRAFT_BENCH_MAX_WAIT seconds
-  (default 600) for load1 to drop below $SPARK_GRAFT_BENCH_LOAD_GATE
-  (default 1.0);
+  reflects only OTHER tenants -- our own run inflates it afterwards),
+  wait up to $SPARK_GRAFT_BENCH_MAX_WAIT seconds (default 600) for the
+  host to go quiet (see _preflight_load);
 - **adaptive repeats**: min-of-2 per query on a quiet host, min-of-3
   when the gate timed out with the host still contended. All samples
-  plus the pre-flight and post-run loadavg are emitted so cross-round
-  comparisons can separate plan regressions from host contention;
-- **contended retry** (VERDICT r15 item 3): if the gate timed out,
-  the full suite runs a SECOND attempt behind a fresh bounded wait;
-  the quieter attempt (uncontended beats contended, then lower suite
-  total) becomes the artifact and the discarded attempt's summary
-  rides the extended line (``attempts``/``discarded_attempt``), so
-  the artifact of record carries its own two-attempt audit trail.
-  Opt out with SPARK_GRAFT_BENCH_CONTENDED_RETRY=0.
+  plus the pre-flight and post-run loadavg are emitted;
+- **executor counters**: each query's timed runs execute under one
+  span of perfbench/spans.py's Tracer, whose job group collects their
+  stages (a stream's micro-batches run under the stream's run id, which
+  is added to the span). After the runs, outside every timed region,
+  the status store's stage totals are read: the extended line carries
+  per query, per timed run, ``executor_cpu_s`` (task-thread CPU),
+  ``executor_run_s`` (task wall time) and ``tasks``; the summary
+  carries ``cpu_share`` = sum of executor CPU / sum of executor run
+  time over the suite.
+
+Reading the counters: wall time up with executor CPU flat and
+``cpu_share`` down means the tasks waited for a core -- the host, not
+the code (measured at sf0.1 on 4 cores with 4 busy-loop neighbours:
+suite value 1.63x in the median, summed executor CPU -3%, cpu_share
+0.69-0.72 -> 0.41). Executor CPU up means the code does more work. The counters see JVM task threads
+only: a task waiting on a Python worker accrues run time but not CPU,
+so compare ``cpu_share`` between runs of the same code, not between
+queries.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+sys.path.insert(1, os.path.join(REPO, "perfbench"))
 
-from etl_upc_syllabus_spark.plans import all_specs
-from etl_upc_syllabus_spark.session import get_spark
+from etl_upc_syllabus_spark.plans import all_specs  # noqa: E402
+from etl_upc_syllabus_spark.session import get_spark  # noqa: E402
+from spans import Tracer  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -79,6 +94,16 @@ HEADLINE = [
     "corpus_curation_pipeline",
 ]
 
+#: stage counters reported per query and timed run on the extended line
+COUNTER_KEYS = ("executor_cpu_s", "executor_run_s", "tasks")
+
+
+def scale_factor(sf_dir: str) -> float | None:
+    """The number after the leading ``sf`` of the fixture directory's
+    name (``sf0.1`` and ``sf0.1_rg`` are both 0.1); None without one."""
+    m = re.match(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
+
 
 def _preflight_load() -> tuple[list[float], bool]:
     """Bounded wait for a quiet host; (loadavg at decision, contended?).
@@ -95,13 +120,12 @@ def _preflight_load() -> tuple[list[float], bool]:
     SPARK_GRAFT_BENCH_LOAD_GATE (load1, default 1.0) and
     SPARK_GRAFT_BENCH_LOAD5_GATE (load5, default 1.0 -- load5 decays
     slowly, so a timed-out wait flags the artifact contended rather
-    than waiting unboundedly, same contract as before).
+    than waiting unboundedly).
 
     Self-exemption (ADVICE r13): load5 carries ~5 minutes of history
     INCLUDING THIS PROCESS'S OWN PREVIOUS INVOCATION, so back-to-back
     bench runs on an otherwise idle host would burn the full max-wait
-    and stamp themselves contended (probe children got exactly this
-    exemption for the same reason). The load5 conjunct is therefore
+    and stamp themselves contended. The load5 conjunct is therefore
     waived once load1 has held below its gate for 6 CONSECUTIVE polls
     (10 s apart: ~60 s of sustained quiet, the BASELINE.md receipt's
     6-poll streak): sustained-quiet load1 is direct evidence the load5
@@ -111,13 +135,8 @@ def _preflight_load() -> tuple[list[float], bool]:
     """
     gate = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_GATE", "1.0"))
     gate5 = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD5_GATE", "1.0"))
-    # default raised 180 -> 600 (VERDICT r15 item 3: two rounds running
-    # the artifact of record stamped itself contended while quiet
-    # windows demonstrably existed within the hour; the official run
-    # should spend minutes waiting rather than ship a contended
-    # number). Child invocations are unaffected -- wobble probes pass
-    # SPARK_GRAFT_BENCH_MAX_WAIT=60 explicitly and run_cold sessions
-    # run in-process with no preflight of their own.
+    # default 600 (VERDICT r15 item 3): the official run should spend
+    # minutes waiting rather than ship a contended number
     max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "600"))
     deadline = time.monotonic() + max_wait
     quiet_streak = 0
@@ -132,50 +151,8 @@ def _preflight_load() -> tuple[list[float], bool]:
         time.sleep(min(10.0, remaining))
 
 
-def _cpu_calibration() -> float:
-    """Fixed single-thread CPU workload (200k chained sha256), timed --
-    an ABSOLUTE host-speed reference stamped into the extended artifact
-    (r13): if a round's suite inflates while this number holds steady,
-    the cause is contention/neighbors; if this inflates too, the host
-    itself got slower (frequency scaling, different machine class).
-    Runs before the SparkSession for the same reason as the preflight.
-    Reference reading on the r13 quiet window: 0.086 s.
-    """
-    import hashlib
-
-    t0 = time.perf_counter()
-    h = b"x"
-    for _ in range(200_000):
-        h = hashlib.sha256(h).digest()
-    return round(time.perf_counter() - t0, 3)
-
-
-def _cpu_calibration_mt() -> float:
-    """Fixed MULTI-core CPU workload: 32 tasks each sha256-hashing
-    64 x 1 MB on a 32-thread pool (hashlib releases the GIL on large
-    buffers, so this genuinely saturates cores). The r13 variance
-    study measured the single-thread calibration FLAT across windows
-    whose suite readings moved 1.35x -- neighbor pressure on a shared
-    host is a multi-core phenomenon, and this is the instrument that
-    sees it: on a free host it reads ~0.2 s (8x the 1-thread wall for
-    the same work); every stolen core inflates it proportionally.
-    Stamped as cpu_cal_mt_sec next to cpu_cal_sec.
-    """
-    import hashlib
-    from concurrent.futures import ThreadPoolExecutor
-
-    buf = b"x" * (1 << 20)
-
-    def one(n: int) -> bytes:
-        h = hashlib.sha256()
-        for _ in range(n):
-            h.update(buf)
-        return h.digest()
-
-    t0 = time.perf_counter()
-    with ThreadPoolExecutor(32) as ex:
-        list(ex.map(one, [64] * 32))
-    return round(time.perf_counter() - t0, 3)
+def _run(spec, spark, sf_dir: str) -> None:
+    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
 def run_cold(names: list[str], sf_dir: str) -> dict[str, float]:
@@ -201,249 +178,99 @@ def run_cold(names: list[str], sf_dir: str) -> dict[str, float]:
         spark = get_spark("bench-cold")
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        _run(specs[name], spark, sf_dir)
         timings[name] = round(time.perf_counter() - t0, 3)
         spark.stop()
     return timings
 
 
-#: a suite reading this far above its recorded floor triggers the
-#: embedded wobble-attribution probe (BASELINE.md protocol)
-WOBBLE_OUTLIER_RATIO = 1.25
-#: independent isolated invocations per probed outlier, and the max
-#: number of outliers probed (worst-ratio first; the rest are listed
-#: un-probed so the artifact still names them)
-WOBBLE_N = 3
-WOBBLE_MAX_QUERIES = 3
+def _stream_run_ids():
+    """A streaming listener keeping every started query's run id: a
+    stream's micro-batch jobs run under that id as their job group."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.run_ids: list[str] = []
+
+        def onQueryStarted(self, event) -> None:  # noqa: N802 -- Spark's callback names
+            self.run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event) -> None:  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event) -> None:  # noqa: N802
+            pass
+
+    return RunIds()
 
 
-def _wobble_outliers(
-    timings: dict[str, float], sf: float, sf_dir: str
-) -> dict[str, object]:
-    """Self-documenting drift attribution (VERDICT r8 item 7): any
-    query whose best-of-N exceeds its TRIGGER floor by >25% gets the
-    wobble protocol embedded in the artifact -- N INDEPENDENT isolated
-    single-query bench invocations (fresh process, own preflight gate,
-    4 warmups for JIT steady state), exactly what tools/wobble.py runs
-    by hand.
-
-    The trigger floor is the RECENT-ERA floor (BENCH_FLOORS.json
-    ``recent_floors``: per-query min over the last 3 round artifacts,
-    regenerated by tools/floors.py) when present, else the all-time
-    ledger floor (``floors``) -- VERDICT r10 item 6: on a host
-    drifting busier, all-time quiet-era records fire the probe on
-    pure era drift (r10 fired 3/15 with zero plan changes). Artifact
-    rows carry each key iff its source has the query (ADVICE r11):
-    ``recorded_floor`` = the all-time ledger entry, ``recent_floor`` =
-    the recent-era entry; ``ratio`` is vs the trigger floor (the
-    number the >1.25x rule actually used).
-
-    Interpretation (refined r10 after measuring the fresh-JVM JIT
-    bias): a probe best that reproduces the recorded floor attributes
-    the suite reading to host noise inside the artifact itself. A
-    probe best well BELOW the suite reading (vs_suite << 1) on a quiet
-    probe means the suite sample was a transient spike. A probe best
-    ~= the suite reading with quiet preflights means the reading is
-    the query's true current cost -- a slower host era or a commit;
-    cross-check the diff. Probe bests retain a residual upward bias
-    vs suite-mode floors (a lone query cannot reuse 14 other queries'
-    codegen warmth), so 'best > recorded_floor' ALONE does not
-    implicate a commit. Disabled with SPARK_GRAFT_BENCH_WOBBLE=0;
-    never runs in single-query child invocations
-    (SPARK_GRAFT_BENCH_QUERIES set) or off the floors' SF.
-    """
-    if os.environ.get("SPARK_GRAFT_BENCH_WOBBLE") == "0":
-        return {}
-    repo = os.path.dirname(os.path.abspath(__file__))
-    # overridable so tests never mutate the committed floors artifact
-    floors_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FLOORS", os.path.join(repo, "BENCH_FLOORS.json")
-    )
-    try:
-        with open(floors_path, encoding="utf-8") as fh:
-            rec = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    if rec.get("sf") != sf:
-        return {}
-    floors = rec.get("floors", {})
-    recent = rec.get("recent_floors", {})
-    # trigger floor: recent era when recorded, else the all-time ledger
-    trigger = {
-        name: recent.get(name, floors.get(name))
-        for name in set(floors) | set(recent)
-    }
-
-    def _row(name: str, ratio: float) -> dict[str, object]:
-        # each key means exactly its source (ADVICE r11): recorded_floor
-        # ONLY when the all-time ledger has the query, recent_floor
-        # ALWAYS when the recent era does -- a recent-only query must
-        # not present its era value under the ledger's key
-        row: dict[str, object] = {"ratio": round(ratio, 2)}
-        if name in floors:
-            row["recorded_floor"] = floors[name]
-        if name in recent:
-            row["recent_floor"] = recent[name]
-        return row
-
-    outliers = sorted(
-        (
-            (name, t / trigger[name])
-            for name, t in timings.items()
-            if trigger.get(name) and t > WOBBLE_OUTLIER_RATIO * trigger[name]
-        ),
-        key=lambda kv: -kv[1],
-    )
-    if not outliers:
-        return {}
-    result: dict[str, object] = {}
-    for name, ratio in outliers[WOBBLE_MAX_QUERIES:]:
-        result[name] = {**_row(name, ratio), "probed": False}
-    # total wall-clock budget across ALL probe invocations: up to 3
-    # outliers x 3 (+1 contended retry) invocations, each with its own
-    # preflight wait and 600 s timeout, could otherwise stall the run
-    # many extra minutes with no stdout — degrade to probed:false with
-    # the reason instead of extending the run unboundedly (ADVICE r9).
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_WOBBLE_BUDGET", "900"))
-    deadline = time.monotonic() + budget
-    for name, ratio in outliers[:WOBBLE_MAX_QUERIES]:
-        if time.monotonic() >= deadline:
-            result[name] = {**_row(name, ratio),
-                            "probed": False, "budget_exhausted": True}
-            continue
-        probe_floors: list[float] = []
-        preflight: list[list[float]] = []
-        probe_contended: list[bool] = []
-        exhausted = False
-        for i in range(WOBBLE_N):
-            if time.monotonic() >= deadline:
-                exhausted = True
-                break
-            print(
-                f"[wobble] probing {name} attempt {i + 1}/{WOBBLE_N}",
-                file=sys.stderr, flush=True,
-            )
-            payload = _probe_invocation(repo, name, sf_dir)
-            if (
-                payload is not None
-                and payload.get("contended")
-                # the retry respects the same budget deadline -- an
-                # unconditional retry could overrun it by a full
-                # invocation (review r10 finding #4)
-                and time.monotonic() < deadline
-            ):
-                # an attribution measured under contention attributes
-                # nothing (VERDICT r9 item 5): retry once, then record
-                # the contended reading flagged rather than silently
-                print(
-                    f"[wobble] {name} attempt {i + 1} was contended; "
-                    "retrying once",
-                    file=sys.stderr, flush=True,
-                )
-                retry = _probe_invocation(repo, name, sf_dir)
-                if retry is not None and not retry.get("contended"):
-                    payload = retry
-            if payload is None:
-                continue
-            probe_floors.append(payload["queries"][name])
-            preflight.append(payload["loadavg_preflight"])
-            probe_contended.append(bool(payload.get("contended")))
-        best = min(probe_floors) if probe_floors else None
-        result[name] = {
-            **_row(name, ratio),
-            "probed": True,
-            "floors": probe_floors,
-            "best": best,
-            "suite_reading": timings[name],
-            # ~1.0 = the suite reading is real (host era or commit);
-            # << 1.0 = the suite sample was a transient spike
-            # ("is not None": a 0.000-rounded best is data, not absence)
-            "vs_suite": (
-                round(best / timings[name], 2) if best is not None else None
-            ),
-            "preflight": preflight,
-            "probe_contended": any(probe_contended),
-            **({"budget_exhausted": True} if exhausted else {}),
+def run_warm(spark, names: list[str], sf_dir: str, n_runs: int):
+    """Warmup + best-of-``n_runs`` per query on one session ->
+    (timings, samples, warmups, counters). The min across runs is a far
+    better estimate of the plan's actual cost than one arbitrary sample
+    on a shared host. Counters are read after each query's runs, not
+    once at the end, so the status store's stage retention cannot drop
+    an early query's stages."""
+    specs = all_specs()
+    tracer = Tracer(spark.sparkContext)
+    streams = _stream_run_ids()
+    spark.streams.addListener(streams)
+    timings: dict[str, float] = {}
+    samples: dict[str, list[float]] = {}
+    warmups: dict[str, float] = {}
+    counters: dict[str, dict[str, float]] = {}
+    for name in names:
+        # untimed warmup at the TARGET SF (JIT + page cache)
+        t0 = time.perf_counter()
+        try:
+            _run(specs[name], spark, sf_dir)
+        except Exception:  # noqa: BLE001 -- a failing query fails in its timed run below
+            pass
+        warmups[name] = round(time.perf_counter() - t0, 3)
+        # onQueryStarted runs synchronously inside start(), so every
+        # run id the warmup started is already recorded here
+        seen = len(streams.run_ids)
+        runs = []
+        with tracer.span(name, "bench") as span:
+            for _ in range(n_runs):
+                t0 = time.perf_counter()
+                _run(specs[name], spark, sf_dir)
+                runs.append(round(time.perf_counter() - t0, 3))
+        samples[name] = runs
+        timings[name] = min(runs)
+        span["extra_groups"] = streams.run_ids[seen:]
+        tracer.attach_stage_counters([span])
+        counters[name] = {
+            k: round(span["counters"][k] / n_runs, 3) for k in COUNTER_KEYS
         }
-    return result
-
-
-def _probe_invocation(repo: str, name: str, sf_dir: str) -> dict | None:
-    """One isolated single-query child bench run; None on any failure
-    (attribution is best-effort and must never fail the suite)."""
-    import subprocess
-
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_BENCH_QUERIES=name,
-        SPARK_GRAFT_BENCH_MAX_WAIT=os.environ.get(
-            "SPARK_GRAFT_BENCH_WOBBLE_MAX_WAIT", "60"
-        ),
-        # probe children keep the load1-only gate: they fire seconds
-        # after our own 32-thread suite, so their load5 is dominated by
-        # SELF-inflicted history -- gating on it would flag every probe
-        # contended for minutes. The probe's attribution is a
-        # within-window comparison (vs_suite) anyway; load1 still
-        # screens instantaneous neighbors.
-        SPARK_GRAFT_BENCH_LOAD5_GATE=os.environ.get(
-            "SPARK_GRAFT_BENCH_WOBBLE_LOAD5_GATE", "1000"
-        ),
-        SPARK_GRAFT_BENCH_COLD="",
-        # fresh-JVM JIT bias correction (see main's n_warm comment):
-        # without extra warmups an isolated probe reads ~2x a
-        # suite-mode floor for sub-second queries, implicating
-        # commits that did nothing
-        SPARK_GRAFT_BENCH_WARMUPS="4",
-    )
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.join(repo, "bench.py")],
-            env=env, cwd=repo, capture_output=True, text=True,
-            timeout=600, check=True,
-        )
-        return json.loads(out.stdout.strip().splitlines()[-1])
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _effective_cal_cores() -> int:
-    """Cores available to the mt calibration, for the cal_contended
-    threshold: the PROCESS AFFINITY (cgroup/taskset pins beat
-    os.cpu_count, review r14), capped at 32 because the workload runs
-    exactly 32 tasks -- its free wall time stops shrinking past 32
-    cores, so the threshold must stop shrinking there too (an uncapped
-    scale would flag every reading on a quiet 64-core host)."""
-    try:
-        cores = len(os.sched_getaffinity(0))
-    except (AttributeError, OSError):
-        cores = os.cpu_count() or 32
-    return max(1, min(32, cores))
+    spark.streams.removeListener(streams)
+    return timings, samples, warmups, counters
 
 
 def build_artifact(
     timings: dict[str, float],
     samples: dict[str, list[float]],
     warmups: dict[str, float],
+    counters: dict[str, dict[str, float]],
     loadavg_preflight: list[float],
     loadavg_post: list[float],
     contended: bool,
     n_runs: int,
     sf: float,
     cold_timings: dict[str, float],
-    wobble: dict[str, object],
-    cpu_cal_sec: float | None = None,
-    cpu_cal_mt_sec: float | None = None,
     cpus: int | None = None,
     parallelism: int | None = None,
 ) -> tuple[dict, dict]:
     """Split the warm-run artifact into (extended, summary) dicts, each
     printed as its own JSON line with summary LAST (see module
     docstring: the consumer tail-captures ~2000 chars and parses the
-    final line, so the final line must stay compact — the summary
-    carries only bounded fields; samples/warmup/cold_queries/
-    wobble_floors ride the extended line). Pure function so the length
-    bound is directly testable."""
+    final line, so the final line must stay compact -- the summary
+    carries only bounded fields; samples/warmup/counters/cold_queries
+    ride the extended line). Pure function so the length bound is
+    directly testable."""
+    cpu_s = sum(c["executor_cpu_s"] for c in counters.values())
+    run_s = sum(c["executor_run_s"] for c in counters.values())
     extended = {
         "metric": "headline_suite_extended",
         "samples": samples,
@@ -451,32 +278,8 @@ def build_artifact(
         "mean_total": round(sum(sum(r) / len(r) for r in samples.values()), 3)
         if samples
         else 0.0,
+        "counters": counters,
         **({"cold_queries": cold_timings} if cold_timings else {}),
-        **({"wobble_floors": wobble} if wobble else {}),
-        # absolute host-speed reference (see _cpu_calibration): rides
-        # the extended line, never the length-capped summary
-        **({"cpu_cal_sec": cpu_cal_sec} if cpu_cal_sec is not None else {}),
-        # cal_contended (r14): the calibration pair's own verdict,
-        # stamped ATOMICALLY with its reading so the artifact
-        # self-flags even when the LOAD gate passed -- measured this
-        # round: preflight load1 0.14 (gate green) while cpu_cal_mt
-        # read 0.764 vs 0.196 free (~3.9x, neighbors stealing cores
-        # mid-suite; suite 35 s vs ~12 s quiet; loadavg is a 1-minute
-        # average and missed the burst the 2-second calibration sat
-        # inside). The threshold is ~1.8x the free reference, SCALED BY
-        # CORE COUNT (review r14: the fixed 2 GB workload's free wall
-        # time is inversely proportional to cores -- 0.196 s on this
-        # 32-thread class; an absolute cutoff would flag every reading
-        # on a smaller host and miss real contention on a bigger one).
-        **(
-            {
-                "cpu_cal_mt_sec": cpu_cal_mt_sec,
-                "cal_contended": cpu_cal_mt_sec
-                > 0.35 * (32 / _effective_cal_cores()),
-            }
-            if cpu_cal_mt_sec is not None
-            else {}
-        ),
     }
     summary = {
         "metric": "headline_suite_total",
@@ -508,20 +311,23 @@ def build_artifact(
             if cold_timings
             else {}
         ),
-        # names only — the full per-probe evidence is on the extended
-        # line; the summary just flags THAT drift attribution fired
-        **({"wobble_outliers": sorted(wobble)} if wobble else {}),
+        **({"cpu_share": round(cpu_s / run_s, 3)} if run_s > 0 else {}),
     }
     return extended, summary
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    sf = scale_factor(sf_dir)
+    if sf is None:
+        print(
+            f"bench.py: no scale factor in fixture directory {sf_dir!r}: "
+            "its name must start with sf<number> (e.g. sf0.1, sf0.1_rg)",
+            file=sys.stderr,
+        )
+        sys.exit(2)
     cold = "--cold" in sys.argv or os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
     loadavg_preflight, contended = _preflight_load()
-    cpu_cal = _cpu_calibration()
-    cpu_cal_mt = _cpu_calibration_mt()
     specs = all_specs()
     # SPARK_GRAFT_BENCH_QUERIES overrides the headline list (comma-
     # separated registry names) -- used by the scale-up smoke to time
@@ -529,6 +335,7 @@ def main() -> None:
     override = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     wanted = [s.strip() for s in override.split(",") if s.strip()] if override else HEADLINE
     names = [n for n in wanted if n in specs]
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     if cold:
         timings = run_cold(names, sf_dir)
@@ -545,114 +352,26 @@ def main() -> None:
                     # --cold pays the process's FIRST JVM + JIT inside
                     # query 1's timing (measured 32.3 s vs embedded
                     # 18.5 s on identical code); stamp the mode so a
-                    # floors/wobble consumer can never silently mix them
+                    # consumer can never silently mix them
                     "cold_mode": "standalone",
                     "loadavg": [round(x, 2) for x in os.getloadavg()],
                     "loadavg_preflight": loadavg_preflight,
                     "contended": contended,
                     "sf": sf,
-                    "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                    "cpu_cal_sec": cpu_cal,
-                    "cpu_cal_mt_sec": cpu_cal_mt,
+                    "cpus": cpus,
                 }
             )
         )
         return
 
-    extended, summary, contended = _suite_attempt(
-        names, specs, sf, sf_dir, override, loadavg_preflight, contended,
-        cpu_cal, cpu_cal_mt,
-    )
-    # Contended-retry (VERDICT r15 item 3): when the preflight gate
-    # timed out, the artifact of record should not settle for a
-    # contended reading if one more bounded wait finds the quiet
-    # window. One full re-attempt (fresh preflight wait, fresh warm +
-    # cold suites); the quieter attempt becomes the artifact and the
-    # discarded one rides the extended line so the two-attempt trail
-    # stays auditable. Opt out with SPARK_GRAFT_BENCH_CONTENDED_RETRY=0
-    # (probe children never retry: they pass an override query list).
-    retry_on = (
-        not override
-        and os.environ.get("SPARK_GRAFT_BENCH_CONTENDED_RETRY", "1") != "0"
-    )
-    if contended and retry_on:
-        loadavg_pre2, contended2 = _preflight_load()
-        cpu_cal2 = _cpu_calibration()
-        cpu_cal_mt2 = _cpu_calibration_mt()
-        extended2, summary2, contended2 = _suite_attempt(
-            names, specs, sf, sf_dir, override, loadavg_pre2, contended2,
-            cpu_cal2, cpu_cal_mt2,
-        )
-        keep_second = (not contended2 and contended) or (
-            contended2 == contended and summary2["value"] < summary["value"]
-        )
-        if keep_second:
-            discarded, (extended, summary) = summary, (extended2, summary2)
-        else:
-            discarded = summary2
-        extended["discarded_attempt"] = {
-            "value": discarded["value"],
-            "contended": discarded.get("contended"),
-            "loadavg_preflight": discarded.get("loadavg_preflight"),
-        }
-        extended["attempts"] = 2
-    print(json.dumps(extended))
-    print(json.dumps(summary))
-
-
-def _suite_attempt(
-    names, specs, sf, sf_dir, override, loadavg_preflight, contended,
-    cpu_cal, cpu_cal_mt,
-):
-    """One full warm+cold suite execution -> (extended, summary,
-    contended). Factored out of main() so the contended-retry protocol
-    can run it twice with independent preflights (VERDICT r15 item 3);
-    the JVM is fully stopped before returning, so two attempts never
-    share JIT/cache state."""
     spark = get_spark("bench")
     # read back from the LIVE context, not the env: this is the proof
     # that local[$SPARK_GRAFT_CPUS] was actually applied (VERDICT r16
     # item 2 -- the driver's low-core scaling run needs the artifact
     # itself to evidence its core count)
     parallelism = spark.sparkContext.defaultParallelism
-
-    # Best-of-N per query (see module docstring): min across runs is a
-    # far better estimate of the plan's actual cost than one arbitrary
-    # sample on a shared host.
     n_runs = 3 if contended else 2
-    timings: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
-    warmups: dict[str, float] = {}
-    # SPARK_GRAFT_BENCH_WARMUPS: untimed warmup executions per query
-    # (default 1). Wobble probe children set 4: a FRESH JVM needs ~4
-    # runs of a sub-second query to reach codegen/JIT steady state
-    # (measured r10: 5.9 -> 1.1 -> 0.8 -> 0.7 -> 0.63 s), so a
-    # 1-warmup isolated probe structurally reads ~2x a suite-mode
-    # floor recorded 15 queries deep into a warm JVM -- attribution
-    # noise, not signal.
-    n_warm = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "1")))
-    for name in names:
-        # untimed warmup(s) at the TARGET SF (JIT + page cache); ONLY
-        # the first is recorded, so the artifact's warmup field keeps
-        # meaning "first-run cold-start cost" regardless of n_warm
-        # (a probe child's 4-warmup sum would be apples-to-oranges
-        # against suite artifacts -- review r10 finding #3)
-        for i in range(n_warm):
-            t0 = time.perf_counter()
-            try:
-                specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
-            if i == 0:
-                warmups[name] = round(time.perf_counter() - t0, 3)
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        samples[name] = runs
-        timings[name] = min(runs)
-
+    timings, samples, warmups, counters = run_warm(spark, names, sf_dir, n_runs)
     # stop the JVM BEFORE printing: Spark's child process shares stdout
     # and can interleave late GC/log lines (observed: a G1 GCLocker
     # warning landing after the JSON at sf10), which breaks any
@@ -661,21 +380,19 @@ def _suite_attempt(
     spark.stop()
     # cold suite alongside warm (VERDICT r8 item 3): both modes are
     # first-class in the official artifact, not just in BASELINE.md
-    # prose. Fresh JVM per query -- adds minutes, so single-query
-    # child invocations and SPARK_GRAFT_BENCH_WITH_COLD=0 skip it.
+    # prose. Fresh JVM per query -- adds minutes, so query-override
+    # invocations and SPARK_GRAFT_BENCH_WITH_COLD=0 skip it.
     with_cold = (
         not override and os.environ.get("SPARK_GRAFT_BENCH_WITH_COLD", "1") != "0"
     )
     cold_timings = run_cold(names, sf_dir) if with_cold else {}
-    wobble = {} if override else _wobble_outliers(timings, sf, sf_dir)
     extended, summary = build_artifact(
-        timings, samples, warmups, loadavg_preflight, list(os.getloadavg()),
-        contended, n_runs, sf, cold_timings, wobble, cpu_cal_sec=cpu_cal,
-        cpu_cal_mt_sec=cpu_cal_mt,
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        parallelism=parallelism,
+        timings, samples, warmups, counters, loadavg_preflight,
+        list(os.getloadavg()), contended, n_runs, sf, cold_timings,
+        cpus=cpus, parallelism=parallelism,
     )
-    return extended, summary, contended
+    print(json.dumps(extended))
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

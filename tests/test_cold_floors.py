@@ -188,107 +188,6 @@ def test_fingerprint_scales_linearly_in_doc_length(spark):
     )
 
 
-# --- wobble-outlier selection (r9: embedded drift attribution) --------------
-
-
-def test_wobble_outlier_selection(tmp_path, monkeypatch):
-    """The embedded wobble probe must fire only for genuine outliers
-    (>1.25x the recorded floor, floors-SF match, not disabled), list
-    beyond-cap outliers un-probed, and stay silent otherwise. Probing
-    itself spawns subprocesses, so selection is tested with the probe
-    cap at 0 -- every selected outlier lands in the un-probed listing."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-
-    floors = {"sf": 0.1, "floors": {"q_a": 1.0, "q_b": 1.0, "q_c": 1.0}}
-    # a TMP floors file via SPARK_GRAFT_BENCH_FLOORS -- the committed
-    # BENCH_FLOORS.json artifact must never be mutated by a test (a
-    # crash mid-test would permanently clobber it with fake floors)
-    floors_file = str(tmp_path / "floors.json")
-    json.dump(floors, open(floors_file, "w"))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_FLOORS", floors_file)
-    monkeypatch.setattr(bench, "WOBBLE_MAX_QUERIES", 0)
-
-    # below threshold: no outliers
-    assert bench._wobble_outliers({"q_a": 1.2, "q_b": 0.9}, 0.1, "x") == {}
-    # SF mismatch: never fires
-    assert bench._wobble_outliers({"q_a": 9.0}, 0.001, "x") == {}
-    # disabled: never fires
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_WOBBLE", "0")
-    assert bench._wobble_outliers({"q_a": 9.0}, 0.1, "x") == {}
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_WOBBLE")
-    # genuine outliers: listed with floor + ratio (un-probed at cap 0),
-    # non-outliers and unknown queries excluded
-    out = bench._wobble_outliers(
-        {"q_a": 2.0, "q_b": 1.2, "q_c": 1.3, "q_unknown": 50.0}, 0.1, "x"
-    )
-    assert set(out) == {"q_a", "q_c"}
-    assert out["q_a"] == {"recorded_floor": 1.0, "ratio": 2.0, "probed": False}
-
-
-def test_wobble_trigger_keys_to_recent_era_floor(tmp_path, monkeypatch):
-    """VERDICT r10 item 6: the >1.25x trigger compares against the
-    RECENT-ERA floor (min over the last 3 round artifacts) so a busier
-    host era does not fire probes on pure drift against all-time
-    quiet-era records; the all-time ledger floor stays in the row as
-    recorded_floor, with recent_floor added when it differs. A query
-    with no recent reading falls back to the ledger."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-
-    floors = {
-        "sf": 0.1,
-        "floors": {"q_a": 1.0, "q_b": 1.0},
-        "recent_floors": {"q_a": 1.6},
-    }
-    floors_file = str(tmp_path / "floors.json")
-    json.dump(floors, open(floors_file, "w"))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_FLOORS", floors_file)
-    monkeypatch.setattr(bench, "WOBBLE_MAX_QUERIES", 0)
-
-    # 1.9x the all-time floor but only 1.19x the recent era: no probe
-    assert bench._wobble_outliers({"q_a": 1.9}, 0.1, "x") == {}
-    # past 1.25x the recent era: fires, ratio is vs the trigger floor,
-    # both floors are in the row
-    out = bench._wobble_outliers({"q_a": 2.1}, 0.1, "x")
-    assert out == {"q_a": {"recorded_floor": 1.0, "recent_floor": 1.6,
-                           "ratio": round(2.1 / 1.6, 2), "probed": False}}
-    # no recent reading: the ledger floor is the trigger, row unchanged
-    out = bench._wobble_outliers({"q_b": 1.3}, 0.1, "x")
-    assert out == {"q_b": {"recorded_floor": 1.0, "ratio": 1.3, "probed": False}}
-
-
-def test_wobble_row_keys_track_their_sources(tmp_path, monkeypatch):
-    """ADVICE r11 (bench.py:192): a query known ONLY to the recent era
-    (no all-time ledger entry -- e.g. a renamed/new headline) must
-    present its value as recent_floor, never under the ledger's
-    recorded_floor key; and recent_floor appears whenever the trigger
-    came from the recent era, even when the two eras compare equal."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-
-    floors = {
-        "sf": 0.1,
-        "floors": {"q_equal": 2.0},
-        "recent_floors": {"q_recent_only": 1.0, "q_equal": 2.0},
-    }
-    floors_file = str(tmp_path / "floors.json")
-    json.dump(floors, open(floors_file, "w"))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_FLOORS", floors_file)
-    monkeypatch.setattr(bench, "WOBBLE_MAX_QUERIES", 0)
-
-    out = bench._wobble_outliers({"q_recent_only": 1.5, "q_equal": 3.0}, 0.1, "x")
-    assert out["q_recent_only"] == {
-        "recent_floor": 1.0, "ratio": 1.5, "probed": False,
-    }
-    assert out["q_equal"] == {
-        "recorded_floor": 2.0, "recent_floor": 2.0, "ratio": 1.5, "probed": False,
-    }
-
-
 # --- artifact emission (r10: the driver tail-captures ~2000 chars) ----------
 
 
@@ -298,9 +197,9 @@ def test_summary_line_fits_tail_window():
     finding #1). The fix splits emission: extended evidence on a
     preceding line, a compact summary LAST. Pin the summary's
     worst-case length — 15 queries with the longest real registry
-    names, 5-figure timings, full cold suite, and every query flagged
-    as a wobble outlier — under 1800 chars with margin, and pin that
-    the bulky keys stay OFF the summary line."""
+    names, 5-figure timings, a full cold suite and cpu_share — under
+    1800 chars with margin, and pin that the bulky keys stay OFF the
+    summary line."""
     import importlib
 
     bench = importlib.import_module("bench")
@@ -311,22 +210,14 @@ def test_summary_line_fits_tail_window():
     samples = {n: [99999.999, 99999.999, 99999.999] for n in names}
     warmups = {n: 99999.999 for n in names}
     cold = {n: 99999.999 for n in names}
-    wobble = {
-        n: {
-            "recorded_floor": 99999.999,
-            "ratio": 99.99,
-            "probed": True,
-            "floors": [99999.999] * 3,
-            "best": 99999.999,
-            "preflight": [[99.99, 99.99, 99.99]] * 3,
-            "probe_contended": True,
-            "budget_exhausted": True,
-        }
+    counters = {
+        n: {"executor_cpu_s": 99999.999, "executor_run_s": 99999.999,
+            "tasks": 99999.999}
         for n in names
     }
     extended, summary = bench.build_artifact(
-        timings, samples, warmups, [99.99, 99.99, 99.99],
-        [99.99, 99.99, 99.99], True, 3, 0.1, cold, wobble,
+        timings, samples, warmups, counters, [99.99, 99.99, 99.99],
+        [99.99, 99.99, 99.99], True, 3, 0.1, cold,
         cpus=32, parallelism=32,
     )
     line = json.dumps(summary)
@@ -335,31 +226,121 @@ def test_summary_line_fits_tail_window():
     # summary so the driver's scaling check can read it from the tail
     assert summary["cpus"] == 32 and summary["parallelism"] == 32
     # the bulky evidence must ride the extended line, never the summary
-    for bulky in ("samples", "warmup", "cold_queries", "wobble_floors"):
+    for bulky in ("samples", "warmup", "counters", "cold_queries"):
         assert bulky not in summary
-        assert bulky in extended or bulky in ("cold_queries", "wobble_floors")
+        assert bulky in extended
     assert extended["samples"] == samples
+    assert extended["counters"] == counters
     assert extended["cold_queries"] == cold
-    assert extended["wobble_floors"] == wobble
     # summary still carries everything the graded tail parse needs
     assert summary["metric"] == "headline_suite_total"
     assert summary["value"] == round(sum(timings.values()), 3)
     assert summary["unit"] == "sec"
     assert summary["queries"] == timings
     assert summary["contended"] is True
+    assert summary["runs_per_query"] == 3
     assert summary["sf"] == 0.1
     assert summary["cold_value"] == round(sum(cold.values()), 3)
-    assert summary["wobble_outliers"] == sorted(names)
+    assert summary["cpu_share"] == 1.0
     # the invocation-mode stamp (VERDICT r12 item 5): a warm suite's
     # embedded cold numbers must never be compared to standalone --cold
     # artifacts (first-JVM JIT lands inside query 1 there)
     assert summary["cold_mode"] == "embedded"
-    # no cold timings -> neither cold key appears
+    # no cold timings -> neither cold key appears; no executor run time
+    # -> no cpu_share
     _, no_cold = bench.build_artifact(
-        timings, samples, warmups, [1.0, 1.0, 1.0],
-        [1.0, 1.0, 1.0], False, 2, 0.1, {}, {},
+        timings, samples, warmups, {}, [1.0, 1.0, 1.0],
+        [1.0, 1.0, 1.0], False, 2, 0.1, {},
     )
     assert "cold_value" not in no_cold and "cold_mode" not in no_cold
+    assert "cpu_share" not in no_cold
+
+
+def test_cpu_share_is_summed_cpu_over_summed_run_time():
+    """cpu_share weights each query by its executor run time: a ratio of
+    sums, not a mean of per-query ratios."""
+    import importlib
+
+    bench = importlib.import_module("bench")
+
+    counters = {
+        "a": {"executor_cpu_s": 3.0, "executor_run_s": 4.0, "tasks": 8},
+        "b": {"executor_cpu_s": 0.0, "executor_run_s": 1.0, "tasks": 1},
+    }
+    _, summary = bench.build_artifact(
+        {"a": 1.0, "b": 1.0}, {"a": [1.0], "b": [1.0]}, {}, counters,
+        [0.1] * 3, [0.1] * 3, False, 2, 0.1, {},
+    )
+    assert summary["cpu_share"] == 0.6
+
+
+def test_scale_factor_reads_the_leading_sf_number():
+    """The fixture directory's name gives the scale factor: the number
+    after a leading ``sf``, so a row-group twin ``sf0.1_rg`` is 0.1."""
+    import importlib
+
+    bench = importlib.import_module("bench")
+
+    assert bench.scale_factor("/data/sf0.1") == 0.1
+    assert bench.scale_factor("/data/sf0.1/") == 0.1
+    assert bench.scale_factor("/data/sf0.1_rg") == 0.1
+    assert bench.scale_factor("scale_data/sf10") == 10.0
+    assert bench.scale_factor("/data/tables") is None
+    assert bench.scale_factor("/data/sf_rg") is None
+
+
+def test_bench_exits_2_on_a_fixture_dir_without_a_scale_factor(tmp_path):
+    """A directory name with no sf<number> stops the bench with exit 2
+    and a message naming the directory, before the pre-flight wait (a
+    10-minute max wait would otherwise come first)."""
+    bad = tmp_path / "tables"
+    bad.mkdir()
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(bad),
+               SPARK_GRAFT_BENCH_MAX_WAIT="600",
+               SPARK_GRAFT_BENCH_LOAD_GATE="-1")
+    # a gate no load can pass: waiting first would outlast the timeout
+    out = subprocess.run(
+        [sys.executable, os.path.join(_REPO, "bench.py")],
+        env=env, cwd=_REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 2, out.stderr[-2000:]
+    assert str(bad) in out.stderr
+    assert out.stdout == ""
+
+
+def test_bench_counters_include_stream_micro_batches():
+    """The warm suite reads each query's executor counters from its own
+    span; a stream's micro-batches run under the stream's run id and
+    must be counted too (counting only the driver thread's jobs gave
+    stream_window_counts a few hundredths of a second of CPU). A
+    subprocess because bench.py stops its session."""
+    queries = ["q1_pricing_summary", "stream_window_counts"]
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=SF_DIR,
+        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_BENCH_MAX_WAIT="5",
+        SPARK_GRAFT_BENCH_WITH_COLD="0",
+        SPARK_GRAFT_BENCH_QUERIES=",".join(queries),
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(_REPO, "bench.py")],
+        env=env, cwd=_REPO, capture_output=True, text=True, timeout=600,
+        check=True,
+    )
+    extended, summary = (json.loads(x) for x in out.stdout.strip().splitlines()[-2:])
+    assert summary["metric"] == "headline_suite_total"
+    assert set(summary["queries"]) == set(queries)
+    counters = extended["counters"]
+    for name in queries:
+        assert counters[name]["executor_cpu_s"] > 0, (name, counters[name])
+        assert counters[name]["executor_run_s"] > 0, (name, counters[name])
+    # the stream runs two micro-batches, each with a 4-partition stateful
+    # stage (run_stream_to_table's shuffle_partitions), on top of the
+    # driver thread's own jobs (4 tasks: measured 15 per run when the
+    # micro-batches are counted, 4 when they are missed)
+    assert counters["stream_window_counts"]["tasks"] >= 4 + 2 * 4, counters
+    assert 0 < summary["cpu_share"] <= 1
 
 
 def test_preflight_gates_on_load5_too(monkeypatch):
@@ -386,82 +367,9 @@ def test_preflight_gates_on_load5_too(monkeypatch):
     assert not contended
 
 
-def test_cpu_calibration_rides_the_extended_line():
-    """The absolute host-speed reference (r13): a fixed single-thread
-    workload whose reading separates 'host slower' from 'neighbors
-    busier' across rounds. Extended line only -- the summary stays
-    inside its tail-capture budget."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-
-    cal = bench._cpu_calibration()
-    assert 0.0 < cal < 30.0  # sane wall-clock for 200k hashes
-    cal_mt = bench._cpu_calibration_mt()
-    assert 0.0 < cal_mt < 60.0  # 2 GB hashed across a 32-thread pool
-
-    extended, summary = bench.build_artifact(
-        {"q": 1.0}, {"q": [1.0]}, {"q": 1.0}, [0.1, 0.1, 0.1],
-        [0.1, 0.1, 0.1], False, 2, 0.1, {}, {},
-        cpu_cal_sec=cal, cpu_cal_mt_sec=cal_mt,
-    )
-    assert extended["cpu_cal_sec"] == cal
-    assert extended["cpu_cal_mt_sec"] == cal_mt
-    assert "cpu_cal_sec" not in summary and "cpu_cal_mt_sec" not in summary
-    # omitted when not measured (pure-function callers)
-    ext2, _ = bench.build_artifact(
-        {"q": 1.0}, {"q": [1.0]}, {"q": 1.0}, [0.1, 0.1, 0.1],
-        [0.1, 0.1, 0.1], False, 2, 0.1, {}, {},
-    )
-    assert "cpu_cal_sec" not in ext2 and "cpu_cal_mt_sec" not in ext2
-
-
-def test_floors_ignore_cold_mode_artifacts(tmp_path):
-    """A standalone --cold artifact also carries a "queries" dict -- of
-    COLD timings. tools/floors.py must never fold those into the warm
-    floors ledger (VERDICT r12 item 5: the consumer filters on mode)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "floors", os.path.join(_REPO, "tools", "floors.py")
-    )
-    floors = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(floors)
-
-    cold_artifact = {
-        "parsed": {
-            "metric": "cold_suite_total",
-            "mode": "cold",
-            "cold_mode": "standalone",
-            "sf": 0.1,
-            "queries": {"q1_pricing_summary": 42.0},
-            "loadavg_preflight": [0.5, 0.5, 0.5],
-        }
-    }
-    p = tmp_path / "BENCH_cold.json"
-    p.write_text(json.dumps(cold_artifact))
-    vals, load = floors._readings(str(p), None)
-    assert vals == {} and load is None
-
-    warm_artifact = {
-        "parsed": {
-            "metric": "headline_suite_total",
-            "sf": 0.1,
-            "queries": {"q1_pricing_summary": 0.8},
-            "loadavg_preflight": [0.5, 0.5, 0.5],
-        }
-    }
-    p2 = tmp_path / "BENCH_warm.json"
-    p2.write_text(json.dumps(warm_artifact))
-    vals2, _ = floors._readings(str(p2), None)
-    assert vals2 == {"q1_pricing_summary": 0.8}
-
-
 def test_headline_registry_and_floors_stay_coherent():
     """Consistency pin: every headline query must exist in the registry
-    (a renamed query would silently vanish from the official artifact)
-    and carry an all-time floor (so the wobble trigger can ever fire
-    for it). Guards the three artifacts' shared vocabulary."""
+    (a renamed query would silently vanish from the official artifact)."""
     import importlib
 
     bench = importlib.import_module("bench")
@@ -471,11 +379,6 @@ def test_headline_registry_and_floors_stay_coherent():
     specs = all_specs()
     missing_in_registry = [n for n in bench.HEADLINE if n not in specs]
     assert not missing_in_registry, missing_in_registry
-
-    with open(os.path.join(_REPO, "BENCH_FLOORS.json"), encoding="utf-8") as fh:
-        floors = json.load(fh)
-    missing_floor = [n for n in bench.HEADLINE if n not in floors.get("floors", {})]
-    assert not missing_floor, missing_floor
 
 
 def test_preflight_waives_load5_after_sustained_quiet_load1(monkeypatch):
@@ -505,36 +408,3 @@ def test_preflight_waives_load5_after_sustained_quiet_load1(monkeypatch):
     _, contended = bench._preflight_load()
     assert not contended
     assert len(sleeps) == 6
-
-
-def test_cal_contended_self_flags_when_the_load_gate_lied(monkeypatch):
-    """r14 measured case: preflight load1 0.14 passed the gate while
-    cpu_cal_mt read 0.764 vs 0.196 free -- the suite was 3x inflated
-    with contended:false. The calibration pair's own verdict is
-    stamped as cal_contended so the artifact self-flags."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-
-    # pin the host class the recorded readings came from (review r14:
-    # the threshold scales with effective cores, so the 32-thread-host
-    # readings below only mean what they meant on 32 cores)
-    monkeypatch.setattr(bench, "_effective_cal_cores", lambda: 32)
-    ext_busy, summ = bench.build_artifact(
-        {"q": 1.0}, {"q": [1.0]}, {"q": 1.0}, [0.14, 1.16, 3.23],
-        [0.1, 0.1, 0.1], False, 2, 0.1, {}, {},
-        cpu_cal_sec=0.114, cpu_cal_mt_sec=0.764,
-    )
-    assert ext_busy["cal_contended"] is True
-    assert "cal_contended" not in summ  # summary stays length-capped
-    ext_free, _ = bench.build_artifact(
-        {"q": 1.0}, {"q": [1.0]}, {"q": 1.0}, [0.1, 0.1, 0.1],
-        [0.1, 0.1, 0.1], False, 2, 0.1, {}, {},
-        cpu_cal_sec=0.086, cpu_cal_mt_sec=0.196,
-    )
-    assert ext_free["cal_contended"] is False
-    ext_nocal, _ = bench.build_artifact(
-        {"q": 1.0}, {"q": [1.0]}, {"q": 1.0}, [0.1, 0.1, 0.1],
-        [0.1, 0.1, 0.1], False, 2, 0.1, {}, {},
-    )
-    assert "cal_contended" not in ext_nocal
