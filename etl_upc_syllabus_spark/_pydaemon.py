@@ -3,15 +3,18 @@
 Spark starts it as ``python -m etl_upc_syllabus_spark._pydaemon
 pyspark.worker`` (``spark.python.daemon.module``) and forks every Python
 worker from it. Before the first fork it imports, once, the modules
-every task needs: the stock daemon and its worker, the Arrow/pandas
-serializers, the package (whose ``__init__`` installs the zipimport
-fix) and the JSON sinks. pyspark.zip ships no bytecode, so each process
-that imports pyspark from it compiles it from source; forked workers
-inherit the compiled modules instead. pandas and pyarrow stay out:
-importing pyarrow starts jemalloc's background thread, and forking a
-multi-threaded process is unsafe. The heap is then frozen, so the
-daemon's per-task ``gc.collect()`` in each worker neither walks nor
-copies the inherited objects.
+every task needs: the stock daemon and its worker, pandas, pyarrow,
+the Arrow/pandas serializers, the package (whose ``__init__`` installs
+the zipimport fix), the document pipeline's decode/parse stage and the
+JSON sinks. pyspark.zip ships no bytecode, so each process that imports
+pyspark from it compiles it from source; forked workers inherit the
+compiled modules instead, which saves each worker 0.5-0.7 CPU-s of
+pandas and pyarrow imports. Importing pyarrow starts jemalloc's
+background thread unless ``JE_ARROW_MALLOC_CONF`` turns it off, and
+forking a multi-threaded process is unsafe, so the daemon sets it
+before the import (workers inherit it; jemalloc then purges inline).
+The heap is then frozen, so the daemon's per-task ``gc.collect()`` in
+each worker neither walks nor copies the inherited objects.
 """
 
 from __future__ import annotations
@@ -47,10 +50,14 @@ def main() -> None:
     import pyspark.daemon
 
     stock = os_threads()
+    os.environ["JE_ARROW_MALLOC_CONF"] = "background_thread:false"
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
     import pyspark.sql.pandas.serializers  # noqa: F401
     import pyspark.sql.pandas.types  # noqa: F401
     import pyspark.sql.pandas.utils  # noqa: F401
 
+    import etl_upc_syllabus_spark.pipeline.assemble  # noqa: F401
     import etl_upc_syllabus_spark.pipeline.sinks  # noqa: F401
 
     require_no_new_threads(stock)

@@ -12,6 +12,35 @@ Python workers fork from the engine's own daemon
 needs once, before the first fork. The daemon module is a launch-time
 setting: it applies to sessions ``get_spark`` builds, not to a session
 the driver built and passed in (see :func:`tune`).
+
+The driver JVM ``get_spark`` launches runs one start-up JIT policy,
+:data:`JIT_POLICY`: HotSpot's tier-4 (C2) thresholds at three times the
+JDK 17 defaults. C1 still compiles everything early; C2 waits for
+methods and loops that stay hot. A short-lived session cannot amortize
+C2's work the way a long-lived server does: with the default thresholds
+C2 threads burned at least 3.8 of the 15.3 CPU-s of set-up and 8.2 of
+the 30.9 CPU-s of the document CLI's cold pass on a 4-core host, and
+2-4 of every 5-8 CPU-s of a steady pass that loads almost no new
+classes and compiles no Janino code. The factor is a trade between
+start-up and warm speed, measured on that host (perfbench and sf0.1
+``bench.py``, order-balanced parent/policy pairs, medians):
+
+- x3: ``first_pass_cpu_s`` -14% on ``doc_etl`` and -12% on
+  ``registry_mix``, ``setup_s`` -25% on both (10 pairs each); the warm
+  ``bench.py`` value 14.30 -> 13.55 s and its executor CPU per timed
+  run 7.34 -> 7.14 s (8 pairs).
+- x10: ``first_pass_cpu_s`` -29% on ``doc_etl``, but one warm-up run no
+  longer brought the hot code to C2: ``bench.py``'s warm queries used
+  12-29% more executor CPU and its value rose in 3 of 3 pairs.
+- C1 only (``-XX:TieredStopAtLevel=1``): cheaper still to start, and the
+  warm ``bench.py`` suite 46% slower.
+
+The policy is set as ``spark.driver.defaultJavaOptions``, which Spark
+puts before ``spark.driver.extraJavaOptions``, so
+``--driver-java-options`` given in ``PYSPARK_SUBMIT_ARGS`` still apply;
+it replaces any ``spark.driver.defaultJavaOptions`` from
+``spark-defaults.conf``. Like the daemon module it is a launch-time
+setting, so a session the driver built keeps its own JIT.
 """
 
 from __future__ import annotations
@@ -26,6 +55,11 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the directory holding the package: the daemon is started by module
 # name, from whatever directory the driver runs in
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# JDK 17's tier-4 thresholds (5000, 600, 15000, 40000) times three
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
+)
 
 
 def _verify_checksums_enabled(env_value: str | None) -> bool:
@@ -60,6 +94,7 @@ def get_spark(app_name: str = "etl_upc_syllabus_spark", cpus: int | None = None)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "etl_upc_syllabus_spark._pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)

@@ -62,11 +62,11 @@ def python_daemons():
 """
 
 
-def _run_fresh_session(script: str, cwd, *args: str):
+def _run_fresh_session(script: str, cwd, *args: str, env: dict[str, str] | None = None):
     """Run ``script`` after _FRESH_SESSION in a new interpreter started in
     ``cwd``, with the repo on sys.path the way conftest puts it there
-    (not on PYTHONPATH)."""
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    (not on PYTHONPATH), and ``env`` added to the environment."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"} | (env or {})
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     prelude = f"import sys; sys.path.insert(0, {_REPO!r})\n"
     proc = subprocess.run(
