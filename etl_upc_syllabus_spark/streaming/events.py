@@ -464,8 +464,8 @@ def run_stream_to_table(
     (the sentinel-flush design, _staged_flush_dir), so the extra
     empty batches the scheduler would interleave are pure drain
     latency here -- a production query that wants eager watermark-only
-    emission should leave them on. Both keys are restored as found: a
-    key that was unset before the drain is unset again after it.
+    emission should leave them on. Every key set here is restored as
+    found: a key that was unset before the drain is unset again after it.
     """
     spark = stream_df.sparkSession
     name = f"strm_out_{next(_MEMSINK_IDS)}"
@@ -488,6 +488,13 @@ def run_stream_to_table(
     overrides = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        # without Hadoop's native library the default FileContext manager
+        # forks `readlink` twice per checkpoint rename (448 forks per
+        # registry_mix run); the checkpoint is disposable, so the plain
+        # FileSystem manager's non-atomic overwrite is enough
+        "spark.sql.streaming.checkpointFileManagerClass":
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
     }
     try:
         with conf_overrides(spark, overrides):

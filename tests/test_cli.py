@@ -62,15 +62,17 @@ def python_daemons():
 """
 
 
-def _run_fresh_session(script: str, cwd, *args: str, env: dict[str, str] | None = None):
+def _run_fresh_session(script: str, cwd, *args: str, env: dict[str, str] | None = None,
+                       before: str = ""):
     """Run ``script`` after _FRESH_SESSION in a new interpreter started in
     ``cwd``, with the repo on sys.path the way conftest puts it there
-    (not on PYTHONPATH), and ``env`` added to the environment."""
+    (not on PYTHONPATH), and ``env`` added to the environment; ``before``
+    runs ahead of the session's start."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"} | (env or {})
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     prelude = f"import sys; sys.path.insert(0, {_REPO!r})\n"
     proc = subprocess.run(
-        [sys.executable, "-c", prelude + _FRESH_SESSION + script, *args],
+        [sys.executable, "-c", prelude + before + _FRESH_SESSION + script, *args],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]

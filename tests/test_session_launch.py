@@ -1,12 +1,20 @@
 """Launch-time settings of the sessions ``session.get_spark`` builds: the
-driver JVM's start-up JIT policy and what the Python daemon loads before
-it forks a worker."""
+driver JVM's start-up JIT policy, its class-data archive and what the
+Python daemon loads before it forks a worker."""
 
 from __future__ import annotations
 
+import os
+import shutil
+import subprocess
+import sys
+import zipfile
+
+import pytest
+
 from etl_upc_syllabus_spark.session import JIT_POLICY
 
-from .test_cli import _run_fresh_session
+from .test_cli import _REPO, _run_fresh_session, _small_corpus
 
 
 def _policy() -> dict[str, str]:
@@ -64,3 +72,146 @@ def test_workers_fork_from_a_daemon_with_pandas_and_pyarrow_loaded(spark):
     assert module == "etl_upc_syllabus_spark._pydaemon"
     assert pandas_loaded and arrow_loaded
     assert "jemalloc_bg_thd" not in threads
+
+
+def _archive_dir(path) -> str:
+    """Code that points the fresh session's archive at ``path``."""
+    return f"import etl_upc_syllabus_spark._cds as _cds; _cds.ARCHIVE_DIR = {str(path)!r}\n"
+
+
+# what the fresh session maps from its archive dir, the query result, and
+# the conf it ran with
+_ARCHIVE_PROBE = """
+from pyspark import SparkContext
+with open(f"/proc/{SparkContext._gateway.proc.pid}/maps") as fh:
+    mapped = {line.split()[-1] for line in fh if line.rstrip().endswith(".jsa")}
+print(json.dumps({
+    "mapped": sorted(os.path.basename(p) for p in mapped
+                     if os.path.dirname(p) == _cds.ARCHIVE_DIR),
+    "sum": spark.range(1000).selectExpr("sum(id * id)").first()[0],
+    "conf_dir": os.environ.get("SPARK_CONF_DIR"),
+    "probe": spark.sparkContext.getConf().get("spark.graft.probe", None),
+}))
+"""
+_SUM = sum(i * i for i in range(1000))
+
+
+def _probe(tmp_path, archive_dir, env=None) -> dict:
+    return _run_fresh_session(_ARCHIVE_PROBE, tmp_path, env=env, before=_archive_dir(archive_dir))
+
+
+@pytest.fixture(scope="module")
+def recorded(tmp_path_factory):
+    """(archive dir, archive name, probe): a first session that found no
+    archive and recorded one. The archive (100-200 MB) is deleted after
+    the module, as are the ones the tests below record."""
+    archive_dir = tmp_path_factory.mktemp("cds")
+    got = _probe(tmp_path_factory.mktemp("first"), archive_dir)
+    [jsa] = [n for n in os.listdir(archive_dir) if n.endswith(".jsa")]
+    yield archive_dir, jsa, got
+    shutil.rmtree(archive_dir)
+
+
+def test_second_session_maps_the_archive_the_first_recorded(recorded, tmp_path):
+    archive_dir, jsa, first = recorded
+    key = jsa.removesuffix(".jsa")
+    # the recording JVM maps no archive of ours; it left the archive, its
+    # size and the empty conf dir, and no lock or part-written dump
+    assert first == {"mapped": [], "sum": _SUM, "conf_dir": os.environ.get("SPARK_CONF_DIR"),
+                     "probe": None}
+    assert sorted(os.listdir(archive_dir)) == sorted(["conf", jsa, f"{key}.size"])
+    assert os.listdir(archive_dir / "conf") == []
+
+    assert _probe(tmp_path, archive_dir) == first | {"mapped": [jsa]}
+
+
+def _truncated(tmp_path, archive_dir, jsa, _env):
+    copy = tmp_path / "cds"
+    shutil.copytree(archive_dir, copy)
+    os.chmod(copy / jsa, 0o644)
+    with open(copy / jsa, "r+b") as fh:
+        fh.truncate(os.path.getsize(copy / jsa) // 2)
+    return copy
+
+
+def _class_path(tmp_path, archive_dir, _jsa, env):
+    with zipfile.ZipFile(tmp_path / "extra.jar", "w") as jar:
+        jar.writestr("graft/probe.txt", "1")
+    env["PYSPARK_SUBMIT_ARGS"] = f"--driver-class-path {tmp_path / 'extra.jar'} pyspark-shell"
+    return archive_dir
+
+
+def _real_conf_dir(tmp_path, archive_dir, _jsa, env):
+    (tmp_path / "conf").mkdir()
+    (tmp_path / "conf" / "spark-defaults.conf").write_text("spark.graft.probe  from-defaults\n")
+    env["SPARK_CONF_DIR"] = str(tmp_path / "conf")
+    return archive_dir
+
+
+@pytest.mark.parametrize("damage", [_truncated, _class_path, _real_conf_dir],
+                         ids=["truncated_archive", "changed_class_path", "real_conf_dir"])
+def test_session_starts_without_an_archive_it_cannot_use(recorded, tmp_path, damage):
+    """Each of these launches maps no archive and runs the query right: a
+    JVM handed a truncated archive dies of SIGBUS, one with another class
+    path ignores it, and a conf dir with real files must stay the one
+    Spark reads."""
+    archive_dir, jsa, _ = recorded
+    env = {}
+    archive_dir = damage(tmp_path, archive_dir, jsa, env)
+    got = _probe(tmp_path, archive_dir, env)
+    assert got["mapped"] == [] and got["sum"] == _SUM
+    assert got["conf_dir"] == env.get("SPARK_CONF_DIR", os.environ.get("SPARK_CONF_DIR"))
+    if damage is _real_conf_dir:
+        assert got["probe"] == "from-defaults"
+    # the truncated archive was recorded again; the others stay as found
+    key = jsa.removesuffix(".jsa")
+    with open(archive_dir / f"{key}.size") as fh:
+        assert os.path.getsize(archive_dir / jsa) == int(fh.read())
+    assert sorted(os.listdir(archive_dir)) == sorted(["conf", jsa, f"{key}.size"])
+    if damage is _truncated:
+        shutil.rmtree(archive_dir)
+
+
+def test_recording_on_another_class_path_is_discarded(tmp_path):
+    """A recording JVM whose class path is not the one its key stands for
+    would leave an archive that every default launch ignores: its dump
+    is dropped, and the next default session records again."""
+    env = {}
+    archive_dir = _class_path(tmp_path, tmp_path / "cds", None, env)
+    got = _probe(tmp_path, archive_dir, env)
+    assert got["mapped"] == [] and got["sum"] == _SUM
+    assert os.listdir(archive_dir) == ["conf"]
+
+
+def test_cli_recording_an_archive_prints_only_its_own_lines(tmp_path):
+    """``python -m etl_upc_syllabus_spark`` in a checkout with no archive
+    records one: its output is the CLI's lines and no JVM logging about
+    the archive, and no JVM outlives it."""
+    raw = tmp_path / "raw"
+    _small_corpus(raw)
+    archive_dir = tmp_path / "cds"
+    pid_file = tmp_path / "jvm.pid"
+    script = (
+        f"import sys; sys.path.insert(0, {_REPO!r})\n" + _archive_dir(archive_dir)
+        + "import atexit, runpy\n"
+        "def jvm_pid():\n"
+        "    from pyspark import SparkContext\n"
+        f"    open({str(pid_file)!r}, 'w').write(str(SparkContext._gateway.proc.pid))\n"
+        "atexit.register(jvm_pid)\n"
+        "runpy.run_module('etl_upc_syllabus_spark', run_name='__main__', alter_sys=True)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(raw), str(tmp_path / "data")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout == (
+        "Processed 2 courses successfully\n"
+        "Quarantined 1 unparseable documents (see quarantine.json)\n"
+    )
+    assert "[cds" not in proc.stderr and "[warning]" not in proc.stderr
+    assert not os.path.exists(f"/proc/{pid_file.read_text()}")
+    assert [n for n in os.listdir(archive_dir) if n.endswith(".jsa")]
+    shutil.rmtree(archive_dir)
