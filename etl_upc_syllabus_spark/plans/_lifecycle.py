@@ -13,20 +13,12 @@ so even a failed materialization cannot leak them.
 Use this for results that are small relative to the cached inputs
 (pair lists, per-doc scalars, recall tables).
 
-DOCUMENTED EXCEPTION LIST -- plan functions that keep plain persist
-because warm-cache reuse across repeated invocations is deliberate
-(CacheManager dedupes canonically-equal plans into one shared entry,
-so bench/registry re-runs reuse one warm cache instead of recomputing
-per run):
-
-- ``dedup_queries.dedup_minhash_lsh`` (the bench HEADLINE query; its
-  shingle/pair caches are the warm state every headline bench run
-  deliberately shares).
-
-Every other plan function that persists corpus-sized intermediates
-must route them through :func:`release_after_materialize`
-(``dedup_pipeline_e2e`` was moved onto the contract in r8; the
-``_build_*`` companions release via their registry-fn callers).
+The rule has no exceptions: every plan function that persists
+corpus-sized intermediates routes them through
+:func:`release_after_materialize`, so no registry query leaves a cached
+plan behind and no later call (a benchmark's timed run included)
+reuses an earlier call's work. The ``_build_*`` companions hand their
+caches back to the registry fn that calls them, which releases them.
 """
 
 from __future__ import annotations

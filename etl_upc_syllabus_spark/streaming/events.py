@@ -210,7 +210,9 @@ def read_events_stream(
 
 
 def _staged_flush_dir(sf_dir: str) -> str:
-    """Stage the events fixture next to two far-future sentinel files.
+    """Stage one drain: the events fixture next to two far-future
+    sentinel files, in a fresh :func:`ephemeral_dir` the caller deletes
+    once the drain has finished.
 
     Append-mode windowed aggregation only emits a window once the
     watermark passes its end; on a finite stream the trailing windows
@@ -224,42 +226,23 @@ def _staged_flush_dir(sf_dir: str) -> str:
     processAllAvailable() returns -- emits them all deterministically
     (no reliance on the async no-data micro-batch).
 
-    The directory is content-keyed by fixture path+size+mtime and
-    reused across calls.
+    Each data file is a symlink (``events_{i:05d}.parquet``) to the
+    fixture's file: Hadoop's local listing follows it and reports the
+    target's length and mtime, so nothing is copied. The sentinels are
+    dated 1 s and 2 s after the newest data file, never relative to the
+    clock, so a fixture written a moment ago still sorts ahead of
+    sentinel 1.
     """
-    import hashlib
+    import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "events.parquet")
     files = _data_files(src)  # single file, or a directory's part files
     kind = events_ts_kind(src)
-    # content key must be process-stable (builtin hash() is salted per
-    # interpreter, which would defeat cross-run staging reuse). mtime is
-    # part of the key so a regenerated fixture of identical size does
-    # not silently reuse a stale staged copy; the ts kind + a format
-    # version are included so a code change or a fixture that switched
-    # physical types never reuses a stage with mismatched sentinels.
-    stats = [os.stat(f) for f in files]
-    sizes = sum(s.st_size for s in stats)
-    mtime = max(s.st_mtime_ns for s in stats)
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}|{len(files)}|{sizes}|{mtime}|v4|{kind}".encode()
-    ).hexdigest()[:16]
-    stage = os.path.join(tempfile.gettempdir(), "etl_upc_stream_stage", key)
-    marker = os.path.join(stage, "_READY")
-    if not os.path.exists(marker):
-        import pyarrow.parquet as pq
-
-        os.makedirs(stage, exist_ok=True)
-        now = None
+    stage = ephemeral_dir("etl_upc_stage_")
+    try:
         for i, f in enumerate(files):
-            dst = os.path.join(stage, f"events_{i:05d}.parquet")
-            shutil.copyfile(f, dst)
-            now = now if now is not None else os.path.getmtime(dst)
-            # ascending sub-second mtimes keep the data files ordered
-            # and strictly older than every sentinel (sentinels start
-            # at now-40; 1 ms per file stays clear up to ~20k files)
-            t = now - 60 + i * 1e-3
-            os.utime(dst, (t, t))
+            os.symlink(os.path.abspath(f), os.path.join(stage, f"events_{i:05d}.parquet"))
+        newest = max(os.path.getmtime(f) for f in files)
         # exactly two sentinels: the drain harness batches ALL data
         # files + sentinel 1 together (see _run_flushed_window_stream),
         # so sentinel 2 is always the trailing data batch that carries
@@ -267,54 +250,11 @@ def _staged_flush_dir(sf_dir: str) -> str:
         for i, ts_s in enumerate(_SENTINEL_TS_S):
             path = os.path.join(stage, f"zz_sentinel_{i}.parquet")
             pq.write_table(sentinel_row_table(kind, i, ts_s), path)
-            os.utime(path, (now - 40 + 20 * i, now - 40 + 20 * i))
-        with open(marker, "w") as f:
-            f.write("ok")
-        _gc_stale_stages(os.path.dirname(stage), keep=stage)
-    else:
-        # reuse path: refresh the marker so an ACTIVELY reused stage
-        # never ages past the GC cutoff -- without this, a stage for a
-        # fixture unchanged for > _STAGE_GC_SECONDS stays the live
-        # stage yet staging any other fixture would rmtree it (worst
-        # case racing a concurrently running stream reading its files)
-        try:
-            os.utime(marker)
-        except OSError:
-            pass  # best-effort, like the GC itself
+            os.utime(path, (newest + 1 + i, newest + 1 + i))
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
     return stage
-
-
-#: staged copies older than this are reclaimed on the next staging
-_STAGE_GC_SECONDS = 7 * 24 * 3600
-
-
-def _gc_stale_stages(root: str, keep: str) -> None:
-    """Reclaim content-keyed stage dirs whose fixture changed long ago.
-
-    Every fixture regeneration mints a new content key, so without GC
-    the stage root accumulates one full events copy per generation
-    forever (196 MB each at sf10). Only dirs with a _READY marker
-    untouched for _STAGE_GC_SECONDS are removed -- a marker that old
-    cannot belong to a concurrently-starting stream, and an unfinished
-    (markerless) sibling is never touched. Best-effort: GC failure
-    must never fail the staging that triggered it."""
-    import time
-
-    cutoff = time.time() - _STAGE_GC_SECONDS
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for name in entries:
-        path = os.path.join(root, name)
-        if path == keep:
-            continue
-        marker = os.path.join(path, "_READY")
-        try:
-            if os.path.exists(marker) and os.path.getmtime(marker) < cutoff:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            continue
 
 
 def events_ts_array(kind: str, epoch_seconds: list[int]):
@@ -409,14 +349,19 @@ def _run_flushed_window_stream(spark: SparkSession, sf_dir: str, agg_fn) -> Data
     8-part repartitioned events table lost rows under the old
     2-file-per-batch pairing while producing the same window count).
     A live stream wants exactly that late-drop semantics; a bounded
-    fixture drain compared against a batch oracle does not.
+    fixture drain compared against a batch oracle does not. The stage
+    is deleted once the drain has finished.
     """
     stage = _staged_flush_dir(sf_dir)
-    n_data = sum(1 for f in os.listdir(stage) if f.startswith("events_"))
-    stream = read_events_stream(
-        spark, stage, glob="*.parquet", max_files_per_trigger=n_data + 1
-    )
-    out = run_stream_to_table(agg_fn(stream), "append")
+    try:
+        n_data = sum(1 for f in os.listdir(stage) if f.startswith("events_"))
+        stream = read_events_stream(
+            spark, stage, glob="*.parquet", max_files_per_trigger=n_data + 1
+        )
+        out = run_stream_to_table(agg_fn(stream), "append")
+    finally:
+        # the memory sink already holds the rows
+        shutil.rmtree(stage, ignore_errors=True)
     return out.filter(F.col("event_type") != SENTINEL_TYPE)
 
 
@@ -466,6 +411,10 @@ def run_stream_to_table(
     latency here -- a production query that wants eager watermark-only
     emission should leave them on. Every key set here is restored as
     found: a key that was unset before the drain is unset again after it.
+
+    The sink's temp view is dropped before this returns: the returned
+    DataFrame was analyzed against the sink while the view existed, so
+    it still reads the sink's rows, and the session keeps no view.
     """
     spark = stream_df.sparkSession
     name = f"strm_out_{next(_MEMSINK_IDS)}"
@@ -509,9 +458,10 @@ def run_stream_to_table(
                 q.processAllAvailable()
             finally:
                 q.stop()
+        return spark.table(name)
     finally:
+        spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
 
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,17 +471,6 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted as windows close, so state size is bounded by the watermark
     horizon at any corpus scale)."""
     return _run_flushed_window_stream(spark, sf_dir, windowed_counts)
-
-
-def stream_windowed_counts_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Complete-mode variant for the memory-sink test harness only:
-    re-emits every window each batch and retains all windows in state
-    forever -- convenient for draining a bounded fixture, a
-    scale-killer on a live stream. Production shape is
-    stream_windowed_counts."""
-    return run_stream_to_table(
-        windowed_counts(read_events_stream(spark, sf_dir), watermark=None), "complete"
-    )
 
 
 def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -302,42 +302,47 @@ def test_registry_sorts_broken_latest_first(tmp_path):
     assert all(rounds[k] > 0 for k in order[len(tier0):])
 
 
-def test_stage_gc_reclaims_only_old_completed_stages(tmp_path):
-    """The staging GC removes only sibling stages whose _READY marker
-    is older than the horizon; fresh stages and unfinished
-    (markerless) ones survive."""
-    import time
+def test_window_drain_on_fresh_fixture_leaves_no_stage(spark, tmp_path, monkeypatch):
+    """A watermark-flushed drain over a fixture written a moment before
+    it returns the oracle's windows, and leaves no stage behind.
 
-    root = tmp_path / "stage_root"
-    old, fresh, unfinished = root / "aaa", root / "bbb", root / "ccc"
-    for d in (old, fresh, unfinished):
-        os.makedirs(d)
-        (d / "events_00000.parquet").write_bytes(b"x")
-    for d in (old, fresh):
-        (d / "_READY").write_text("ok")
-    t = time.time() - ev._STAGE_GC_SECONDS - 60
-    os.utime(old / "_READY", (t, t))
-    ev._gc_stale_stages(str(root), keep=str(root / "keepme"))
-    assert not old.exists()
-    assert fresh.exists() and unfinished.exists()
+    The sentinels are dated after the newest data file, so a fixture
+    this fresh still sorts ahead of sentinel 1 (the file source orders
+    by the mtime Hadoop reports, the symlink target's). The order is
+    checked on the stage itself: a drain with the data one batch late
+    still returns the right rows, because late rows are dropped against
+    the previous batch's watermark. The stage is deleted once the drain
+    has finished, so no later drain can reuse it."""
+    import shutil
+    import tempfile
 
+    import duckdb
 
-def test_stage_reuse_refreshes_gc_marker(tmp_path):
-    """Reusing a staged copy must touch its _READY marker (ADVICE r8):
-    a fixture unchanged for > _STAGE_GC_SECONDS is still the LIVE
-    stage, but with a stale marker any staging of another fixture
-    would rmtree it -- worst case under a concurrently running stream
-    reading those files. The reuse path re-dates the marker so an
-    actively reused stage never crosses the GC cutoff."""
-    import time
+    from etl_upc_syllabus_spark.plans import all_specs
 
+    from .oracle_harness import compare
+
+    tmp_root, ckpt_root = tmp_path / "tmp", tmp_path / "ckpt"
+    tmp_root.mkdir()
+    ckpt_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_root))
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_DIR", str(ckpt_root))
     d = str(tmp_path / "fix")
-    _write_fixture(d, "micros")
+    path = _write_fixture(d, "micros")  # dated now: the sentinels must still sort after it
     stage = ev._staged_flush_dir(d)
-    marker = os.path.join(stage, "_READY")
-    t = time.time() - ev._STAGE_GC_SECONDS - 60
-    os.utime(marker, (t, t))
-    assert ev._staged_flush_dir(d) == stage  # same content key -> reuse
-    assert time.time() - os.path.getmtime(marker) < 3600, (
-        "reuse did not refresh the GC marker"
-    )
+    try:
+        mtime = {n: os.path.getmtime(os.path.join(stage, n)) for n in os.listdir(stage)}
+    finally:
+        shutil.rmtree(stage)
+    assert mtime["events_00000.parquet"] < mtime["zz_sentinel_0.parquet"] < mtime[
+        "zz_sentinel_1.parquet"
+    ]
+
+    spec = all_specs()["stream_window_counts"]
+    got = spec.fn(spark, d)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    want = con.execute(spec.oracle).fetchdf()
+    assert len(want) > 0
+    compare(got, want, spec.name)
+    assert os.listdir(tmp_root) == [] and os.listdir(ckpt_root) == []

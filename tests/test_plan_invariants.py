@@ -40,7 +40,7 @@ def _rows(spark, sf_dir, name):
 
 
 def _live_plan(spark, sf_dir, name):
-    """Formatted plan BEFORE any lifecycle localCheckpoint.
+    """(tree, formatted) plan BEFORE any lifecycle localCheckpoint.
 
     The release-after-materialize queries return checkpoint-backed
     DataFrames whose executed plan is a bare Scan ExistingRDD -- a
@@ -53,16 +53,15 @@ def _live_plan(spark, sf_dir, name):
     builders = {
         "dedup_containment": dq._build_dedup_containment,
         "dedup_lsh_recall": dq._build_dedup_lsh_recall,
+        "dedup_minhash_lsh": dq._build_dedup_minhash_lsh,
         "dedup_pipeline_e2e": dq._build_dedup_pipeline_verified,
         "text_ngram_novelty": tq._build_text_ngram_novelty,
     }
     if name not in builders:
-        _, formatted = _rows(spark, sf_dir, name)
-        return formatted
+        return plan_of(all_specs()[name].fn(spark, sf_dir))
     result, *caches = builders[name](spark, sf_dir)
     try:
-        _, formatted = plan_of(result)
-        return formatted
+        return plan_of(result)
     finally:
         for c in caches:
             c.unpersist()
@@ -111,7 +110,7 @@ def test_dedup_never_shuffles_text(spark, sf_dir, name):
     are inspected through their _build_* pre-checkpoint plans, and the
     assertion requires a NON-EMPTY exchange list for the multi-stage
     pipelines so a checkpoint-masked plan can't pass vacuously."""
-    formatted = _live_plan(spark, sf_dir, name)
+    _, formatted = _live_plan(spark, sf_dir, name)
     bodies = _exchange_bodies(formatted)
     if name in ("dedup_minhash_lsh", "dedup_containment", "dedup_lsh_recall",
                 "text_ngram_novelty", "dedup_incremental_batch",
@@ -135,9 +134,12 @@ def test_minhash_lsh_shuffle_budget(spark, sf_dir):
     """dedup_minhash_lsh's full pipeline runs 5 unique exchanges
     (band self-join + candidate verification; PLANS.md). A higher
     count means a regression re-introduced the r4-era explode/groupBy
-    round-trips of corpus-sized intermediates."""
-    row, _ = _rows(spark, sf_dir, "dedup_minhash_lsh")
-    assert row["shuffles"] <= 5, row
+    round-trips of corpus-sized intermediates. Counted on the live
+    plan: the registry fn returns a checkpoint scan with 0 exchanges,
+    which would pass any budget."""
+    row = audit_row("dedup_minhash_lsh", *_live_plan(spark, sf_dir, "dedup_minhash_lsh"))
+    assert row["counted_by"] == "node_id", row
+    assert 0 < row["shuffles"] <= 5, row
 
 
 # --- top-k must never global-sort ------------------------------------------

@@ -14,10 +14,12 @@ driver's value hash). Prints one line per query plus a summary. No
 arguments, an unknown flag or a name not in the registry prints the
 usage line and exits 2 before any Spark session starts.
 
-The session conf is snapshotted around each query and restored after
-it; a query that leaves keys added or changed gets them listed on its
-line (``conf changed: [...]``) and counted in the summary, since a
-registry query must leave the shared session as it found it.
+A registry query must leave the shared session as it found it. The
+session is snapshotted around each query and put back after it; what
+the query left behind is listed on its line and counted in the
+summary: session-conf keys it added or changed (``conf changed:
+[...]``, restored), temp views it created (``new views: [...]``,
+dropped) and a non-empty cache manager (``cached plans``, cleared).
 """
 
 from __future__ import annotations
@@ -53,6 +55,32 @@ def _restore_conf(spark, before: dict[str, str]) -> list[str]:
     return changed
 
 
+def _temp_views(spark) -> set[str]:
+    """Session-local temp views, read from the session catalog (the
+    public ``listTables`` would also initialize the external catalog)."""
+    it = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*").iterator()
+    names = set()
+    while it.hasNext():
+        names.add(it.next().table())
+    return names
+
+
+def _drop_new_views(spark, before: set[str]) -> list[str]:
+    """Drop the temp views created since ``before``; return their names."""
+    new = sorted(_temp_views(spark) - before)
+    for name in new:
+        spark.catalog.dropTempView(name)
+    return new
+
+
+def _clear_cached_plans(spark) -> bool:
+    """Clear the cache manager; return whether it held any plan."""
+    cached = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    if cached:
+        spark.catalog.clearCache()
+    return cached
+
+
 def main() -> int:
     specs = all_specs()
     args = sys.argv[1:]
@@ -72,9 +100,12 @@ def main() -> int:
     spark = get_spark("verify_local")
     failures: list[str] = []
     conf_leaks: dict[str, list[str]] = {}
+    view_leaks: dict[str, list[str]] = {}
+    cache_leaks: list[str] = []
     for name in names:
         spec = specs[name]
         conf_before = dict(spark.conf.getAll)
+        views_before = _temp_views(spark)
         t0 = time.perf_counter()
         try:
             sdf = spec.fn(spark, SF_DIR)
@@ -89,13 +120,23 @@ def main() -> int:
             failures.append(name)
             traceback.print_exc(limit=4)
         elapsed = time.perf_counter() - t0
+        note = ""
         changed = _restore_conf(spark, conf_before)
         if changed:
             conf_leaks[name] = changed
-        note = f"  conf changed: {changed}" if changed else ""
+            note += f"  conf changed: {changed}"
+        views = _drop_new_views(spark, views_before)
+        if views:
+            view_leaks[name] = views
+            note += f"  new views: {views}"
+        if _clear_cached_plans(spark):
+            cache_leaks.append(name)
+            note += "  cached plans"
         print(f"{name:35s} {status:24s} {elapsed:6.2f}s{note}", flush=True)
     print(f"\n{len(names) - len(failures)}/{len(names)} passed; failures: {failures}")
     print(f"{len(conf_leaks)} queries changed the session conf: {conf_leaks}")
+    print(f"{len(view_leaks)} queries left temp views: {view_leaks}")
+    print(f"{len(cache_leaks)} queries left cached plans: {cache_leaks}")
     return 1 if failures else 0
 
 
