@@ -6,7 +6,10 @@ grouped-map applyInPandas, and the Arrow scalar-UDF seam
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -16,8 +19,9 @@ from pyspark.sql.window import Window as W
 
 from ..operators.asof import asof_join
 from ..operators import textanalysis as ta
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import fan_out, load_table, sql_over_views
 from . import _fragments as fr
+from ._lifecycle import release_after_materialize
 from .registry import query
 
 
@@ -500,10 +504,7 @@ _PORTABLE_SQL = """
     tags=("sql", "window", "join"),
 )
 def sql_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import register_views
-
-    register_views(spark, sf_dir, ("orders", "customer", "nation"))
-    return spark.sql(_PORTABLE_SQL)
+    return sql_over_views(spark, sf_dir, _PORTABLE_SQL, ("orders", "customer", "nation"))
 
 
 @query(
@@ -521,8 +522,6 @@ def sql_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "formats"),
 )
 def source_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.formats import roundtrip
 
     nation = load_table(spark, sf_dir, "nation")
@@ -533,7 +532,7 @@ def source_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(fmt).alias("fmt"), "n_nationkey", "n_name", "n_regionkey"
         )
         out = back if out is None else out.unionByName(back)
-    return out
+    return release_after_materialize(out, partial(shutil.rmtree, base))
 
 
 @query(
@@ -561,10 +560,9 @@ def source_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "recursive-cte", "graph"),
 )
 def recursive_cte_ancestry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import register_views
-
-    register_views(spark, sf_dir, ("part",))
-    return spark.sql(
+    return sql_over_views(
+        spark,
+        sf_dir,
         """
         WITH RECURSIVE anc AS (
           SELECT p_partkey AS node, p_partkey DIV 2 AS parent, CAST(1 AS BIGINT) AS depth
@@ -575,7 +573,8 @@ def recursive_cte_ancestry(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n_nodes,
                CAST(sum(node) AS BIGINT) AS node_checksum
         FROM anc GROUP BY depth
-        """
+        """,
+        ("part",),
     )
 
 
@@ -873,8 +872,6 @@ def feature_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "schema-evolution"),
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     nation = load_table(spark, sf_dir, "nation")
     base = tempfile.mkdtemp(prefix="spark_schema_evo_")
     v1 = nation.filter(F.col("n_nationkey") % 2 == 0).select("n_nationkey", "n_name")
@@ -888,7 +885,8 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("recursiveFileLookup", "true")
         .parquet(base)
     )
-    return back.select("n_nationkey", "n_name", F.col("pop").cast("long"))
+    merged = back.select("n_nationkey", "n_name", F.col("pop").cast("long"))
+    return release_after_materialize(merged, partial(shutil.rmtree, base))
 
 
 @query(
@@ -1138,10 +1136,7 @@ _LATERAL_SQL = """
     tags=("join", "lateral", "sql"),
 )
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import register_views
-
-    register_views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_LATERAL_SQL)
+    return sql_over_views(spark, sf_dir, _LATERAL_SQL, ("customer", "orders"))
 
 
 @query(
@@ -1327,9 +1322,6 @@ _BAD_CSV_ROWS = [
 )
 def source_csv_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
-
-    from pyspark.sql import types as T
 
     base = tempfile.mkdtemp(prefix="spark_csv_q_")
     path = os.path.join(base, "batch.csv")
@@ -1351,10 +1343,11 @@ def source_csv_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFra
         .cache()  # SPARK-21610: corrupt-record queries must not prune to the corrupt col alone
     )
     bucket = F.when(F.col("_corrupt_record").isNull(), "good").otherwise("quarantined")
-    return df.groupBy(bucket.alias("bucket")).agg(
+    counts = df.groupBy(bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("score").alias("sum_score"),
     )
+    return release_after_materialize(counts, df, partial(shutil.rmtree, base))
 
 
 @query(

@@ -10,13 +10,16 @@ output is written down, not derived.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import assemble, sinks
 from ..pipeline.schema import RAW_DOC_SCHEMA
+from ._lifecycle import release_after_materialize
 from .registry import query
 
 
@@ -196,7 +199,8 @@ def _staged_courses_path(spark: SparkSession) -> str:
 )
 def syllabus_find_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _staged_courses_path(spark)
-    return sinks.find_by_id(spark, base, "1AEL0244").select("id", "name", "period")
+    found = sinks.find_by_id(spark, base, "1AEL0244").select("id", "name", "period")
+    return release_after_materialize(found, partial(shutil.rmtree, base))
 
 
 @query(
@@ -215,4 +219,5 @@ def syllabus_find_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def syllabus_find_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _staged_courses_path(spark)
-    return sinks.find_by_period(spark, base, "2025-2").select("id", "name", "period")
+    found = sinks.find_by_period(spark, base, "2025-2").select("id", "name", "period")
+    return release_after_materialize(found, partial(shutil.rmtree, base))

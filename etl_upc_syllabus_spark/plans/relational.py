@@ -34,11 +34,17 @@ transform).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..sources.tables import fan_out, load_table, register_views
+from ..sources.tables import fan_out, load_table, sql_over_views
+from ._lifecycle import release_after_materialize
 from .registry import query
 
 
@@ -234,15 +240,17 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "grouping-sets"),
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(
+    return sql_over_views(
+        spark,
+        sf_dir,
         """
         SELECT coalesce(l_returnflag, '(all)') AS returnflag,
                coalesce(l_linestatus, '(all)') AS linestatus,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        ("lineitem",),
     )
 
 
@@ -542,46 +550,6 @@ def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fixture_key(sf_dir: str, tables: tuple[str, ...]) -> tuple[str, str]:
-    """(dirkey, stampkey) for content-keyed managed-table names.
-
-    dirkey is stable per fixture directory; stampkey changes when the
-    fixture is regenerated. Table names embed both as
-    '{prefix}{dirkey}_{stampkey}' and GC sweeps only within one dirkey
-    (ADVICE r5): alternating runs over two sf_dirs in one warehouse no
-    longer drop and rebuild each other's copies, and a concurrent
-    session on a different fixture dir is never touched.
-    """
-    import hashlib
-    import os
-
-    stamp = "|".join(
-        f"{t}:{os.stat(os.path.join(sf_dir, t + '.parquet')).st_mtime_ns}" for t in tables
-    )
-    dirkey = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-    return dirkey, hashlib.md5(stamp.encode()).hexdigest()[:10]
-
-
-def _gc_managed(spark: SparkSession, prefixes: tuple[str, ...], keep: tuple[str, ...]) -> None:
-    """Drop stale content-keyed managed tables AND their orphaned
-    warehouse directories (ADVICE r4): a regenerated fixture changes
-    the key, and a fresh derby metastore cannot DROP tables an earlier
-    session created -- their directories would otherwise accumulate in
-    spark-warehouse forever. Callers pass dirkey-scoped prefixes (see
-    :func:`_fixture_key`), so the sweep stays within one fixture dir."""
-    import os
-    import shutil
-
-    for tbl_meta in spark.catalog.listTables():
-        if tbl_meta.name.startswith(prefixes) and tbl_meta.name not in keep:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl_meta.name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    if os.path.isdir(warehouse):
-        for entry in os.listdir(warehouse):
-            if entry.startswith(prefixes) and entry not in keep:
-                shutil.rmtree(os.path.join(warehouse, entry), ignore_errors=True)
-
-
 @query(
     "join_bucketed_colocated",
     """
@@ -592,47 +560,40 @@ def _gc_managed(spark: SparkSession, prefixes: tuple[str, ...], keep: tuple[str,
     GROUP BY 1
     """,
     doc="Bucketed co-located fact-fact join: lineitem and orders are "
-    "written once as managed tables bucketed (and sorted) on the join "
-    "key with matching bucket counts, so the SortMergeJoin reads "
+    "written as tables bucketed (and sorted) on the join key with "
+    "matching bucket counts, so the SortMergeJoin reads "
     "pre-partitioned, pre-sorted buckets -- NO shuffle exchange and no "
-    "sort on either side (the executed plan's only exchange is the "
-    "final 5-group aggregation; asserted in tests/test_scale_plans.py). "
-    "At 100 TB this is THE technique for recurring fact-fact joins: "
-    "pay the shuffle once at write time, never at query time. Tables "
-    "are content-keyed by fixture path+mtime so a regenerated fixture "
-    "rebuilds them, and stale keys from earlier generations are "
-    "dropped (warehouse + metastore stay bounded).",
+    "sort on either side (the live plan's only exchange is the final "
+    "5-group aggregation; asserted in tests/test_scale_plans.py). At "
+    "100 TB this is THE technique for recurring fact-fact joins: pay "
+    "the shuffle once at write time, never at query time. The bucketed "
+    "copies are written per call into a fresh temp dir (bucketed reads "
+    "need a catalog entry, so each table is registered with that dir "
+    "as its path) and released after materialize: the tables dropped, "
+    "the dir deleted.",
     tags=("join", "bucketing", "layout"),
 )
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    return release_after_materialize(*_build_join_bucketed_colocated(spark, sf_dir))
 
-    n_buckets = 8
-    dirkey, stampkey = _fixture_key(sf_dir, ("lineitem", "orders"))
-    lt, ot = f"bkt_lineitem_{dirkey}_{stampkey}", f"bkt_orders_{dirkey}_{stampkey}"
-    # GC stale bucketed copies from earlier generations of THIS fixture
-    # dir (ADVICE r4/r5): a regenerated fixture changes stampkey, and
-    # without this every regeneration leaks a full bucketed copy of
-    # both fact tables into the warehouse + metastore.
-    _gc_managed(spark, (f"bkt_lineitem_{dirkey}_", f"bkt_orders_{dirkey}_"), keep=(lt, ot))
-    for name, tbl, col in ((lt, "lineitem", "l_orderkey"), (ot, "orders", "o_orderkey")):
-        if not spark.catalog.tableExists(name):
-            # a fresh derby metastore can coexist with a surviving
-            # spark-warehouse dir from an earlier session; the stale
-            # location blocks CREATE, so clear it first
-            import shutil
 
-            warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-            shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-            (
-                _t(spark, sf_dir, tbl)
-                .write.bucketBy(n_buckets, col)
-                .sortBy(col)
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-    li, od = spark.table(lt), spark.table(ot)
-    return (
+def _build_join_bucketed_colocated(spark: SparkSession, sf_dir: str):
+    """(result, *held) over bucketed copies staged in a fresh temp dir;
+    the held items drop both tables, then delete the dir."""
+    base = tempfile.mkdtemp(prefix="spark_bkt_")
+    names = []
+    for tbl, col in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+        name = f"{os.path.basename(base)}_{tbl}"
+        (
+            _t(spark, sf_dir, tbl)
+            .write.bucketBy(8, col)
+            .sortBy(col)
+            .option("path", os.path.join(base, tbl))
+            .saveAsTable(name)
+        )
+        names.append(name)
+    li, od = spark.table(names[0]), spark.table(names[1])
+    result = (
         li.join(od, li.l_orderkey == od.o_orderkey)
         .groupBy("o_orderpriority")
         .agg(
@@ -640,6 +601,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             _dsum(_dec("l_extendedprice")).alias("revenue"),
         )
     )
+    drops = [partial(spark.sql, f"DROP TABLE {name}") for name in names]
+    return result, *drops, partial(shutil.rmtree, base)
 
 
 @query(
@@ -654,39 +617,36 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
     doc="Dynamic partition pruning, the star-schema scale feature: the "
-    "fact table is written once PARTITIONED BY ship month (84 "
-    "partitions), and a join against a date dimension filtered on "
-    "year+quarter prunes the fact scan AT RUNTIME to the 3 matching "
-    "partitions -- the executed plan's PartitionFilters carries a "
+    "fact table is written PARTITIONED BY ship month (84 partitions), "
+    "and a join against a date dimension filtered on year+quarter "
+    "prunes the fact scan AT RUNTIME to the 3 matching partitions -- "
+    "the executed plan's PartitionFilters carries a "
     "dynamicpruningexpression fed by the broadcast dim (asserted in "
     "tests/test_scale_plans.py). At 100 TB this is the difference "
     "between scanning 7 years and scanning one quarter when the "
-    "filter lives on dimension attributes the fact doesn't carry. "
-    "Same write-once/query-many economics as join_bucketed_colocated: "
-    "tables are content-keyed by fixture mtime, stale keys GC'd.",
+    "filter lives on dimension attributes the fact doesn't carry. The "
+    "partitioned copy is path-partitioned parquet with no catalog "
+    "entry, written per call into a fresh temp dir and released after "
+    "materialize.",
     tags=("join", "partitioning", "dpp", "scale"),
 )
 def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    return release_after_materialize(*_build_join_dynamic_partition_pruning(spark, sf_dir))
 
-    dirkey, stampkey = _fixture_key(sf_dir, ("lineitem",))
-    name = f"dpp_lineitem_{dirkey}_{stampkey}"
-    _gc_managed(spark, (f"dpp_lineitem_{dirkey}_",), keep=(name,))
-    if not spark.catalog.tableExists(name):
-        import shutil
 
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-        (
-            _t(spark, sf_dir, "lineitem")
-            .withColumn("ship_ym", F.date_format("l_shipdate", "yyyy-MM"))
-            .write.partitionBy("ship_ym")
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-    fact = spark.table(name)
+def _build_join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str):
+    """(result, release) over a ship-month-partitioned copy of lineitem
+    staged in a fresh temp dir; the release deletes the dir."""
+    base = tempfile.mkdtemp(prefix="spark_dpp_")
+    path = os.path.join(base, "lineitem")
+    staged = _t(spark, sf_dir, "lineitem").withColumn(
+        "ship_ym", F.date_format("l_shipdate", "yyyy-MM")
+    )
+    staged.write.partitionBy("ship_ym").parquet(path)
+    # declared, not inferred: a zero-row copy has no data file to infer from
+    fact = spark.read.schema(staged.schema).parquet(path)
     # date dimension derived from the raw fixture (separate source, so
-    # the dim subtree is not the partitioned table itself)
+    # the dim subtree is not the partitioned copy itself)
     dates = (
         _t(spark, sf_dir, "orders")
         .select(F.col("o_orderdate").alias("d"))
@@ -699,7 +659,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         .distinct()
     )
     dim = dates.filter((F.col("y") == 1996) & (F.col("q") == 1))
-    return (
+    result = (
         fact.join(F.broadcast(dim), fact.ship_ym == dim.ym)
         .groupBy("l_returnflag")
         .agg(
@@ -707,6 +667,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
             _dsum(_dec("l_quantity")).alias("total_qty"),
         )
     )
+    return result, partial(shutil.rmtree, base)
 
 
 @query(

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import textanalysis as ta
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import fan_out, load_table, sql_over_views
 from . import _fragments as fr
 from ._lifecycle import release_after_materialize
 from .registry import query
@@ -333,10 +333,11 @@ def udtf_word_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield term, n
 
     spark.udtf.register("word_histogram", WordHistogram)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("_docs_udtf")
-    return spark.sql(
-        "SELECT d.doc_id, h.term, h.n "
-        "FROM _docs_udtf d, LATERAL word_histogram(d.text, 5) h"
+    return sql_over_views(
+        spark,
+        sf_dir,
+        "SELECT d.doc_id, h.term, h.n FROM documents d, LATERAL word_histogram(d.text, 5) h",
+        ("documents",),
     )
 
 

@@ -99,7 +99,19 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(cores)
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so SQL-form queries can run against them."""
+def sql_over_views(
+    spark: SparkSession, sf_dir: str, text: str, names: tuple[str, ...]
+) -> DataFrame:
+    """Run SQL ``text`` over temp views of the named tables, then drop them.
+
+    ``spark.sql`` analyzes eagerly: the returned DataFrame's plan holds
+    the resolved scans, so it still runs after its views are gone and
+    the session is left without them.
+    """
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    try:
+        return spark.sql(text)
+    finally:
+        for name in names:
+            spark.catalog.dropTempView(name)

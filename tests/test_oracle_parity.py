@@ -2,19 +2,54 @@
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from etl_upc_syllabus_spark.plans import all_specs
 
 from .oracle_harness import compare, duckdb_run
+from .test_session_hygiene import _temp_views
 
 SPECS = all_specs()
 ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 NO_ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is None)
 
 
+@pytest.fixture
+def session_as_found(spark, tmp_path, monkeypatch):
+    """The test's query leaves the shared session and the disk as it
+    found them: no cached plan; temp views, conf, the warehouse listing
+    and the catalog's tables unchanged; the temp and stream-checkpoint
+    roots (redirected here) empty. Persistent RDDs are accounted in
+    test_session_hygiene.py."""
+    tmp_root, ckpt_root = tmp_path / "tmp", tmp_path / "ckpt"
+    tmp_root.mkdir()
+    ckpt_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_root))
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_DIR", str(ckpt_root))
+    # a plan cached by an earlier test is not this query's leak
+    spark.catalog.clearCache()
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def state() -> dict:
+        return {
+            "temp views": _temp_views(spark),
+            "conf": dict(spark.conf.getAll),
+            "warehouse": sorted(os.listdir(warehouse)) if os.path.isdir(warehouse) else [],
+            "tables": sorted(t.name for t in spark.catalog.listTables()),
+        }
+
+    before = state()
+    yield
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), "cached plans left"
+    assert state() == before
+    assert os.listdir(tmp_root) == [] and os.listdir(ckpt_root) == []
+
+
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_oracle_parity(spark, sf_dir, name):
+def test_oracle_parity(spark, sf_dir, name, session_as_found):
     spec = SPECS[name]
     sdf = spec.fn(spark, sf_dir)
     odf = duckdb_run(spec.oracle, sf_dir)
@@ -22,7 +57,7 @@ def test_oracle_parity(spark, sf_dir, name):
 
 
 @pytest.mark.parametrize("name", NO_ORACLE_NAMES)
-def test_rows_only(spark, sf_dir, name):
+def test_rows_only(spark, sf_dir, name, session_as_found):
     """Weaker check for non-SQL-expressible ops: runs, has stable schema."""
     spec = SPECS[name]
     sdf = spec.fn(spark, sf_dir)

@@ -6,12 +6,16 @@ dims broadcast."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_upc_syllabus_spark.plans import all_specs
+from etl_upc_syllabus_spark.plans.relational import (
+    _build_join_bucketed_colocated,
+    _build_join_dynamic_partition_pruning,
+)
+from etl_upc_syllabus_spark.session import conf_overrides
 from etl_upc_syllabus_spark.sources.tables import load_table
 
 
@@ -52,19 +56,21 @@ def test_partition_pruning(spark, tmp_path):
 
 
 def test_registered_bucketed_join_single_exchange(spark, sf_dir):
-    """join_bucketed_colocated: the only exchange in the executed plan
-    is the final small-group aggregation -- the fact-fact join itself
-    reads co-located buckets with no shuffle and no sort. The broadcast
-    threshold is disabled to pin the SortMergeJoin path: at the tiny
-    test SF Spark rightly prefers broadcasting the orders side, but the
-    claim under test is the big-big shape (at 100 TB neither fact side
-    broadcasts)."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(all_specs()["join_bucketed_colocated"].fn(spark, sf_dir))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    """join_bucketed_colocated: the only exchange in the live plan is
+    the final small-group aggregation -- the fact-fact join itself
+    reads co-located buckets with no shuffle and no sort. The registry
+    fn returns a checkpoint scan, so the plan is read from its
+    _build_* companion. The broadcast threshold is disabled to pin the
+    SortMergeJoin path: at the tiny test SF Spark rightly prefers
+    broadcasting the orders side, but the claim under test is the
+    big-big shape (at 100 TB neither fact side broadcasts)."""
+    with conf_overrides(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        result, *held = _build_join_bucketed_colocated(spark, sf_dir)
+        try:
+            plan = _plan(result)
+        finally:
+            for release in held:
+                release()
     assert "SortMergeJoin" in plan
     assert plan.count("Exchange hashpartitioning") == 1  # the groupBy only
     assert "SelectedBucketsCount" in plan  # both scans are bucket-aware
@@ -74,72 +80,51 @@ def test_registered_bucketed_join_single_exchange(spark, sf_dir):
     assert "Exchange" not in join_section
 
 
-def test_managed_table_gc_sweeps_orphans(spark, sf_dir):
-    """ADVICE r4: stale content-keyed managed tables from earlier
-    sessions (whose metastore entries are gone, so DROP TABLE cannot
-    see them) must be swept from the warehouse directory. ADVICE r5:
-    the sweep is dirkey-scoped -- a copy keyed to a DIFFERENT fixture
-    dir must survive, so alternating sf_dirs stop thrashing."""
-    from etl_upc_syllabus_spark.plans.relational import _fixture_key
-
-    dirkey, _ = _fixture_key(sf_dir, ("lineitem", "orders"))
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    orphan = os.path.join(warehouse, f"bkt_lineitem_{dirkey}_deadbeef00")
-    foreign = os.path.join(warehouse, "bkt_lineitem_ffffff_deadbeef00")
-    os.makedirs(orphan, exist_ok=True)
-    os.makedirs(foreign, exist_ok=True)
-    try:
-        all_specs()["join_bucketed_colocated"].fn(spark, sf_dir).count()
-        assert not os.path.exists(orphan)
-        assert os.path.exists(foreign)
-    finally:
-        shutil.rmtree(foreign, ignore_errors=True)
-
-
 def test_dynamic_partition_pruning_engages(spark, sf_dir):
     """join_dynamic_partition_pruning: the partitioned fact scan's
     PartitionFilters must carry a dynamicpruningexpression fed by the
     filtered broadcast dim -- i.e. the runtime prunes fact partitions
-    by dim attributes the fact does not carry. The EXECUTED plan is
-    inspected (DPP subqueries resolve at runtime)."""
-    df = all_specs()["join_dynamic_partition_pruning"].fn(spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    by dim attributes the fact does not carry. The live plan comes from
+    the _build_* companion and is inspected EXECUTED (DPP subqueries
+    resolve at runtime)."""
+    result, *held = _build_join_dynamic_partition_pruning(spark, sf_dir)
+    try:
+        result.collect()
+        plan = _plan(result)
+    finally:
+        for release in held:
+            release()
     assert "dynamicpruning" in plan, plan[:1500]
-    # and the pruned scan is the managed partitioned table
-    assert "dpp_lineitem_" in plan
+    # and the pruned scan is the ship-month-partitioned copy
+    assert "dynamicpruningexpression(ship_ym" in plan
 
 
 @pytest.mark.slow
 def test_bucketed_join_skips_shuffle(spark, tmp_path):
     """bucketBy co-location: joining two tables bucketed on the same key
-    plans a SortMergeJoin with NO shuffle exchange on either side."""
-    # spark.sql.warehouse.dir is static; the session default (cwd
-    # spark-warehouse/, gitignored) is used for these managed tables
-    # DROP TABLE only clears the catalog entry; a stale warehouse dir
-    # from an earlier session (fresh derby metastore, surviving
-    # spark-warehouse/) still blocks CREATE, so remove the location too.
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for name in ("b_orders", "b_lines"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+    plans a SortMergeJoin with NO shuffle exchange on either side. The
+    tables live under tmp_path, not the warehouse, and are dropped at
+    the end."""
     orders = spark.createDataFrame(
         [(i, f"o{i}") for i in range(1000)], "o_id long, o_name string"
     )
     lines = spark.createDataFrame(
         [(i % 1000, i, float(i)) for i in range(5000)], "o_id long, line long, v double"
     )
-    orders.write.bucketBy(8, "o_id").sortBy("o_id").mode("overwrite").saveAsTable("b_orders")
-    lines.write.bucketBy(8, "o_id").sortBy("o_id").mode("overwrite").saveAsTable("b_lines")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = spark.table("b_lines").join(spark.table("b_orders"), "o_id")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan  # co-located: no shuffle
-        assert joined.count() == 5000
+        for name, df in (("b_orders", orders), ("b_lines", lines)):
+            df.write.bucketBy(8, "o_id").sortBy("o_id").option(
+                "path", str(tmp_path / name)
+            ).saveAsTable(name)
+        with conf_overrides(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = spark.table("b_lines").join(spark.table("b_orders"), "o_id")
+            plan = _plan(joined)
+            assert "SortMergeJoin" in plan
+            assert "Exchange hashpartitioning" not in plan  # co-located: no shuffle
+            assert joined.count() == 5000
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+        for name in ("b_orders", "b_lines"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 @pytest.mark.slow
@@ -152,28 +137,14 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
     The thresholds are lowered because the local fixture is tiny; on a
     real cluster the defaults (10M rows creation / 10 GB probe) gate
     the same rewrite."""
-    from etl_upc_syllabus_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    restore = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-        ),
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"
-        ),
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB"
-    )
-    try:
+    with conf_overrides(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+        },
+    ):
         li = load_table(spark, sf_dir, "lineitem")
         part = load_table(spark, sf_dir, "part").filter(
             F.col("p_partkey") % 97 == 0
@@ -182,6 +153,3 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
         plan = _plan(j)
         assert "might_contain" in plan.lower()
         assert j.count() > 0
-    finally:
-        for k, v in restore.items():
-            spark.conf.set(k, v)
