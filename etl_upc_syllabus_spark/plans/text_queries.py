@@ -333,12 +333,17 @@ def udtf_word_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield term, n
 
     spark.udtf.register("word_histogram", WordHistogram)
-    return sql_over_views(
-        spark,
-        sf_dir,
-        "SELECT d.doc_id, h.term, h.n FROM documents d, LATERAL word_histogram(d.text, 5) h",
-        ("documents",),
-    )
+    # the analyzed plan holds the UDTF itself, so the session-wide name
+    # can go as soon as spark.sql returns
+    try:
+        return sql_over_views(
+            spark,
+            sf_dir,
+            "SELECT d.doc_id, h.term, h.n FROM documents d, LATERAL word_histogram(d.text, 5) h",
+            ("documents",),
+        )
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS word_histogram")
 
 
 #: Fixed retrieval query terms for text_tfidf_topk -- all present in the

@@ -105,20 +105,6 @@ JIT_POLICY = (
 )
 
 
-def _verify_checksums_enabled(env_value: str | None) -> bool:
-    """Page-CRC verification default (ON since r12); the opt-out knob
-    SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS accepts the common falsy
-    spellings, not just '0' (review r12: a '=false' opt-out that
-    silently stays on defeats the operator's intent).
-
-    An EMPTY value (``SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS=``) means
-    unset, i.e. the default ON (ADVICE r12, made explicit): shells
-    produce empty exports accidentally (``VAR= cmd``, unset-in-.env),
-    so empty is deliberately NOT an opt-out spelling -- disabling
-    verification requires one of 0/false/off/no."""
-    return (env_value or "").lower() not in ("0", "false", "off", "no")
-
-
 def get_spark(app_name: str = "etl_upc_syllabus_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
@@ -141,25 +127,17 @@ def get_spark(app_name: str = "etl_upc_syllabus_spark", cpus: int | None = None)
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "etl_upc_syllabus_spark._pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-        # bitrot defense, DEFAULT ON (opt out with
-        # SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS=0): verify parquet page
-        # CRCs at read. The r11 bitrot probe (tools/bitrot_probe.py)
-        # measured 9/12 random mid-file corruptions reading SILENTLY
-        # WRONG without verification (footer audit green, values off
-        # by 10^20), LOUD CRC failures with it on checksummed files
-        # (Spark's own writer emits page CRCs by default; the
-        # pyarrow-written driver fixtures do not, where verification
-        # is a no-op), and verification cost within host noise. The
-        # conf is plan-inert and value-inert on healthy data
-        # (measured r11), so the measured posture wins: on.
-        .config(
-            "spark.hadoop.parquet.page.verify-checksum.enabled",
-            "true"
-            if _verify_checksums_enabled(
-                os.environ.get("SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS")
-            )
-            else "false",
-        )
+        # bitrot defense: verify parquet page CRCs at read. The r11
+        # bitrot probe (tools/bitrot_probe.py) measured 9/12 random
+        # mid-file corruptions reading SILENTLY WRONG without
+        # verification (footer audit green, values off by 10^20), LOUD
+        # CRC failures with it on checksummed files (Spark's own writer
+        # emits page CRCs by default; the pyarrow-written driver
+        # fixtures do not, where verification is a no-op), and
+        # verification cost within host noise. The conf is plan-inert
+        # and value-inert on healthy data (measured r11). A single read
+        # can still turn it off with the per-read option.
+        .config("spark.hadoop.parquet.page.verify-checksum.enabled", "true")
     )
     spark = _cds.get_or_create(builder, JIT_POLICY, driver_memory)
     spark.sparkContext.setLogLevel("WARN")

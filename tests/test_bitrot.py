@@ -7,9 +7,8 @@ page checksums (values off by 10^20 with zero errors). The defense is
 write-side page CRCs (Spark's own writer emits them by default;
 pyarrow needs write_page_checksum=True -- the driver fixtures lack
 them) plus read-side verification
-(``parquet.page.verify-checksum.enabled`` per read; session-wide it
-is DEFAULT ON since r12 -- opt out with
-``SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS=0``).
+(``parquet.page.verify-checksum.enabled``: session-wide ON since r12,
+and settable per read).
 """
 
 from __future__ import annotations
@@ -88,29 +87,9 @@ def test_unverified_read_of_bitrot_is_silent(spark, checksummed, tmp_path):
 
 
 def test_session_knob_wires_the_hadoop_conf(spark):
-    """Verification defaults ON (r12 flip, measured plan- and
-    value-inert on healthy data); the env knob is opt-OUT. The
-    accepted-falsy set is pinned with explicit inputs (review r12:
-    recomputing the live expression would be tautological), and the
-    session conf must agree with the predicate for the live env."""
-    from etl_upc_syllabus_spark.session import _verify_checksums_enabled
-
-    assert _verify_checksums_enabled(None) is True  # unset -> default on
-    # empty export = unset, deliberately NOT an opt-out spelling
-    # (ADVICE r12: shells produce 'VAR=' accidentally)
-    assert _verify_checksums_enabled("") is True
-    assert _verify_checksums_enabled("1") is True
-    assert _verify_checksums_enabled("anything") is True
-    for v in ("0", "false", "FALSE", "off", "Off", "no"):
-        assert _verify_checksums_enabled(v) is False, v
-
-    expected = _verify_checksums_enabled(
-        os.environ.get("SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS")
-    )
-    assert (
-        spark.conf.get("spark.hadoop.parquet.page.verify-checksum.enabled")
-        == ("true" if expected else "false")
-    )
+    """Verification is ON in every session get_spark builds (r12 flip,
+    measured plan- and value-inert on healthy data)."""
+    assert spark.conf.get("spark.hadoop.parquet.page.verify-checksum.enabled") == "true"
 
 
 def test_resilient_read_composition_with_verification(spark, checksummed, tmp_path):

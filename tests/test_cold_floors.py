@@ -6,15 +6,15 @@ because the bench's warmup pass populated caches the timed runs
 reused: every recorded number was warm, and only the cold path paid
 the blowup.  Two guards institutionalize the lesson:
 
-1. ``test_cold_bench_mode`` drives ``bench.py --cold`` (fresh
-   SparkSession per query, no warmup) over the dedup/text family at
-   the test SF in a subprocess.  Functional assertions (mode, query
-   set, valid JSON) always run; the wall-clock bounds -- single
-   samples on a host with documented 3-10x load inflation -- are
-   opt-in via SPARK_GRAFT_TIMING_ASSERTS, the repo's convention for
-   timing assertions (test_cli.py).  The sensitive regression
-   detector is the scaling test below, which needs no absolute
-   bounds.
+1. ``test_cold_bench_mode`` drives ``bench.py``, whose
+   cold suite (fresh SparkSession per query, no warmup) follows the
+   warm one, over the dedup/text family at the test SF in a
+   subprocess.  Functional assertions (query set, valid JSON,
+   counters) always run; the wall-clock bounds -- single samples on a
+   host with documented 3-10x load inflation -- are opt-in via
+   SPARK_GRAFT_TIMING_ASSERTS, the repo's convention for timing
+   assertions (test_cli.py).  The sensitive regression detector is
+   the scaling test below, which needs no absolute bounds.
 
 2. ``test_shingle_build_scales_linearly`` measures the property the
    trap violates, in a host-noise-cancelling way: cold shingle-build
@@ -61,37 +61,67 @@ _COLD_FAMILY_BOUNDS = {
 }
 
 
-@pytest.mark.cold
-def test_cold_bench_mode():
-    """bench.py --cold runs the family fresh-session/no-warmup;
-    wall-clock bounds are opt-in (single samples cannot be asserted
-    unconditionally on a host with 3-10x load inflation)."""
+_BENCH_QUERIES = [*_COLD_FAMILY_BOUNDS, "q1_pricing_summary", "stream_window_counts"]
+
+
+@pytest.fixture(scope="module")
+def bench_run():
+    """One default bench run over the cold family plus a TPC-H query
+    and a stream, shared by the two tests below. A subprocess because
+    bench.py stops its sessions."""
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=SF_DIR,
-        SPARK_GRAFT_CPUS="8",
-        SPARK_GRAFT_BENCH_MAX_WAIT="5",
-        SPARK_GRAFT_BENCH_QUERIES=",".join(_COLD_FAMILY_BOUNDS),
+        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_BENCH_QUERIES=",".join(_BENCH_QUERIES),
     )
     out = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "bench.py"), "--cold"],
-        env=env,
-        cwd=_REPO,
-        capture_output=True,
-        text=True,
-        timeout=600,
+        [sys.executable, os.path.join(_REPO, "bench.py")],
+        env=env, cwd=_REPO, capture_output=True, text=True, timeout=900,
         check=True,
     )
-    payload = json.loads(out.stdout.strip().splitlines()[-1])
-    assert payload["mode"] == "cold"
-    assert set(payload["queries"]) == set(_COLD_FAMILY_BOUNDS)
+    extended, summary = (json.loads(x) for x in out.stdout.strip().splitlines()[-2:])
+    assert summary["metric"] == "headline_suite_total"
+    assert set(summary["queries"]) == set(_BENCH_QUERIES)
+    return extended, summary
+
+
+@pytest.mark.cold
+def test_cold_bench_mode(bench_run):
+    """The bench's cold suite (fresh session per query, no warmup)
+    follows the warm one and covers the same names. Cold wall-clock
+    bounds are opt-in (single samples cannot be asserted
+    unconditionally on a host with 3-10x load inflation)."""
+    extended, summary = bench_run
+    cold = extended["cold_queries"]
+    assert set(cold) == set(_BENCH_QUERIES)
+    assert summary["cold_value"] == round(sum(cold.values()), 3)
+    assert summary["cold_mode"] == "embedded"
     if os.environ.get("SPARK_GRAFT_TIMING_ASSERTS"):
-        for name, secs in payload["queries"].items():
-            assert secs < _COLD_FAMILY_BOUNDS[name], (
-                f"{name} cold run {secs:.1f}s exceeds the catastrophic-"
-                f"regression bound {_COLD_FAMILY_BOUNDS[name]}s -- check for "
+        for name, bound in _COLD_FAMILY_BOUNDS.items():
+            assert cold[name] < bound, (
+                f"{name} cold run {cold[name]:.1f}s exceeds the catastrophic-"
+                f"regression bound {bound}s -- check for "
                 "a reintroduced per-element re-evaluation (HOF trap)"
             )
+
+
+def test_bench_counters_include_stream_micro_batches(bench_run):
+    """The warm suite reads each query's executor counters from its own
+    span; a stream's micro-batches run under the stream's run id and
+    must be counted too (counting only the driver thread's jobs gave
+    stream_window_counts a few hundredths of a second of CPU)."""
+    extended, summary = bench_run
+    counters = extended["counters"]
+    for name in _BENCH_QUERIES:
+        assert counters[name]["executor_cpu_s"] > 0, (name, counters[name])
+        assert counters[name]["executor_run_s"] > 0, (name, counters[name])
+    # the stream runs two micro-batches, each with a 4-partition stateful
+    # stage (run_stream_to_table's shuffle_partitions), on top of the
+    # driver thread's own jobs (4 tasks: measured 15 per run when the
+    # micro-batches are counted, 4 when they are missed)
+    assert counters["stream_window_counts"]["tasks"] >= 4 + 2 * 4, counters
+    assert 0 < summary["cpu_share"] <= 1
 
 
 def _time_shingles(spark, n_docs: int, n_tokens: int) -> float:
@@ -207,7 +237,7 @@ def test_summary_line_fits_tail_window():
     names = list(bench.HEADLINE)
     assert len(names) == 15
     timings = {n: 99999.999 for n in names}
-    samples = {n: [99999.999, 99999.999, 99999.999] for n in names}
+    samples = {n: [99999.999, 99999.999] for n in names}
     warmups = {n: 99999.999 for n in names}
     cold = {n: 99999.999 for n in names}
     counters = {
@@ -216,9 +246,7 @@ def test_summary_line_fits_tail_window():
         for n in names
     }
     extended, summary = bench.build_artifact(
-        timings, samples, warmups, counters, [99.99, 99.99, 99.99],
-        [99.99, 99.99, 99.99], True, 3, 0.1, cold,
-        cpus=32, parallelism=32,
+        timings, samples, warmups, counters, cold, 0.1, 32, 32
     )
     line = json.dumps(summary)
     assert len(line) < 1800, f"summary line is {len(line)} chars"
@@ -237,23 +265,22 @@ def test_summary_line_fits_tail_window():
     assert summary["value"] == round(sum(timings.values()), 3)
     assert summary["unit"] == "sec"
     assert summary["queries"] == timings
-    assert summary["contended"] is True
-    assert summary["runs_per_query"] == 3
+    assert summary["runs_per_query"] == 2
     assert summary["sf"] == 0.1
     assert summary["cold_value"] == round(sum(cold.values()), 3)
     assert summary["cpu_share"] == 1.0
-    # the invocation-mode stamp (VERDICT r12 item 5): a warm suite's
-    # embedded cold numbers must never be compared to standalone --cold
-    # artifacts (first-JVM JIT lands inside query 1 there)
+    # the invocation-mode stamp (VERDICT r12 item 5): embedded cold
+    # numbers must never be compared to older standalone cold artifacts
+    # (first-JVM JIT lands inside query 1 there)
     assert summary["cold_mode"] == "embedded"
-    # no cold timings -> neither cold key appears; no executor run time
-    # -> no cpu_share
-    _, no_cold = bench.build_artifact(
-        timings, samples, warmups, {}, [1.0, 1.0, 1.0],
-        [1.0, 1.0, 1.0], False, 2, 0.1, {},
+    # the load gate and its stamps are gone: counters read the noise
+    for dropped in ("contended", "loadavg", "loadavg_preflight"):
+        assert dropped not in summary and dropped not in extended
+    # no executor run time -> no cpu_share
+    _, no_counters = bench.build_artifact(
+        timings, samples, warmups, {}, cold, 0.1, 32, 32
     )
-    assert "cold_value" not in no_cold and "cold_mode" not in no_cold
-    assert "cpu_share" not in no_cold
+    assert "cpu_share" not in no_counters
 
 
 def test_cpu_share_is_summed_cpu_over_summed_run_time():
@@ -269,7 +296,7 @@ def test_cpu_share_is_summed_cpu_over_summed_run_time():
     }
     _, summary = bench.build_artifact(
         {"a": 1.0, "b": 1.0}, {"a": [1.0], "b": [1.0]}, {}, counters,
-        [0.1] * 3, [0.1] * 3, False, 2, 0.1, {},
+        {}, 0.1, 4, 4,
     )
     assert summary["cpu_share"] == 0.6
 
@@ -291,14 +318,10 @@ def test_scale_factor_reads_the_leading_sf_number():
 
 def test_bench_exits_2_on_a_fixture_dir_without_a_scale_factor(tmp_path):
     """A directory name with no sf<number> stops the bench with exit 2
-    and a message naming the directory, before the pre-flight wait (a
-    10-minute max wait would otherwise come first)."""
+    and a message naming the directory, before any Spark work."""
     bad = tmp_path / "tables"
     bad.mkdir()
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(bad),
-               SPARK_GRAFT_BENCH_MAX_WAIT="600",
-               SPARK_GRAFT_BENCH_LOAD_GATE="-1")
-    # a gate no load can pass: waiting first would outlast the timeout
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(bad))
     out = subprocess.run(
         [sys.executable, os.path.join(_REPO, "bench.py")],
         env=env, cwd=_REPO, capture_output=True, text=True, timeout=120,
@@ -306,65 +329,6 @@ def test_bench_exits_2_on_a_fixture_dir_without_a_scale_factor(tmp_path):
     assert out.returncode == 2, out.stderr[-2000:]
     assert str(bad) in out.stderr
     assert out.stdout == ""
-
-
-def test_bench_counters_include_stream_micro_batches():
-    """The warm suite reads each query's executor counters from its own
-    span; a stream's micro-batches run under the stream's run id and
-    must be counted too (counting only the driver thread's jobs gave
-    stream_window_counts a few hundredths of a second of CPU). A
-    subprocess because bench.py stops its session."""
-    queries = ["q1_pricing_summary", "stream_window_counts"]
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=SF_DIR,
-        SPARK_GRAFT_CPUS="4",
-        SPARK_GRAFT_BENCH_MAX_WAIT="5",
-        SPARK_GRAFT_BENCH_WITH_COLD="0",
-        SPARK_GRAFT_BENCH_QUERIES=",".join(queries),
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "bench.py")],
-        env=env, cwd=_REPO, capture_output=True, text=True, timeout=600,
-        check=True,
-    )
-    extended, summary = (json.loads(x) for x in out.stdout.strip().splitlines()[-2:])
-    assert summary["metric"] == "headline_suite_total"
-    assert set(summary["queries"]) == set(queries)
-    counters = extended["counters"]
-    for name in queries:
-        assert counters[name]["executor_cpu_s"] > 0, (name, counters[name])
-        assert counters[name]["executor_run_s"] > 0, (name, counters[name])
-    # the stream runs two micro-batches, each with a 4-partition stateful
-    # stage (run_stream_to_table's shuffle_partitions), on top of the
-    # driver thread's own jobs (4 tasks: measured 15 per run when the
-    # micro-batches are counted, 4 when they are missed)
-    assert counters["stream_window_counts"]["tasks"] >= 4 + 2 * 4, counters
-    assert 0 < summary["cpu_share"] <= 1
-
-
-def test_preflight_gates_on_load5_too(monkeypatch):
-    """r13 measurement (BASELINE.md): same HEAD, load1<1.0 both times,
-    suite 15.37 s at load5=1.79 vs 10.98 s at load5=0.49 -- a sub-gate
-    load1 at the decision instant only means the neighbors are between
-    bursts. The preflight must require BOTH load1 and load5 quiet."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_WAIT", "0")
-    # quiet on both: passes
-    monkeypatch.setattr(os, "getloadavg", lambda: (0.2, 0.5, 1.0))
-    load, contended = bench._preflight_load()
-    assert not contended and load == [0.2, 0.5, 1.0]
-    # the r13 trap window: load1 passes, load5 does not -> contended
-    monkeypatch.setattr(os, "getloadavg", lambda: (0.91, 1.79, 1.89))
-    _, contended = bench._preflight_load()
-    assert contended
-    # knob widens the load5 gate independently
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_LOAD5_GATE", "2.0")
-    _, contended = bench._preflight_load()
-    assert not contended
 
 
 def test_headline_registry_and_floors_stay_coherent():
@@ -379,32 +343,3 @@ def test_headline_registry_and_floors_stay_coherent():
     specs = all_specs()
     missing_in_registry = [n for n in bench.HEADLINE if n not in specs]
     assert not missing_in_registry, missing_in_registry
-
-
-def test_preflight_waives_load5_after_sustained_quiet_load1(monkeypatch):
-    """ADVICE r13: load5 carries the bench's OWN previous invocation
-    for ~5 minutes, so back-to-back runs on an idle host would burn the
-    full max-wait and stamp themselves contended. Six consecutive
-    sub-gate load1 polls (10 s apart, ~50 s of sustained quiet) waive the load5
-    conjunct; a single load1 blip resets the streak."""
-    import importlib
-    import time as _time
-
-    bench = importlib.import_module("bench")
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_WAIT", "300")
-    sleeps = []
-    monkeypatch.setattr(_time, "sleep", lambda s: sleeps.append(s))
-    # self-inflicted residue: load1 quiet, load5 high forever
-    monkeypatch.setattr(os, "getloadavg", lambda: (0.2, 5.0, 5.0))
-    load, contended = bench._preflight_load()
-    assert not contended
-    assert len(sleeps) == 5  # passed on the 6th consecutive quiet poll
-
-    # a load1 blip resets the streak: 1 failing poll + 6 quiet again
-    sleeps.clear()
-    seq = iter([(2.0, 5.0, 5.0)] + [(0.2, 5.0, 5.0)] * 6)
-    monkeypatch.setattr(os, "getloadavg", lambda: next(seq))
-    _, contended = bench._preflight_load()
-    assert not contended
-    assert len(sleeps) == 6

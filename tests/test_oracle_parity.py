@@ -20,10 +20,12 @@ NO_ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is None)
 @pytest.fixture
 def session_as_found(spark, tmp_path, monkeypatch):
     """The test's query leaves the shared session and the disk as it
-    found them: no cached plan; temp views, conf, the warehouse listing
-    and the catalog's tables unchanged; the temp and stream-checkpoint
-    roots (redirected here) empty. Persistent RDDs are accounted in
-    test_session_hygiene.py."""
+    found them: no cached plan; temp views, user functions, conf, the
+    warehouse listing and the catalog's tables unchanged; the temp and
+    stream-checkpoint roots (redirected here) empty. Persistent RDDs
+    are accounted in test_session_hygiene.py. User functions are read
+    with SHOW USER FUNCTIONS: catalog.listFunctions() reports built-ins
+    as temporary."""
     tmp_root, ckpt_root = tmp_path / "tmp", tmp_path / "ckpt"
     tmp_root.mkdir()
     ckpt_root.mkdir()
@@ -36,6 +38,7 @@ def session_as_found(spark, tmp_path, monkeypatch):
     def state() -> dict:
         return {
             "temp views": _temp_views(spark),
+            "user functions": sorted(r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()),
             "conf": dict(spark.conf.getAll),
             "warehouse": sorted(os.listdir(warehouse)) if os.path.isdir(warehouse) else [],
             "tables": sorted(t.name for t in spark.catalog.listTables()),

@@ -14,8 +14,8 @@ read then does, across the defense matrix:
 - **page checksums written, verification off**: still silent --
   checksums protect nothing unless the reader verifies.
 - **page checksums written, verification on**
-  (``parquet.page.verify-checksum.enabled``, the session.py default
-  since r12 -- opt out with SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS=0): LOUD CRC
+  (``parquet.page.verify-checksum.enabled``, on in every session.py
+  session since r12, settable per read): LOUD CRC
   failure on BOTH Spark readers (vectorized and row-wise) and in
   pyarrow (``page_checksum_verification=True``).
 
@@ -58,8 +58,7 @@ def main(argv):
     def digest(path, verify=False):
         # verification is passed PER READ as a datasource option (it
         # merges into the relation's hadoop conf) so the probe measures
-        # both postures regardless of the session default (ON since
-        # r12; opt out with SPARK_GRAFT_VERIFY_PAGE_CHECKSUMS=0)
+        # both postures regardless of the session conf (ON since r12)
         reader = spark.read.option(
             "parquet.page.verify-checksum.enabled", str(verify).lower()
         )
