@@ -17,6 +17,14 @@ format ({"2025-2": {"start_date": ..., "end_date": ...}}); the file is
 looked up in the input directory, then the CWD, or passed explicitly.
 Unlike the reference (which shipped the enrichment as dead code with
 hardcoded constants, etl_infrastructure.py:193-216), it actually runs.
+
+A run decodes each PDF once and reads the persisted result twice: one
+Python pass (``sinks.write_run_artifacts``) writes the per-course and
+consolidated JSON and hands back the calendar lines and the rejects,
+and the parquet write is the second read. The calendar is grouped and
+rendered on the driver (``calendar.group_lines``, ``calendar.write_pdf``)
+and ``quarantine.json`` is written from the rejects, so a run is at
+most four Spark jobs and no shuffle.
 """
 
 from __future__ import annotations
@@ -75,38 +83,33 @@ def main(argv: list[str] | None = None) -> int:
             parsed = assemble.enrich_dates(parsed, assemble.load_periods(spark, json.load(fh)))
 
     # the input is decoded once: the enriched frame, rejects included,
-    # is persisted and both sides of the quarantine split are filters
-    # over it, so every artifact below reads the cache, not the disk
+    # is persisted and read twice. One Python pass over it writes the
+    # JSON artifacts and hands back the calendar lines and the rejects;
+    # the parquet write is the other. The calendar (a few hundred
+    # lines) is grouped here on the driver: a Spark query would add
+    # four jobs, a shuffle and a plan of its own to every run.
     parsed = parsed.persist()
     try:
-        good, bad = assemble.split_quarantine(parsed)
-        os.makedirs(args.output_dir, exist_ok=True)
-        written, _ = sinks.write_course_json(good, args.output_dir)
+        written, _, entries, rejects = sinks.write_run_artifacts(parsed, args.output_dir)
+        good, _ = assemble.split_quarantine(parsed)
         # gate off: periods here come from parse_filename ('YYYY-T',
         # inference-proof and sentinel-free by construction), so the
         # validation pass would only re-scan the persisted frame
         sinks.write_courses_parquet(good, args.output_dir, on_unsafe="off")
-        calendar.render_pdf(
-            assemble.weekly_calendar(good),
-            os.path.join(args.output_dir, "weekly_calendar.pdf"),
-        )
-        # quarantine REPORT as an artifact, not just a log line: the
-        # reference logs-and-drops (etl_pipeline.py:28-30); operators
-        # of a real corpus need the reject list (id + typed error) to
-        # triage. Rejects are a tiny fraction of the corpus (errors,
-        # not data), so one driver-side collect is the honest cost.
-        rejects = [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
-        with open(
-            os.path.join(args.output_dir, "quarantine.json"), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(rejects, fh, ensure_ascii=False, indent=1)
-        n_bad = len(rejects)
     finally:
         parsed.unpersist()
+    calendar.write_pdf(
+        calendar.group_lines(entries), os.path.join(args.output_dir, "weekly_calendar.pdf")
+    )
+    # quarantine REPORT as an artifact, not just a log line: the
+    # reference logs-and-drops (etl_pipeline.py:28-30); operators of a
+    # real corpus need the reject list (id + typed error) to triage
+    with open(os.path.join(args.output_dir, "quarantine.json"), "w", encoding="utf-8") as fh:
+        json.dump(rejects, fh, ensure_ascii=False, indent=1)
 
     print(f"Processed {len(written)} courses successfully")
-    if n_bad:
-        print(f"Quarantined {n_bad} unparseable documents (see quarantine.json)")
+    if rejects:
+        print(f"Quarantined {len(rejects)} unparseable documents (see quarantine.json)")
     return 0
 
 

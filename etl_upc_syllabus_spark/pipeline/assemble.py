@@ -14,8 +14,12 @@ applied to the whole parsed frame, error column kept, so a caller
 can persist that one frame and take both sides of
 ``split_quarantine`` as filters over it: every artifact, rejects
 included, then comes from one decode of the input. The only shuffles
-are the final calendar groupBy(week) and any repartition the caller
-requests.
+are ``weekly_calendar``'s groupBy(week) and orderBy(week) (the
+registry's calendar queries run it) and any repartition the caller
+requests. The CLI runs no shuffle: its calendar lines ride the JSON
+sink's pass (``sinks.write_run_artifacts``, over
+:func:`calendar_entries`) and are grouped by week on the driver
+(``calendar.group_lines``).
 """
 
 from __future__ import annotations
@@ -230,6 +234,33 @@ def enrich_dates(courses: DataFrame, periods: DataFrame) -> DataFrame:
     )
 
 
+def _calendar_line(course_id: F.Column, assessment: F.Column) -> F.Column:
+    """'•{id}: {name} ({weight}%)', null when any part is null."""
+    return F.concat(
+        F.lit("•"),
+        course_id,
+        F.lit(": "),
+        assessment["name"],
+        F.lit(" ("),
+        assessment["weight"].cast("string"),
+        F.lit("%)"),
+    )
+
+
+def calendar_entries() -> F.Column:
+    """The calendar's input from one course row: one ``(week, line)``
+    struct per assessment, the line as :func:`weekly_calendar` writes
+    it. The CLI renders these in its JSON sink's pass and groups them
+    on the driver (``calendar.group_lines``) instead of running
+    :func:`weekly_calendar` as a query of its own."""
+    return F.transform(
+        F.col("assessments"),
+        lambda a: F.struct(
+            a["week"].alias("week"), _calendar_line(F.col("id"), a).alias("line")
+        ),
+    )
+
+
 def weekly_calendar(courses: DataFrame) -> DataFrame:
     """The reference's one analytics query (etl_pipeline.py:63-147):
     flatten assessments -> '•{id}: {name} ({weight}%)' lines ->
@@ -237,18 +268,12 @@ def weekly_calendar(courses: DataFrame) -> DataFrame:
 
     Intra-week order was thread-completion-nondeterministic in the
     reference (etl_pipeline.py:39-41); we sort for determinism."""
-    line = F.concat(
-        F.lit("•"),
-        F.col("id"),
-        F.lit(": "),
-        F.col("a.name"),
-        F.lit(" ("),
-        F.col("a.weight").cast("string"),
-        F.lit("%)"),
-    )
     return (
         courses.select("id", F.explode("assessments").alias("a"))
-        .select(F.col("a.week").alias("week"), line.alias("line"))
+        .select(
+            F.col("a.week").alias("week"),
+            _calendar_line(F.col("id"), F.col("a")).alias("line"),
+        )
         .groupBy("week")
         .agg(F.sort_array(F.collect_list("line")).alias("lines"))
         .orderBy("week")

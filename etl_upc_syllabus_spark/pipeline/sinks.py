@@ -12,7 +12,12 @@ the JSON writers exist for reference-contract parity:
   as per-partition fragments, stream-merged by the driver.
 
 Both are rendered by one partition function; ``write_course_json``
-writes S4 and S5 in the same executor pass.
+writes S4 and S5 in the same executor pass. ``write_run_artifacts``
+(the CLI's path) runs that pass over the parse stage's frame with its
+rejects: it writes S4 and S5 for the good rows and its manifest also
+carries each good row's calendar lines and each reject's id and error,
+so the CLI's calendar (S6) and quarantine report run no Spark job of
+their own.
 
 Reference bugs fixed rather than reproduced (SURVEY 7 'faithful-vs-
 fixed'): find_by_id globbed '{id}_*.json' which can never match S4's
@@ -264,12 +269,15 @@ def write_course_json(courses: DataFrame, base_path: str) -> tuple[list[str], st
     and one trip through the Python worker instead of two. Bytes equal
     :func:`write_per_record_json` then :func:`write_all_courses_json`
     (pinned by tests/test_pipeline_golden.py)."""
-    return _write_json(courses, base_path, per_record=True, consolidated=True)
+    return _write_json(_as_docs(courses), base_path, per_record=True, consolidated=True)[:2]
 
 
 def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     """S4 compat: one pretty-printed JSON file per course, named
-    '{name}-{nrc}.json' (etl_infrastructure.py:153-158).
+    '{name}-{nrc}.json' (etl_infrastructure.py:153-158), with every
+    path separator and NUL in either part replaced by '_' so a course
+    name such as 'Cálculo I/II' or '../x' names a file inside
+    ``base_path``.
 
     Files are written *executor-side* (partition-local loop over the
     serialized rows); only the manifest of written paths travels to the
@@ -277,7 +285,7 @@ def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     be a shared filesystem mount -- the scale-correct persistent form
     remains :func:`write_courses_parquet`.
     """
-    return _write_json(courses, base_path, per_record=True, consolidated=False)[0]
+    return _write_json(_as_docs(courses), base_path, per_record=True, consolidated=False)[0]
 
 
 def write_all_courses_json(courses: DataFrame, base_path: str) -> str:
@@ -290,15 +298,67 @@ def write_all_courses_json(courses: DataFrame, base_path: str) -> str:
     driver-side Python objects. Output bytes are identical to
     ``json.dump(records, fh, ensure_ascii=False, indent=4)``.
     """
-    return _write_json(courses, base_path, per_record=False, consolidated=True)[1]
+    return _write_json(_as_docs(courses), base_path, per_record=False, consolidated=True)[1]
+
+
+def write_run_artifacts(
+    parsed: DataFrame, base_path: str
+) -> tuple[list[str], str, list[tuple[int | None, str | None]], list[dict[str, str]]]:
+    """The CLI's one Python pass over the parse stage's frame, rejects
+    included (its ``error`` column kept): S4 and S5 written exactly as
+    :func:`write_course_json` writes them from the good side of
+    ``assemble.split_quarantine(parsed)``, plus what the calendar and
+    the quarantine report need. Returns (per-record paths,
+    all_courses.json path, one ``(week, line)`` pair per assessment of
+    a good row -- ``assemble.calendar_entries`` -- and one ``{"id",
+    "error"}`` per reject, in the order the split's bad side collects).
+    The driver receives what the calendar's and the quarantine's own
+    collects would bring back, without running either as a job."""
+    from .assemble import calendar_entries
+
+    good = F.col("error").isNull()
+    fields = [c for c in parsed.columns if c != "error"]
+    docs = parsed.select(
+        F.when(good, F.to_json(F.struct(*fields))).alias("doc"),
+        F.when(good, calendar_entries()).alias("entries"),
+        "id",
+        "error",
+    )
+    return _write_json(docs, base_path, per_record=True, consolidated=True)
+
+
+#: type of the ``entries`` column of the JSON pass's input rows
+#: ``(idx, doc, entries, id, error)``: the row as ``to_json`` renders
+#: it (null for a reject), its calendar entries, the reject's id, error
+_ENTRIES = "array<struct<week:int,line:string>>"
+#: the pass's output: one row per artifact it wrote or value it hands
+#: back; ``kind`` says which of the other columns the row fills
+_MANIFEST = (
+    ("idx", "int"), ("kind", "string"), ("path", "string"), ("week", "int"),
+    ("line", "string"), ("id", "string"), ("error", "string"),
+)
+_RECORD, _FRAGMENT, _LINE, _REJECT = "record", "fragment", "line", "reject"
+_UNSAFE_IN_FILENAME = str.maketrans({c: "_" for c in (os.sep, os.altsep, "\0") if c})
+
+
+def _as_docs(courses: DataFrame) -> DataFrame:
+    """Every row of ``courses`` to render, no calendar entries, no rejects."""
+    return courses.select(
+        F.to_json(F.struct("*")).alias("doc"),
+        F.lit(None).cast(_ENTRIES).alias("entries"),
+        F.lit(None).cast("string").alias("id"),
+        F.lit(None).cast("string").alias("error"),
+    )
 
 
 def _write_json(
-    courses: DataFrame, base_path: str, *, per_record: bool, consolidated: bool
-) -> tuple[list[str], str]:
+    docs: DataFrame, base_path: str, *, per_record: bool, consolidated: bool
+) -> tuple[list[str], str, list[tuple[int | None, str | None]], list[dict[str, str]]]:
     """The one partition renderer behind the JSON sinks: per-record
     files (indent=2) and/or the all_courses.json fragment of the
-    partition (indent=4), from one ``json.loads`` per row."""
+    partition (indent=4), from one ``json.loads`` per row, over
+    ``(doc, entries, id, error)`` rows (see ``_ENTRIES``). Returns
+    (paths, all_courses.json path, calendar pairs, rejects)."""
     os.makedirs(base_path, exist_ok=True)
     path = os.path.join(base_path, "all_courses.json")
     frag_dir = os.path.join(base_path, _FRAGMENTS_DIRNAME)
@@ -307,33 +367,40 @@ def _write_json(
         os.makedirs(frag_dir)
 
     render = _json_renderer(base_path, per_record=per_record, consolidated=consolidated)
-    written = (
-        courses.select(F.spark_partition_id().alias("idx"), F.to_json(F.struct("*")).alias("doc"))
-        .mapInArrow(render, "idx int, is_frag boolean, path string")
+    paths, fragments, entries, rejects = [], [], [], []
+    for r in (
+        docs.select(F.spark_partition_id().alias("idx"), "*")
+        .mapInArrow(render, ", ".join(f"{name} {ddl}" for name, ddl in _MANIFEST))
         .collect()
-    )
+    ):
+        if r.kind == _RECORD:
+            paths.append(r.path)
+        elif r.kind == _FRAGMENT:
+            fragments.append((r.idx, r.path))
+        elif r.kind == _LINE:
+            entries.append((r.week, r.line))
+        else:
+            rejects.append({"id": r.id, "error": r.error})
     if consolidated:
-        fragments = sorted((idx, p) for idx, is_frag, p in written if is_frag)
         with open(path, "w", encoding="utf-8") as fh:
             if not fragments:
                 fh.write("[]")
             else:
                 fh.write("[\n")
-                for i, (_, frag) in enumerate(fragments):
+                for i, (_, frag) in enumerate(sorted(fragments)):
                     if i:
                         fh.write(",\n")
                     with open(frag, encoding="utf-8") as src:
                         shutil.copyfileobj(src, fh)
                 fh.write("\n]")
         shutil.rmtree(frag_dir, ignore_errors=True)
-    return [p for _, is_frag, p in written if not is_frag], path
+    return paths, path, entries, rejects
 
 
 def _json_renderer(base_path: str, *, per_record: bool, consolidated: bool):
     """The ``mapInArrow`` function of :func:`_write_json`: it takes one
-    partition's ``(idx, doc)`` batches, ``doc`` being the row as
-    ``to_json(struct(*))`` renders it, and yields the ``(idx, is_frag,
-    path)`` manifest of what it wrote."""
+    partition's ``(idx, doc, entries, id, error)`` batches and yields
+    the ``_MANIFEST`` rows of what it wrote and hands back."""
     # not a closure: it ships by reference, so a worker started from the
     # stock daemon imports the package and its zipimport fix
     return functools.partial(
@@ -352,27 +419,36 @@ def _render_json_batches(base_path, frag_dir, per_record, consolidated, batches)
     first = next(batches, None)
     if first is None:
         return
-    docs = (doc for b in itertools.chain([first], batches) for doc in b.column(1).to_pylist())
-    idx = first.column(0)[0].as_py()
-    idxs, is_frags, paths = zip(
-        *_render_json_partition(base_path, frag_dir, per_record, consolidated, idx, docs)
+    rows = (
+        row
+        for b in itertools.chain([first], batches)
+        for row in zip(*(col.to_pylist() for col in b.columns[1:]))
     )
+    idx = first.column(0)[0].as_py()
+    columns = zip(
+        *_render_json_partition(base_path, frag_dir, per_record, consolidated, idx, rows)
+    )
+    arrow = {"int": pa.int32(), "string": pa.string()}
+    schema = pa.schema([(name, arrow[ddl]) for name, ddl in _MANIFEST])
     yield pa.RecordBatch.from_arrays(
-        [pa.array(idxs, pa.int32()), pa.array(is_frags), pa.array(paths)],
-        names=["idx", "is_frag", "path"],
+        [pa.array(col, f.type) for col, f in zip(columns, schema)], schema=schema
     )
 
 
 def _render_json_partition(base_path, frag_dir, per_record, consolidated, idx, rows):
     chunks = []
-    for row in rows:
-        rec = json.loads(row)
+    for doc, entries, rid, error in rows:
+        if doc is None:
+            yield idx, _REJECT, None, None, None, rid, error
+            continue
+        rec = json.loads(doc)
         if per_record:
-            fname = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}.json"
-            rec_path = os.path.join(base_path, fname)
+            name = str(rec.get("name") or "unknown").translate(_UNSAFE_IN_FILENAME)
+            nrc = str(rec.get("nrc") or "no-nrc").translate(_UNSAFE_IN_FILENAME)
+            rec_path = os.path.join(base_path, f"{name}-{nrc}.json")
             with open(rec_path, "w", encoding="utf-8") as fh:
                 json.dump(rec, fh, ensure_ascii=False, indent=2)
-            yield idx, False, rec_path
+            yield idx, _RECORD, rec_path, None, None, None, None
         if consolidated:
             # One level of json.dump(list, indent=4) indentation = 4
             # spaces before every line of each element; elements
@@ -381,11 +457,13 @@ def _render_json_partition(base_path, frag_dir, per_record, consolidated, idx, r
                 "    " + line
                 for line in json.dumps(rec, ensure_ascii=False, indent=4).splitlines()
             ))
+        for e in entries or ():
+            yield idx, _LINE, None, e["week"], e["line"], None, None
     if chunks:
         frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
         with open(frag, "w", encoding="utf-8") as fh:
             fh.write(",\n".join(chunks))
-        yield idx, True, frag
+        yield idx, _FRAGMENT, frag, None, None, None, None
 
 
 def read_courses(

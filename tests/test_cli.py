@@ -9,13 +9,15 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from etl_upc_syllabus_spark.__main__ import main
-from etl_upc_syllabus_spark.pipeline import extract, minipdf
+from etl_upc_syllabus_spark.pipeline import assemble, calendar, extract, minipdf, sinks
 
 from .test_minipdf import ASSESSMENTS_TABLE, PAGE1, UNITS_TABLE
 
 
-def _small_corpus(raw):
+def _small_corpus(raw, name_a="Matemática Básica", name_b="Física I"):
     """Two parseable syllabi, one corrupt PDF and the period config."""
     raw.mkdir()
 
@@ -26,8 +28,8 @@ def _small_corpus(raw):
             ["VIII. EVALUACIÓN", ("table", ASSESSMENTS_TABLE)],
         ]
 
-    minipdf.write_pdf(str(raw / "UG-202520_1AEL0244-8281.pdf"), pages("Matemática Básica"))
-    minipdf.write_pdf(str(raw / "UG-202520_1AEL0321-9001.pdf"), pages("Física I"))
+    minipdf.write_pdf(str(raw / "UG-202520_1AEL0244-8281.pdf"), pages(name_a))
+    minipdf.write_pdf(str(raw / "UG-202520_1AEL0321-9001.pdf"), pages(name_b))
     (raw / "UG-202520_1AEL9999-0000.pdf").write_bytes(b"%PDF-1.4 garbage")
     (raw / "config.json").write_text(
         json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
@@ -137,6 +139,117 @@ def test_cli_decodes_each_pdf_once(spark, tmp_path, monkeypatch):
     # the persisted frame is released when the run ends
     assert _persistent_rdds(spark) == rdds_before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cli_runs_four_jobs_and_no_shuffle(spark, tmp_path):
+    """One run is at most four Spark jobs and shuffles nothing: one
+    Python pass over the persisted frame writes the JSON artifacts and
+    hands back the calendar lines and the rejects, the parquet write is
+    the second read, and the calendar is grouped on the driver. As
+    queries of their own the calendar would add four jobs and a
+    shuffle, the quarantine report one more job."""
+    raw = tmp_path / "raw"
+    _small_corpus(raw)
+    sc = spark.sparkContext
+    group = "test-cli-job-shape"
+    sc.setJobGroup(group, "one CLI run")
+    try:
+        assert main([str(raw), str(tmp_path / "data")]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 4, sorted(jobs)
+    stages = set()
+    for job in jobs:
+        it = store.job(job).stageIds().iterator()
+        while it.hasNext():
+            stages.add(it.next())
+    shuffle_bytes = 0
+    for sid in stages:
+        st = store.lastStageAttempt(sid)
+        shuffle_bytes += st.shuffleWriteBytes() + st.shuffleReadBytes()
+    assert shuffle_bytes == 0
+
+
+def _pipeline_split(spark, raw):
+    """(good, bad) of the CLI's input from the public pipeline functions."""
+    parsed = assemble.parse_pdfs(extract.read_syllabus_pdfs(spark, str(raw)))
+    with open(raw / "config.json", encoding="utf-8") as fh:
+        parsed = assemble.enrich_dates(parsed, assemble.load_periods(spark, json.load(fh)))
+    return assemble.split_quarantine(parsed)
+
+
+@pytest.mark.parametrize("corpus", ["small", "all_rejects", "empty"])
+def test_cli_calendar_and_quarantine_match_the_queries(spark, tmp_path, corpus):
+    """The CLI groups the calendar on the driver and takes the rejects
+    from its JSON pass; both artifacts equal what the Spark queries
+    give over the same input: weekly_calendar.pdf byte for byte against
+    render_pdf(weekly_calendar(good)), quarantine.json against
+    bad.collect()."""
+    raw, out = tmp_path / "raw", tmp_path / "data"
+    if corpus == "small":
+        _small_corpus(raw)
+    else:
+        raw.mkdir()
+        if corpus == "all_rejects":
+            for i in range(3):
+                (raw / f"UG-202520_1AEL99{i:02d}-00{i:02d}.pdf").write_bytes(b"%PDF-1.4 junk")
+        (raw / "config.json").write_text(
+            json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
+        )
+    assert main([str(raw), str(out)]) == 0
+
+    good, bad = _pipeline_split(spark, raw)
+    expected = tmp_path / "expected.pdf"
+    calendar.render_pdf(assemble.weekly_calendar(good), str(expected))
+    assert (out / "weekly_calendar.pdf").read_bytes() == expected.read_bytes()
+    rejects = json.loads((out / "quarantine.json").read_text(encoding="utf-8"))
+    assert rejects == [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
+    assert len(rejects) == {"small": 1, "all_rejects": 3, "empty": 0}[corpus]
+
+
+def test_cli_path_separators_in_course_names(spark, tmp_path):
+    """A course name parsed out of a PDF names its per-record file. A
+    '/' in it used to fail the whole run (the worker opened a file in a
+    directory that does not exist) and '../x' wrote outside the output
+    directory. The separators become '_' in the file name only: the
+    run completes, every file lands inside the output directory, and
+    every artifact keeps the parsed names."""
+    raw, out = tmp_path / "raw", tmp_path / "data"
+    _small_corpus(raw, "Cálculo I/II", "../escape")
+    assert main([str(raw), str(out)]) == 0
+
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["data", "raw"]
+    assert sorted(p.name for p in raw.iterdir()) == sorted(
+        ["UG-202520_1AEL0244-8281.pdf", "UG-202520_1AEL0321-9001.pdf",
+         "UG-202520_1AEL9999-0000.pdf", "config.json"]
+    )
+    per_record = sorted(
+        n for n in os.listdir(out)
+        if n.endswith(".json") and n not in ("all_courses.json", "quarantine.json")
+    )
+    assert per_record == [".._escape-9001.json", "Cálculo I_II-8281.json"]
+    courses = json.loads((out / "all_courses.json").read_text(encoding="utf-8"))
+    assert {c["id"]: c["name"] for c in courses} == {
+        "1AEL0244": "Cálculo I/II", "1AEL0321": "../escape"
+    }
+    for c, fname in zip(sorted(courses, key=lambda c: c["id"]), reversed(per_record)):
+        assert (out / fname).read_text(encoding="utf-8") == json.dumps(
+            c, ensure_ascii=False, indent=2
+        )
+    assert sorted(r["name"] for r in sinks.read_courses(spark, str(out)).collect()) == [
+        "../escape", "Cálculo I/II"
+    ]
+    good, _ = _pipeline_split(spark, raw)
+    expected = tmp_path / "expected.pdf"
+    calendar.render_pdf(assemble.weekly_calendar(good), str(expected))
+    assert (out / "weekly_calendar.pdf").read_bytes() == expected.read_bytes()
+    expected.unlink()
+    assert len(json.loads((out / "quarantine.json").read_text(encoding="utf-8"))) == 1
 
 
 def test_cli_runs_one_python_daemon(tmp_path):

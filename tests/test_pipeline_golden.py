@@ -201,9 +201,6 @@ def test_sinks_executor_side_byte_identity(spark, parsed, tmp_path):
     )
     dated = assemble.enrich_dates(good, periods)
 
-    def tree(d):
-        return {n: (d / n).read_bytes() for n in sorted(os.listdir(d))}
-
     frame = dated.repartition(7).persist()
     try:
         recs = {r["id"]: r for r in map(json.loads, frame.toJSON().collect())}
@@ -216,23 +213,103 @@ def test_sinks_executor_side_byte_identity(spark, parsed, tmp_path):
             paths, all_one = sinks.write_course_json(df, str(one))
             two_paths = sinks.write_per_record_json(df, str(two))
             sinks.write_all_courses_json(df, str(two))
-            assert tree(one) == tree(two), name
+            assert _tree(one) == _tree(two), name
             assert [os.path.basename(p) for p in paths] == [os.path.basename(p) for p in two_paths]
             assert all_one == str(one / "all_courses.json")
             assert sinks._FRAGMENTS_DIRNAME not in os.listdir(one)
-            assert len(tree(one)) == len(expected) + 1
+            assert len(_tree(one)) == len(expected) + 1
             for rec in expected:
                 got = (one / f"{rec['name']}-{rec['nrc']}.json").read_text(encoding="utf-8")
                 assert got == json.dumps(rec, ensure_ascii=False, indent=2)
             got = (one / "all_courses.json").read_text(encoding="utf-8")
             assert got == json.dumps(expected, ensure_ascii=False, indent=4), name
-        assert tree(tmp_path / "one_empty") == {"all_courses.json": b"[]"}
+        assert _tree(tmp_path / "one_empty") == {"all_courses.json": b"[]"}
     finally:
         frame.unpersist()
 
     # the renderer ships to workers by reference, so they import the
     # package; stdlib pickle refuses a closure, so a regression fails here
     pickle.dumps(sinks._json_renderer(str(tmp_path), per_record=True, consolidated=True))
+
+
+def _tree(d) -> dict[str, bytes]:
+    return {n: (d / n).read_bytes() for n in sorted(os.listdir(d))}
+
+
+def _assert_run_artifacts_match(frame, tmp_path):
+    """write_run_artifacts over ``frame``, rejects included, against the
+    public sinks and queries over its quarantine split: the same JSON
+    bytes as write_course_json(good), the rejects bad.collect() gives,
+    and calendar pairs that group to calendar_rows(weekly_calendar(good))
+    and render the same PDF bytes. Returns the calendar rows."""
+    good, bad = assemble.split_quarantine(frame)
+    fused, split = tmp_path / "fused", tmp_path / "split"
+    paths, all_path, entries, rejects = sinks.write_run_artifacts(frame, str(fused))
+    split_paths, split_all = sinks.write_course_json(good, str(split))
+    assert _tree(fused) == _tree(split)
+    assert [os.path.basename(p) for p in paths] == [os.path.basename(p) for p in split_paths]
+    assert all_path == str(fused / "all_courses.json")
+    assert rejects == [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
+    rows = calendar.calendar_rows(assemble.weekly_calendar(good))
+    assert calendar.group_lines(entries) == rows
+    calendar.write_pdf(calendar.group_lines(entries), str(tmp_path / "fused.pdf"))
+    calendar.render_pdf(assemble.weekly_calendar(good), str(tmp_path / "split.pdf"))
+    assert (tmp_path / "fused.pdf").read_bytes() == (tmp_path / "split.pdf").read_bytes()
+    return rows
+
+
+def test_run_artifacts_golden(parsed, tmp_path):
+    """The CLI's one-pass writer on the golden corpus (two rejects among
+    five documents), over three partitions."""
+    frame = parsed.repartition(3).persist()
+    try:
+        rows = _assert_run_artifacts_match(frame, tmp_path)
+    finally:
+        frame.unpersist()
+    assert [w for w, _ in rows] == [4, 15, 16]
+    assert rows[0][1] == ["•1AEL0244: PRÁCTICA PC  (15.0%)", "•1AEL0321: PRÁCTICA PC  (50.0%)"]
+
+
+def test_run_artifacts_calendar_edge_rows(spark, tmp_path):
+    """Calendar parity where the driver-side grouping could drift from
+    the Spark query: a null week, a null name and a null weight (null
+    lines), a null assessment, an empty and a null assessments list, a
+    null course id, and a reject whose assessments must not count."""
+    from etl_upc_syllabus_spark.pipeline.schema import PARSED_COURSE_SCHEMA
+
+    def course(cid, assessments, error=None, name=None):
+        return (cid, name or f"Curso {cid}", "2025-2", [], 4, 16, [], "100", [], assessments, error)
+
+    frame = spark.createDataFrame(
+        [
+            course("C1", [("Z", "z", 20.0, 5, True), ("X", "x", 10.0, None, False),
+                          ("A", "a", 30.0, 5, True)]),
+            course("C2", [(None, "n", 5.0, 3, True), ("Y", "y", None, 3, False), None]),
+            course("C3", [], name="Vacío"),
+            course("C4", None, name="Nulo"),
+            course(None, [("W", "w", 1.0, 7, True)], name="Sin id"),
+            course("C5", [("R", "r", 50.0, 9, True)], error="grammar: boom"),
+        ],
+        PARSED_COURSE_SCHEMA,
+    ).repartition(2).persist()
+    try:
+        rows = _assert_run_artifacts_match(frame, tmp_path)
+    finally:
+        frame.unpersist()
+    assert rows == [
+        (None, ["•C1: X (10.0%)"]),
+        (3, []),
+        (5, ["•C1: A (30.0%)", "•C1: Z (20.0%)"]),
+        (7, []),
+    ]
+
+
+def test_run_artifacts_all_quarantined(parsed, tmp_path):
+    """Every row a reject: no course files, an empty array, an empty
+    calendar, every reject reported."""
+    rejects_only = parsed.filter("error IS NOT NULL")
+    assert _assert_run_artifacts_match(rejects_only, tmp_path) == []
+    assert _tree(tmp_path / "fused") == {"all_courses.json": b"[]"}
 
 
 def test_section_routing_state_machine():
