@@ -18,13 +18,14 @@ looked up in the input directory, then the CWD, or passed explicitly.
 Unlike the reference (which shipped the enrichment as dead code with
 hardcoded constants, etl_infrastructure.py:193-216), it actually runs.
 
-A run decodes each PDF once and reads the persisted result twice: one
-Python pass (``sinks.write_run_artifacts``) writes the per-course and
-consolidated JSON and hands back the calendar lines and the rejects,
-and the parquet write is the second read. The calendar is grouped and
-rendered on the driver (``calendar.group_lines``, ``calendar.write_pdf``)
-and ``quarantine.json`` is written from the rejects, so a run is at
-most four Spark jobs and no shuffle.
+A run is one Spark job and no shuffle, and persists nothing: each PDF
+is decoded once, the period start dates are a literal map looked up
+per row (``assemble.enrich_dates``), and one Python pass
+(``sinks.write_run_artifacts``) writes the per-course and consolidated
+JSON and the parquet corpus and hands back the calendar lines and the
+rejects. The calendar is grouped and rendered on the driver
+(``calendar.group_lines``, ``calendar.write_pdf``) and
+``quarantine.json`` is written from the rejects.
 """
 
 from __future__ import annotations
@@ -82,22 +83,11 @@ def main(argv: list[str] | None = None) -> int:
         with open(config_path, encoding="utf-8") as fh:
             parsed = assemble.enrich_dates(parsed, assemble.load_periods(spark, json.load(fh)))
 
-    # the input is decoded once: the enriched frame, rejects included,
-    # is persisted and read twice. One Python pass over it writes the
-    # JSON artifacts and hands back the calendar lines and the rejects;
-    # the parquet write is the other. The calendar (a few hundred
-    # lines) is grouped here on the driver: a Spark query would add
-    # four jobs, a shuffle and a plan of its own to every run.
-    parsed = parsed.persist()
-    try:
-        written, _, entries, rejects = sinks.write_run_artifacts(parsed, args.output_dir)
-        good, _ = assemble.split_quarantine(parsed)
-        # gate off: periods here come from parse_filename ('YYYY-T',
-        # inference-proof and sentinel-free by construction), so the
-        # validation pass would only re-scan the persisted frame
-        sinks.write_courses_parquet(good, args.output_dir, on_unsafe="off")
-    finally:
-        parsed.unpersist()
+    # the one Spark job: decode, parse, enrich and every artifact's
+    # rows in one pass. The calendar (a few hundred lines) is grouped
+    # here on the driver: a Spark query would add four jobs, a shuffle
+    # and a plan of its own to every run.
+    written, _, entries, rejects = sinks.write_run_artifacts(parsed, args.output_dir)
     calendar.write_pdf(
         calendar.group_lines(entries), os.path.join(args.output_dir, "weekly_calendar.pdf")
     )

@@ -136,9 +136,12 @@ def _bytes(memory: str) -> int:
 
 def _key(java: str, jars_dir: str, coops: bool) -> str:
     """A hash of what the JVM checks an archive against, and rejects it
-    for without a word when logging is off: the JDK, the jars on the
-    class path and the compressed-oops mode."""
+    for without a word when logging is off: the JDK, the class path --
+    the jars and :data:`ARCHIVE_DIR`, whose ``conf/`` is on it, so a
+    moved or copied checkout records its own archive -- and the
+    compressed-oops mode."""
     h = hashlib.sha256()
+    h.update(f"{ARCHIVE_DIR}\n".encode())
     st = os.stat(java)
     h.update(f"{java}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
     for entry in sorted(os.scandir(jars_dir), key=lambda e: e.name):

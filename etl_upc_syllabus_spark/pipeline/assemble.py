@@ -9,17 +9,17 @@ worker) -- documents parallelize, pages don't (the reference's
 4-thread pool becomes partition parallelism, X1). The split stages
 (``extract.extract_documents``, ``parse_documents``) run the same
 batch functions as two passes, for callers that start from raw
-documents. The periods join is an explicit broadcast (J1) and is
-applied to the whole parsed frame, error column kept, so a caller
-can persist that one frame and take both sides of
-``split_quarantine`` as filters over it: every artifact, rejects
-included, then comes from one decode of the input. The only shuffles
-are ``weekly_calendar``'s groupBy(week) and orderBy(week) (the
-registry's calendar queries run it) and any repartition the caller
-requests. The CLI runs no shuffle: its calendar lines ride the JSON
-sink's pass (``sinks.write_run_artifacts``, over
-:func:`calendar_entries`) and are grouped by week on the driver
-(``calendar.group_lines``).
+documents. The period start dates (J1) are a literal map built on
+the driver and looked up per row: no join and no job of their own.
+The lookup is applied to the whole parsed frame, error column kept,
+so a caller can make one pass over that frame and take both sides of
+``split_quarantine`` from it: every artifact, rejects included, then
+comes from one decode of the input. The only shuffles are
+``weekly_calendar``'s groupBy(week) and orderBy(week) (the registry's
+calendar queries run it) and any repartition the caller requests.
+The CLI runs no shuffle: its calendar lines ride the artifact pass
+(``sinks.write_run_artifacts``, over :func:`calendar_entries`) and
+are grouped by week on the driver (``calendar.group_lines``).
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from . import extract
 from .parse import parse_document
-from .schema import PARSED_COURSE_SCHEMA, PERIODS_SCHEMA
+from .schema import PARSED_COURSE_SCHEMA
 
 
 def _normalize_batch(pdf: pd.DataFrame, form: str) -> pd.DataFrame:
@@ -162,25 +162,27 @@ def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     return good, bad
 
 
-def load_periods(spark: SparkSession, config: dict[str, dict[str, str]]) -> DataFrame:
-    """config.json's period map as a broadcastable dimension table.
+def load_periods(spark: SparkSession, config: dict[str, dict[str, str]]) -> F.Column:  # noqa: ARG001
+    """config.json's period map as a literal ``map<string, struct<start_date
+    date, end_date date>>`` column, built on the driver: what
+    :func:`enrich_dates` looks each course's period up in.
 
-    Built from a pandas frame so that, with Arrow on (``get_spark``),
-    it is a driver-local relation: a list of tuples would be an RDD
-    unpickled by one Python worker per partition on every broadcast."""
-    rows = [
-        (period, dates.get("start_date"), dates.get("end_date"))
+    Every date is cast inside the map, and Spark evaluates the map whole
+    (folding it to one literal when it plans the query), so a malformed
+    date anywhere in the config fails the run with ``CAST_INVALID_INPUT``,
+    whether or not a course uses its period. ``spark`` is unused; the
+    signature is the one callers have always used."""
+    return F.create_map(*[
+        c
         for period, dates in config.items()
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["period", "start_date", "end_date"]),
-        "period string, start_date string, end_date string",
-    )
-    return df.select(
-        "period",
-        F.to_date("start_date").alias("start_date"),
-        F.to_date("end_date").alias("end_date"),
-    )
+        for c in (
+            F.lit(period),
+            F.struct(
+                F.to_date(F.lit(dates.get("start_date"))).alias("start_date"),
+                F.to_date(F.lit(dates.get("end_date"))).alias("end_date"),
+            ),
+        )
+    ]).cast("map<string, struct<start_date: date, end_date: date>>")  # typed when empty
 
 
 def _dated_units(start: F.Column) -> F.Column:
@@ -217,21 +219,24 @@ def _dated_assessments(start: F.Column) -> F.Column:
     )
 
 
-def enrich_dates(courses: DataFrame, periods: DataFrame) -> DataFrame:
+def enrich_dates(courses: DataFrame, periods: F.Column) -> DataFrame:
     """J1 done right: the reference *intended* to compute unit/assessment
     dates from config.json but shipped dead code + hardcoded constants
     (etl_infrastructure.py:193-216). Semantics implemented: a week spans
     Monday..Saturday of academic week N, so
     initial_date = period_start + (week-1)*7 and
     last_date = period_start + week*7 - 2.
-    periods is tiny and bounded -> broadcast join, no shuffle."""
-    start = F.col("start_date")
-    return (
-        courses.join(F.broadcast(periods), "period", "left")
-        .withColumn("units", _dated_units(start))
-        .withColumn("assessments", _dated_assessments(start))
-        .drop("start_date", "end_date")
-    )
+    ``periods`` is :func:`load_periods`' literal map: the start date is
+    a per-row lookup (null for a period the config lacks), so the
+    enrichment is a projection with no join, shuffle or job of its own.
+    ``period`` leads the output columns."""
+    start = periods[F.col("period")]["start_date"]
+    return courses.select(
+        "period", *[c for c in courses.columns if c != "period"]
+    ).withColumns({
+        "units": _dated_units(start),
+        "assessments": _dated_assessments(start),
+    })
 
 
 def _calendar_line(course_id: F.Column, assessment: F.Column) -> F.Column:

@@ -61,12 +61,3 @@ PARSED_COURSE_SCHEMA = T.StructType(
         T.StructField("error", T.StringType()),
     ]
 )
-
-# periods dimension (config.json:1-6 as a broadcastable dim table)
-PERIODS_SCHEMA = T.StructType(
-    [
-        T.StructField("period", T.StringType(), False),
-        T.StructField("start_date", T.DateType()),
-        T.StructField("end_date", T.DateType()),
-    ]
-)

@@ -14,10 +14,12 @@ the JSON writers exist for reference-contract parity:
 Both are rendered by one partition function; ``write_course_json``
 writes S4 and S5 in the same executor pass. ``write_run_artifacts``
 (the CLI's path) runs that pass over the parse stage's frame with its
-rejects: it writes S4 and S5 for the good rows and its manifest also
-carries each good row's calendar lines and each reject's id and error,
-so the CLI's calendar (S6) and quarantine report run no Spark job of
-their own.
+rejects: it writes S4, S5 and the parquet corpus for the good rows --
+each task streams its Arrow batches into one pyarrow ``ParquetWriter``
+per period, in the layout Spark's partitioned writer leaves -- and its
+manifest also carries each good row's calendar lines and each reject's
+id and error, so the CLI's calendar (S6) and quarantine report run no
+Spark job of their own and the whole CLI run is that one job.
 
 Reference bugs fixed rather than reproduced (SURVEY 7 'faithful-vs-
 fixed'): find_by_id globbed '{id}_*.json' which can never match S4's
@@ -33,6 +35,7 @@ import itertools
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -277,7 +280,8 @@ def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     '{name}-{nrc}.json' (etl_infrastructure.py:153-158), with every
     path separator and NUL in either part replaced by '_' so a course
     name such as 'Cálculo I/II' or '../x' names a file inside
-    ``base_path``.
+    ``base_path``, and the name cut (on a character boundary) so the
+    file name fits the file system's 255-byte limit.
 
     Files are written *executor-side* (partition-local loop over the
     serialized rows); only the manifest of written paths travels to the
@@ -307,29 +311,47 @@ def write_run_artifacts(
     """The CLI's one Python pass over the parse stage's frame, rejects
     included (its ``error`` column kept): S4 and S5 written exactly as
     :func:`write_course_json` writes them from the good side of
-    ``assemble.split_quarantine(parsed)``, plus what the calendar and
-    the quarantine report need. Returns (per-record paths,
-    all_courses.json path, one ``(week, line)`` pair per assessment of
-    a good row -- ``assemble.calendar_entries`` -- and one ``{"id",
-    "error"}`` per reject, in the order the split's bad side collects).
-    The driver receives what the calendar's and the quarantine's own
-    collects would bring back, without running either as a job."""
+    ``assemble.split_quarantine(parsed)``, the good rows' parquet corpus
+    in the layout :func:`write_courses_parquet` writes (gate off) and
+    :func:`read_courses` reads, plus what the calendar and the
+    quarantine report need. Returns (per-record paths, all_courses.json
+    path, one ``(week, line)`` pair per assessment of a good row --
+    ``assemble.calendar_entries`` -- and one ``{"id", "error"}`` per
+    reject, in the order the split's bad side collects). The driver
+    receives what the calendar's and the quarantine's own collects
+    would bring back, and the pass is one Spark job.
+
+    The corpus is rewritten in full: the driver clears ``courses_parquet/``
+    before the pass and writes ``_SUCCESS`` after it. Each task streams
+    its good rows into one snappy parquet file per period, named from a
+    run id fixed here and the task's partition index, so a retried task
+    overwrites its own files instead of adding copies."""
     from .assemble import calendar_entries
 
     good = F.col("error").isNull()
-    fields = [c for c in parsed.columns if c != "error"]
+    row = F.when(good, F.struct(*[c for c in parsed.columns if c != "error"]))
     docs = parsed.select(
-        F.when(good, F.to_json(F.struct(*fields))).alias("doc"),
+        F.to_json(row).alias("doc"),
         F.when(good, calendar_entries()).alias("entries"),
         "id",
         "error",
+        row.alias("row"),
     )
-    return _write_json(docs, base_path, per_record=True, consolidated=True)
+    out = os.path.join(base_path, COURSES_DIRNAME)
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    written = _write_json(
+        docs, base_path, per_record=True, consolidated=True, corpus=(out, str(uuid.uuid4()))
+    )
+    open(os.path.join(out, "_SUCCESS"), "w").close()
+    return written
 
 
 #: type of the ``entries`` column of the JSON pass's input rows
-#: ``(idx, doc, entries, id, error)``: the row as ``to_json`` renders
-#: it (null for a reject), its calendar entries, the reject's id, error
+#: ``(idx, doc, entries, id, error[, row])``: the row as ``to_json``
+#: renders it (null for a reject), its calendar entries, the reject's
+#: id, error, and -- when the pass also writes the parquet corpus --
+#: the row itself as a struct (null for a reject)
 _ENTRIES = "array<struct<week:int,line:string>>"
 #: the pass's output: one row per artifact it wrote or value it hands
 #: back; ``kind`` says which of the other columns the row fills
@@ -339,6 +361,10 @@ _MANIFEST = (
 )
 _RECORD, _FRAGMENT, _LINE, _REJECT = "record", "fragment", "line", "reject"
 _UNSAFE_IN_FILENAME = str.maketrans({c: "_" for c in (os.sep, os.altsep, "\0") if c})
+#: the file system's limit on one file name, in bytes
+_NAME_MAX = 255
+#: what Spark escapes as ``%XX`` in a partition directory's value
+_ESCAPED_IN_PARTITION = frozenset('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(1, 32)}
 
 
 def _as_docs(courses: DataFrame) -> DataFrame:
@@ -352,13 +378,16 @@ def _as_docs(courses: DataFrame) -> DataFrame:
 
 
 def _write_json(
-    docs: DataFrame, base_path: str, *, per_record: bool, consolidated: bool
+    docs: DataFrame, base_path: str, *, per_record: bool, consolidated: bool,
+    corpus: tuple[str, str] | None = None,
 ) -> tuple[list[str], str, list[tuple[int | None, str | None]], list[dict[str, str]]]:
     """The one partition renderer behind the JSON sinks: per-record
     files (indent=2) and/or the all_courses.json fragment of the
     partition (indent=4), from one ``json.loads`` per row, over
-    ``(doc, entries, id, error)`` rows (see ``_ENTRIES``). Returns
-    (paths, all_courses.json path, calendar pairs, rejects)."""
+    ``(doc, entries, id, error)`` rows (see ``_ENTRIES``). With
+    ``corpus`` = (parquet dir, run id) the rows carry a sixth column,
+    ``row``, which each task writes there (:class:`_CorpusWriter`).
+    Returns (paths, all_courses.json path, calendar pairs, rejects)."""
     os.makedirs(base_path, exist_ok=True)
     path = os.path.join(base_path, "all_courses.json")
     frag_dir = os.path.join(base_path, _FRAGMENTS_DIRNAME)
@@ -366,7 +395,9 @@ def _write_json(
         shutil.rmtree(frag_dir, ignore_errors=True)
         os.makedirs(frag_dir)
 
-    render = _json_renderer(base_path, per_record=per_record, consolidated=consolidated)
+    render = _json_renderer(
+        base_path, per_record=per_record, consolidated=consolidated, corpus=corpus
+    )
     paths, fragments, entries, rejects = [], [], [], []
     for r in (
         docs.select(F.spark_partition_id().alias("idx"), "*")
@@ -397,10 +428,11 @@ def _write_json(
     return paths, path, entries, rejects
 
 
-def _json_renderer(base_path: str, *, per_record: bool, consolidated: bool):
+def _json_renderer(base_path: str, *, per_record: bool, consolidated: bool,
+                   corpus: tuple[str, str] | None = None):
     """The ``mapInArrow`` function of :func:`_write_json`: it takes one
-    partition's ``(idx, doc, entries, id, error)`` batches and yields
-    the ``_MANIFEST`` rows of what it wrote and hands back."""
+    partition's ``(idx, doc, entries, id, error[, row])`` batches and
+    yields the ``_MANIFEST`` rows of what it wrote and hands back."""
     # not a closure: it ships by reference, so a worker started from the
     # stock daemon imports the package and its zipimport fix
     return functools.partial(
@@ -409,30 +441,95 @@ def _json_renderer(base_path: str, *, per_record: bool, consolidated: bool):
         os.path.join(base_path, _FRAGMENTS_DIRNAME),
         per_record,
         consolidated,
+        corpus,
     )
 
 
-def _render_json_batches(base_path, frag_dir, per_record, consolidated, batches):
+def _render_json_batches(base_path, frag_dir, per_record, consolidated, corpus, batches):
     import pyarrow as pa
 
     batches = (b for b in batches if b.num_rows)
     first = next(batches, None)
     if first is None:
         return
-    rows = (
-        row
-        for b in itertools.chain([first], batches)
-        for row in zip(*(col.to_pylist() for col in b.columns[1:]))
-    )
     idx = first.column(0)[0].as_py()
-    columns = zip(
-        *_render_json_partition(base_path, frag_dir, per_record, consolidated, idx, rows)
-    )
+    writer = _CorpusWriter(*corpus, idx) if corpus else None
+
+    def rows():
+        for b in itertools.chain([first], batches):
+            if writer:
+                writer.write(b.column(5))
+            yield from zip(*(col.to_pylist() for col in b.columns[1:5]))
+
+    try:
+        columns = zip(
+            *_render_json_partition(base_path, frag_dir, per_record, consolidated, idx, rows())
+        )
+    finally:
+        if writer:
+            writer.close()
     arrow = {"int": pa.int32(), "string": pa.string()}
     schema = pa.schema([(name, arrow[ddl]) for name, ddl in _MANIFEST])
     yield pa.RecordBatch.from_arrays(
         [pa.array(col, f.type) for col, f in zip(columns, schema)], schema=schema
     )
+
+
+class _CorpusWriter:
+    """One task's share of the parquet corpus: the good rows of its Arrow
+    batches (a struct column, null for a reject), streamed into one
+    ``period=<value>/part-<idx>-<run id>.c000.snappy.parquet`` per
+    period, the period column dropped from the file -- the layout and
+    names of Spark's partitioned writer, but fixed by the driver."""
+
+    def __init__(self, out: str, run_id: str, idx: int):
+        self.out = out
+        self.name = f"part-{idx:05d}-{run_id}.c000.snappy.parquet"
+        self.writers = {}
+
+    def write(self, rows) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        batch = pa.RecordBatch.from_struct_array(rows.filter(rows.is_valid()))
+        if not batch.num_rows:
+            return
+        period = batch.column("period")
+        data = batch.drop_columns(["period"])
+        for value in pc.unique(period).to_pylist():
+            mask = pc.is_null(period) if value is None else pc.equal(period, value)
+            part = _partition_dir(value)
+            if part not in self.writers:
+                os.makedirs(os.path.join(self.out, part), exist_ok=True)
+                self.writers[part] = pq.ParquetWriter(
+                    os.path.join(self.out, part, self.name), data.schema, compression="snappy"
+                )
+            self.writers[part].write_batch(data.filter(mask))
+
+    def close(self) -> None:
+        for w in self.writers.values():
+            w.close()
+
+
+def _partition_dir(period: str | None) -> str:
+    """``period=<value>`` as Spark names the directory: null and the empty
+    string go to the null sentinel, other unsafe characters become
+    ``%XX``."""
+    if not period:
+        return "period=__HIVE_DEFAULT_PARTITION__"
+    return "period=" + "".join(
+        f"%{ord(c):02X}" if c in _ESCAPED_IN_PARTITION else c for c in period
+    )
+
+
+def _file_name(name: str, nrc: str) -> str:
+    """``{name}-{nrc}.json`` within the file system's name limit: the
+    name part is cut to fit, on a character boundary, counted in UTF-8
+    bytes."""
+    suffix = f"-{nrc}.json"
+    room = max(_NAME_MAX - len(suffix.encode()), 0)
+    return name.encode()[:room].decode(errors="ignore") + suffix
 
 
 def _render_json_partition(base_path, frag_dir, per_record, consolidated, idx, rows):
@@ -445,7 +542,7 @@ def _render_json_partition(base_path, frag_dir, per_record, consolidated, idx, r
         if per_record:
             name = str(rec.get("name") or "unknown").translate(_UNSAFE_IN_FILENAME)
             nrc = str(rec.get("nrc") or "no-nrc").translate(_UNSAFE_IN_FILENAME)
-            rec_path = os.path.join(base_path, f"{name}-{nrc}.json")
+            rec_path = os.path.join(base_path, _file_name(name, nrc))
             with open(rec_path, "w", encoding="utf-8") as fh:
                 json.dump(rec, fh, ensure_ascii=False, indent=2)
             yield idx, _RECORD, rec_path, None, None, None, None

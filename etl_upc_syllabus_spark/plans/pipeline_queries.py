@@ -155,11 +155,12 @@ def _good_courses(spark: SparkSession) -> DataFrame:
     """,
     doc="J1 period->dates enrichment end-to-end (the reference intended "
     "this but shipped dead code + hardcoded constants, "
-    "etl_infrastructure.py:193-216): parse -> broadcast-join the periods "
-    "dimension -> per-assessment initial/last dates computed as "
+    "etl_infrastructure.py:193-216): parse -> look each course's period "
+    "start up in a literal map built from the config -> per-assessment "
+    "initial/last dates computed as "
     "period_start + (week-1)*7 / + week*7 - 2, checked against a "
     "hand-computed golden (Monday..Saturday of each academic week).",
-    tags=("pipeline", "join", "enrichment"),
+    tags=("pipeline", "enrichment"),
 )
 def syllabus_enrich_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     periods = assemble.load_periods(spark, _PERIOD_CONFIG)

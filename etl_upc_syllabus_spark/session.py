@@ -60,9 +60,12 @@ CPU-s (10 pairs on each of two corpora).
   recording session loaded more classes. The key hashes what the JVM
   checks an archive against and would reject it for in silence: the
   ``java`` binary (path, size, mtime), the name, size and mtime of
-  every jar in ``$SPARK_HOME/jars``, and the compressed-oops mode
-  (driver memory under 32g or not). When a jar changes, the next
-  session records a new archive and the old one is deleted.
+  every jar in ``$SPARK_HOME/jars``, the path of ``.cds/`` itself
+  (its ``conf/`` is on the class path, so a moved or copied checkout
+  records its own archive instead of handing the JVM one it rejects),
+  and the compressed-oops mode (driver memory under 32g or not).
+  When a jar changes, the next session records a new archive and the
+  old one is deleted.
 - **Recording.** With no archive for the key, the first session to
   take ``<key>.lock`` runs with ``-XX:ArchiveClassesAtExit``; sessions
   started while it records launch without an archive. The dump happens

@@ -15,6 +15,7 @@ from etl_upc_syllabus_spark.__main__ import main
 from etl_upc_syllabus_spark.pipeline import assemble, calendar, extract, minipdf, sinks
 
 from .test_minipdf import ASSESSMENTS_TABLE, PAGE1, UNITS_TABLE
+from .test_pipeline_golden import assert_same_corpus
 
 
 def _small_corpus(raw, name_a="Matemática Básica", name_b="Física I"):
@@ -113,9 +114,10 @@ def test_cli_end_to_end(spark, tmp_path):
 
 def test_cli_decodes_each_pdf_once(spark, tmp_path, monkeypatch):
     """Every PDF crosses the decode stage exactly once per run: the
-    rejects and the course set come from one persisted frame, not from
-    a second scan of the input directory. The scan is wrapped in a
-    pass-through Arrow stage that counts the rows it hands on."""
+    rejects and the course set come from one pass over the parsed
+    frame, not from a second scan of the input directory. The scan is
+    wrapped in a pass-through Arrow stage that counts the rows it hands
+    on."""
     raw = tmp_path / "raw"
     _small_corpus(raw)
     scanned = spark.sparkContext.accumulator(0)
@@ -136,18 +138,21 @@ def test_cli_decodes_each_pdf_once(spark, tmp_path, monkeypatch):
 
     assert main([str(raw), str(tmp_path / "data")]) == 0
     assert scanned.value == 3
-    # the persisted frame is released when the run ends
+    # and nothing is left persisted
     assert _persistent_rdds(spark) == rdds_before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_cli_runs_four_jobs_and_no_shuffle(spark, tmp_path):
-    """One run is at most four Spark jobs and shuffles nothing: one
-    Python pass over the persisted frame writes the JSON artifacts and
-    hands back the calendar lines and the rejects, the parquet write is
-    the second read, and the calendar is grouped on the driver. As
-    queries of their own the calendar would add four jobs and a
-    shuffle, the quarantine report one more job."""
+def test_cli_runs_one_job_no_shuffle_and_persists_nothing(spark, tmp_path):
+    """One run is one Spark job, shuffles nothing and leaves no RDD
+    persisted: one Python pass over the parsed frame writes the JSON
+    artifacts and the parquet corpus and hands back the calendar lines
+    and the rejects, the period dates come from a literal map, and the
+    calendar is grouped on the driver. As queries of their own the
+    calendar would add four jobs and a shuffle, the quarantine report
+    one more job, a broadcast join of the periods and Spark's parquet
+    writer one each, and reading the parsed frame twice would need it
+    persisted."""
     raw = tmp_path / "raw"
     _small_corpus(raw)
     sc = spark.sparkContext
@@ -162,17 +167,14 @@ def test_cli_runs_four_jobs_and_no_shuffle(spark, tmp_path):
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 1 <= len(jobs) <= 4, sorted(jobs)
-    stages = set()
-    for job in jobs:
-        it = store.job(job).stageIds().iterator()
-        while it.hasNext():
-            stages.add(it.next())
+    assert len(jobs) == 1, sorted(jobs)
     shuffle_bytes = 0
-    for sid in stages:
-        st = store.lastStageAttempt(sid)
+    it = store.job(jobs[0]).stageIds().iterator()
+    while it.hasNext():
+        st = store.lastStageAttempt(it.next())
         shuffle_bytes += st.shuffleWriteBytes() + st.shuffleReadBytes()
     assert shuffle_bytes == 0
+    assert sc._jsc.getPersistentRDDs().isEmpty()
 
 
 def _pipeline_split(spark, raw):
@@ -183,6 +185,20 @@ def _pipeline_split(spark, raw):
     return assemble.split_quarantine(parsed)
 
 
+def _corpus(raw, kind):
+    """The small corpus, three rejects, or no PDF at all; each with the
+    period config."""
+    if kind == "small":
+        return _small_corpus(raw)
+    raw.mkdir()
+    if kind == "all_rejects":
+        for i in range(3):
+            (raw / f"UG-202520_1AEL99{i:02d}-00{i:02d}.pdf").write_bytes(b"%PDF-1.4 junk")
+    (raw / "config.json").write_text(
+        json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
+    )
+
+
 @pytest.mark.parametrize("corpus", ["small", "all_rejects", "empty"])
 def test_cli_calendar_and_quarantine_match_the_queries(spark, tmp_path, corpus):
     """The CLI groups the calendar on the driver and takes the rejects
@@ -191,16 +207,7 @@ def test_cli_calendar_and_quarantine_match_the_queries(spark, tmp_path, corpus):
     render_pdf(weekly_calendar(good)), quarantine.json against
     bad.collect()."""
     raw, out = tmp_path / "raw", tmp_path / "data"
-    if corpus == "small":
-        _small_corpus(raw)
-    else:
-        raw.mkdir()
-        if corpus == "all_rejects":
-            for i in range(3):
-                (raw / f"UG-202520_1AEL99{i:02d}-00{i:02d}.pdf").write_bytes(b"%PDF-1.4 junk")
-        (raw / "config.json").write_text(
-            json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
-        )
+    _corpus(raw, corpus)
     assert main([str(raw), str(out)]) == 0
 
     good, bad = _pipeline_split(spark, raw)
@@ -210,6 +217,63 @@ def test_cli_calendar_and_quarantine_match_the_queries(spark, tmp_path, corpus):
     rejects = json.loads((out / "quarantine.json").read_text(encoding="utf-8"))
     assert rejects == [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
     assert len(rejects) == {"small": 1, "all_rejects": 3, "empty": 0}[corpus]
+
+
+@pytest.mark.parametrize("corpus", ["small", "all_rejects", "empty"])
+def test_cli_parquet_matches_the_library_writer(spark, tmp_path, corpus):
+    """The corpus the CLI writes in its artifact pass reads, through
+    read_courses, as write_courses_parquet of the same good rows does:
+    the same schema, nullability included, and the same rows; with no
+    good row, both hold only _SUCCESS."""
+    raw, out, lib = tmp_path / "raw", tmp_path / "data", tmp_path / "lib"
+    _corpus(raw, corpus)
+    assert main([str(raw), str(out)]) == 0
+
+    good, _ = _pipeline_split(spark, raw)
+    sinks.write_courses_parquet(good, str(lib), on_unsafe="off")
+    assert_same_corpus(spark, out, lib)
+    n = sinks.read_courses(spark, str(out)).count()
+    assert n == {"small": 2, "all_rejects": 0, "empty": 0}[corpus]
+    if not n:
+        assert os.listdir(out / sinks.COURSES_DIRNAME) == ["_SUCCESS"]
+
+
+def test_cli_rerun_into_one_output_dir_keeps_one_copy(spark, tmp_path):
+    """A second run into the same output directory replaces the parquet
+    corpus: each row is there once, and the write-artifact audit sees
+    one clean single-job commit (one writer id, ``_SUCCESS``)."""
+    from etl_upc_syllabus_spark.sources.formats import audit_write_artifacts
+
+    raw, out = tmp_path / "raw", tmp_path / "data"
+    _small_corpus(raw)
+    for _ in range(2):
+        assert main([str(raw), str(out)]) == 0
+    ids = sorted(r["id"] for r in sinks.read_courses(spark, str(out)).collect())
+    assert ids == ["1AEL0244", "1AEL0321"]
+    corpus = out / sinks.COURSES_DIRNAME
+    assert sorted(os.listdir(corpus)) == ["_SUCCESS", "period=2025-2"]
+    assert audit_write_artifacts(spark, str(corpus)).collect() == []
+
+
+def test_cli_long_course_name(spark, tmp_path):
+    """A course name is parsed out of the PDF with no length bound; the
+    name part of its per-record file name is cut to the file system's
+    255-byte limit on a character boundary, instead of failing the
+    whole run. The file still holds the full record."""
+    raw, out = tmp_path / "raw", tmp_path / "data"
+    long_name = "Á" * 200  # 400 UTF-8 bytes
+    _small_corpus(raw, long_name)
+    assert main([str(raw), str(out)]) == 0
+
+    [fname] = [n for n in os.listdir(out) if n.endswith("-8281.json")]
+    assert len(fname.encode()) <= 255
+    assert fname == "Á" * ((255 - len("-8281.json")) // 2) + "-8281.json"
+    courses = json.loads((out / "all_courses.json").read_text(encoding="utf-8"))
+    [rec] = [c for c in courses if c["id"] == "1AEL0244"]
+    assert rec["name"] == long_name
+    assert (out / fname).read_text(encoding="utf-8") == json.dumps(
+        rec, ensure_ascii=False, indent=2
+    )
 
 
 def test_cli_path_separators_in_course_names(spark, tmp_path):

@@ -5,8 +5,10 @@ This is the test the reference never had (SURVEY.md section 5)."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import pathlib
 import pickle
 
 import pytest
@@ -137,6 +139,42 @@ def test_date_enrichment(spark, parsed):
     assert rec26["units"][0]["initial_date"] == "2026-03-02"
 
 
+@pytest.mark.parametrize("bad", ["start_date", "end_date"])
+def test_date_enrichment_malformed_config_date_fails(spark, parsed, bad):
+    """A malformed date anywhere in config.json fails the run with
+    CAST_INVALID_INPUT, even in a period no course uses: every date is
+    cast inside the literal map, which is evaluated whole."""
+    from pyspark.errors import PySparkException
+
+    good, _ = assemble.split_quarantine(parsed)
+    unused = {"start_date": "2030-03-02", "end_date": "2030-06-20"} | {bad: "2030-13-45"}
+    periods = assemble.load_periods(
+        spark,
+        {"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}, "2030-1": unused},
+    )
+    with pytest.raises(PySparkException) as err:
+        assemble.enrich_dates(good, periods).collect()
+    assert err.value.getCondition() == "CAST_INVALID_INPUT"
+
+
+@pytest.mark.parametrize("config", [
+    {"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}}, {}
+], ids=["period_missing", "empty_config"])
+def test_date_enrichment_without_the_period(spark, parsed, config):
+    """A course whose period the config lacks -- every course, for an
+    empty config -- keeps its row with null dates; ``period`` stays the
+    first column."""
+    good, _ = assemble.split_quarantine(parsed)
+    dated = assemble.enrich_dates(good, assemble.load_periods(spark, config))
+    assert dated.columns == ["period"] + [c for c in good.columns if c != "period"]
+    recs = {r["id"]: r for r in dated.collect()}
+    assert len(recs) == 3
+    q = recs["1AEL0500"]  # period 2026-1
+    assert [(u["initial_date"], u["last_date"]) for u in q["units"]] == [(None, None)] * 2
+    m = recs["1AEL0244"]["assessments"][0]  # period 2025-2
+    assert m["initial_date"] == (datetime.date(2025, 9, 15) if config else None)
+
+
 def test_weekly_calendar_golden(parsed):
     good, _ = assemble.split_quarantine(parsed)
     cal = {r["week"]: r["lines"] for r in assemble.weekly_calendar(good).collect()}
@@ -233,20 +271,43 @@ def test_sinks_executor_side_byte_identity(spark, parsed, tmp_path):
 
 
 def _tree(d) -> dict[str, bytes]:
-    return {n: (d / n).read_bytes() for n in sorted(os.listdir(d))}
+    """Every file in ``d`` but the parquet corpus (see _assert_same_corpus)."""
+    return {
+        n: (d / n).read_bytes() for n in sorted(os.listdir(d)) if n != sinks.COURSES_DIRNAME
+    }
+
+
+def assert_same_corpus(spark, got, expected):
+    """The parquet corpora under two base dirs read the same through
+    read_courses: one schema, nullability included, and one multiset of
+    rows."""
+    a, b = sinks.read_courses(spark, str(got)), sinks.read_courses(spark, str(expected))
+    assert a.schema == b.schema
+
+    def rows(df):
+        return sorted(
+            json.dumps(r.asDict(recursive=True), default=str, sort_keys=True)
+            for r in df.collect()
+        )
+
+    assert rows(a) == rows(b)
 
 
 def _assert_run_artifacts_match(frame, tmp_path):
     """write_run_artifacts over ``frame``, rejects included, against the
     public sinks and queries over its quarantine split: the same JSON
-    bytes as write_course_json(good), the rejects bad.collect() gives,
-    and calendar pairs that group to calendar_rows(weekly_calendar(good))
-    and render the same PDF bytes. Returns the calendar rows."""
+    bytes as write_course_json(good), the parquet corpus
+    write_courses_parquet(good) writes with the gate off, the rejects
+    bad.collect() gives, and calendar pairs that group to
+    calendar_rows(weekly_calendar(good)) and render the same PDF bytes.
+    Returns the calendar rows."""
     good, bad = assemble.split_quarantine(frame)
     fused, split = tmp_path / "fused", tmp_path / "split"
     paths, all_path, entries, rejects = sinks.write_run_artifacts(frame, str(fused))
     split_paths, split_all = sinks.write_course_json(good, str(split))
+    sinks.write_courses_parquet(good, str(split), on_unsafe="off")
     assert _tree(fused) == _tree(split)
+    assert_same_corpus(frame.sparkSession, fused, split)
     assert [os.path.basename(p) for p in paths] == [os.path.basename(p) for p in split_paths]
     assert all_path == str(fused / "all_courses.json")
     assert rejects == [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
@@ -274,11 +335,13 @@ def test_run_artifacts_calendar_edge_rows(spark, tmp_path):
     """Calendar parity where the driver-side grouping could drift from
     the Spark query: a null week, a null name and a null weight (null
     lines), a null assessment, an empty and a null assessments list, a
-    null course id, and a reject whose assessments must not count."""
+    null course id, and a reject whose assessments must not count. The
+    corpus also gets periods Spark's writer escapes or sends to its
+    null-sentinel directory: null, empty, and ones with '/' and '%'."""
     from etl_upc_syllabus_spark.pipeline.schema import PARSED_COURSE_SCHEMA
 
-    def course(cid, assessments, error=None, name=None):
-        return (cid, name or f"Curso {cid}", "2025-2", [], 4, 16, [], "100", [], assessments, error)
+    def course(cid, assessments, error=None, name=None, period="2025-2"):
+        return (cid, name or f"Curso {cid}", period, [], 4, 16, [], "100", [], assessments, error)
 
     frame = spark.createDataFrame(
         [
@@ -289,6 +352,9 @@ def test_run_artifacts_calendar_edge_rows(spark, tmp_path):
             course("C4", None, name="Nulo"),
             course(None, [("W", "w", 1.0, 7, True)], name="Sin id"),
             course("C5", [("R", "r", 50.0, 9, True)], error="grammar: boom"),
+            course("C6", [], period=None),
+            course("C7", [], period=""),
+            course("C8", [], period="2025/2 100%"),
         ],
         PARSED_COURSE_SCHEMA,
     ).repartition(2).persist()
@@ -310,6 +376,51 @@ def test_run_artifacts_all_quarantined(parsed, tmp_path):
     rejects_only = parsed.filter("error IS NOT NULL")
     assert _assert_run_artifacts_match(rejects_only, tmp_path) == []
     assert _tree(tmp_path / "fused") == {"all_courses.json": b"[]"}
+    assert os.listdir(tmp_path / "fused" / sinks.COURSES_DIRNAME) == ["_SUCCESS"]
+
+
+def test_run_artifacts_retried_task_leaves_one_file_set(tmp_path):
+    """A task that runs twice (a retry) renders the same partition into
+    the same files: the driver fixes the parquet file names from the run
+    id and the partition index, so the second attempt overwrites the
+    first instead of adding a copy."""
+    import pyarrow as pa
+
+    row = pa.struct([("id", pa.string()), ("period", pa.string()), ("credits", pa.int32())])
+    rows = pa.array(
+        [{"id": "A", "period": "2025-2", "credits": 4}, None,
+         {"id": "B", "period": "2026-1", "credits": 3}],
+        row,
+    )
+    docs = pa.array(['{"id":"A","period":"2025-2","credits":4}', None,
+                     '{"id":"B","period":"2026-1","credits":3}'])
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([3, 3, 3], pa.int32()), docs,
+         pa.array([None, None, None], pa.list_(pa.struct([("week", pa.int32()),
+                                                          ("line", pa.string())]))),
+         pa.array([None, "R", None]), pa.array([None, "boom", None]), rows],
+        ["idx", "doc", "entries", "id", "error", "row"],
+    )
+    base = tmp_path / "out"
+    corpus = base / sinks.COURSES_DIRNAME
+    frag_dir = base / sinks._FRAGMENTS_DIRNAME
+    frag_dir.mkdir(parents=True)
+
+    def attempt():
+        list(sinks._render_json_batches(
+            str(base), str(frag_dir), True, True, (str(corpus), "run"), iter([batch])
+        ))
+        return {
+            os.path.relpath(os.path.join(d, f), base): pathlib.Path(d, f).read_bytes()
+            for d, _, files in os.walk(base) for f in files
+        }
+
+    first = attempt()
+    assert attempt() == first
+    assert sorted(n for n in first if n.startswith(sinks.COURSES_DIRNAME)) == [
+        f"{sinks.COURSES_DIRNAME}/period=2025-2/part-00003-run.c000.snappy.parquet",
+        f"{sinks.COURSES_DIRNAME}/period=2026-1/part-00003-run.c000.snappy.parquet",
+    ]
 
 
 def test_section_routing_state_machine():

@@ -125,13 +125,13 @@ def test_second_session_maps_the_archive_the_first_recorded(recorded, tmp_path):
     assert _probe(tmp_path, archive_dir) == first | {"mapped": [jsa]}
 
 
-def _truncated(tmp_path, archive_dir, jsa, _env):
-    copy = tmp_path / "cds"
-    shutil.copytree(archive_dir, copy)
-    os.chmod(copy / jsa, 0o644)
-    with open(copy / jsa, "r+b") as fh:
-        fh.truncate(os.path.getsize(copy / jsa) // 2)
-    return copy
+def _truncated(_tmp_path, archive_dir, jsa, _env):
+    # in place: the archive dir is part of the key, so a copy would be
+    # another checkout's dir and record an archive of its own
+    os.chmod(archive_dir / jsa, 0o644)
+    with open(archive_dir / jsa, "r+b") as fh:
+        fh.truncate(os.path.getsize(archive_dir / jsa) // 2)
+    return archive_dir
 
 
 def _class_path(tmp_path, archive_dir, _jsa, env):
@@ -168,8 +168,41 @@ def test_session_starts_without_an_archive_it_cannot_use(recorded, tmp_path, dam
     with open(archive_dir / f"{key}.size") as fh:
         assert os.path.getsize(archive_dir / jsa) == int(fh.read())
     assert sorted(os.listdir(archive_dir)) == sorted(["conf", jsa, f"{key}.size"])
-    if damage is _truncated:
-        shutil.rmtree(archive_dir)
+
+
+# the bytes of each of its archive dir's archives the fresh session's JVM
+# has mapped: a full map, not only the file's presence in the maps
+_MAPPED_PROBE = """
+from pyspark import SparkContext
+mapped = {}
+with open(f"/proc/{SparkContext._gateway.proc.pid}/maps") as fh:
+    for line in fh:
+        fields = line.split()
+        if len(fields) == 6 and os.path.dirname(fields[5]) == _cds.ARCHIVE_DIR:
+            lo, hi = (int(x, 16) for x in fields[0].split("-"))
+            name = os.path.basename(fields[5])
+            mapped[name] = mapped.get(name, 0) + hi - lo
+print(json.dumps(mapped))
+"""
+
+
+def test_copied_archive_dir_records_its_own_archive(recorded, tmp_path):
+    """The archive dir's ``conf/`` is on the class path, so an archive
+    recorded in one checkout is rejected in a copy of it. The copy's
+    first session records an archive of its own, and the next session
+    maps that one in full."""
+    archive_dir, jsa, _ = recorded
+    copy = tmp_path / "cds"
+    shutil.copytree(archive_dir, copy)
+    run = lambda: _run_fresh_session(_MAPPED_PROBE, tmp_path, before=_archive_dir(copy))  # noqa: E731
+
+    assert run() == {}
+    [own] = [n for n in os.listdir(copy) if n.endswith(".jsa")]
+    assert own != jsa
+    mapped = run()
+    assert list(mapped) == [own]
+    assert mapped[own] >= 0.9 * os.path.getsize(copy / own), (mapped, os.path.getsize(copy / own))
+    shutil.rmtree(copy)
 
 
 def test_recording_on_another_class_path_is_discarded(tmp_path):
